@@ -44,7 +44,8 @@ WORKLOADS = {
     # Pipeline.run_all, then a fresh copy of it with Pipeline.run_streaming
     # (AvailableNow, one file per micro-batch: the same stages, with the
     # checkpoint in place of discovery and ledger). Both drivers share one
-    # workload because this host's run budget holds two workloads.
+    # workload because the run budget (see README.md) holds two workloads
+    # on 4 vCPU.
     "ingest_trickle": {"kind": "ingest", "min_passes": 1, "files": 2,
                        "rows_per_file": 400, "songs": 20_000, "users": 15_000},
     # Read side: registry queries over the ten-table lake, noop sink. Its
