@@ -9,8 +9,8 @@ Two inputs:
   (p_partkey, p_name, p_type, cents of p_retailprice) and users are
   customer-shaped. The seed picks the injected bad rows: nulls in required
   columns, unparseable timestamps (which become ``_corrupt_record``) and
-  unmatched ``track_id``s. Stream files cover disjoint ``listen_date`` ranges
-  and get increasing mtimes.
+  unmatched ``track_id``s. Each stream file covers one ``listen_date`` of its
+  own and the files get increasing mtimes.
 - ``write_query_lake``: the ten synthetic parquet tables the query registry
   reads (``sources.catalog.TABLES``), shaped like the TPC-H-ish testdata at a
   given scale factor.
@@ -57,8 +57,7 @@ def track_names(n: int, rng: np.random.Generator) -> list[str]:
 
 
 def write_raw_lake(base: str, seed: int, *, files: int, rows_per_file: int,
-                   songs: int, users: int, days_per_file: int = 1,
-                   bad_frac: float = 0.02) -> dict:
+                   songs: int, users: int, bad_frac: float = 0.02) -> dict:
     """Write ``base/raw/{streams,songs,users}``; return the input record
     (file count, stream rows, bad rows by kind, CSV bytes)."""
     rng = np.random.default_rng(seed)
@@ -103,14 +102,13 @@ def write_raw_lake(base: str, seed: int, *, files: int, rows_per_file: int,
         n = rows_per_file
         uid = rng.integers(0, listeners, n)
         tid = rng.integers(0, songs, n)
-        day = rng.integers(0, days_per_file, n) + k * days_per_file
         sec = rng.integers(0, 86400, n)
         kind = rng.random(n)
         col = rng.integers(0, 3, n)
         lines = []
         for i in range(n):
             ts = (dt.datetime.combine(BASE_DAY, dt.time())
-                  + dt.timedelta(days=int(day[i]), seconds=int(sec[i])))
+                  + dt.timedelta(days=k, seconds=int(sec[i])))
             row = [int(uid[i]), int(tid[i]), ts.isoformat()]
             if kind[i] < bad_frac / 2:
                 row[col[i]] = None

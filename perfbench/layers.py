@@ -72,8 +72,6 @@ def _per_layer() -> dict[str, str]:
 
 
 PER_LAYER = _per_layer()
-HIGHER_IS_BETTER = {"validate.rows_good", "kvstore.write_dataframe.items",
-                    "kvstore.write_dataframe.items_per_s", "trace.coverage"}
 
 
 def make_tracer(spark) -> spans.Tracer:

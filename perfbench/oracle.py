@@ -19,6 +19,9 @@ import sqlite3
 
 import duckdb
 
+from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.plans.pipeline import (
+    PipelineConfig)
+
 KPI_TABLE = "DailyGenreKPIs"
 TOP_SONGS_TABLE = "TopSongsPerGenre"
 TOP_GENRES_TABLE = "TopGenresPerDay"
@@ -29,8 +32,9 @@ def _item(table: str, hk: str, rk: str, item: dict) -> tuple[str, str, str, str]
     return table, hk, rk, json.dumps(item, sort_keys=True)
 
 
-def expected_kv(raw_dir: str, *, top_songs_k: int = 3,
-                top_genres_k: int = 5) -> set[tuple[str, str, str, str]]:
+def expected_kv(raw_dir: str) -> set[tuple[str, str, str, str]]:
+    """The KV items a pipeline with the default ``PipelineConfig`` writes
+    for the raw lake ``raw_dir``."""
     con = duckdb.connect()
     try:
         def csv(sub):
@@ -69,7 +73,7 @@ def expected_kv(raw_dir: str, *, top_songs_k: int = 3,
                   FROM (SELECT CAST(d AS VARCHAR) AS d, track_genre, track_name,
                                count(*) AS n
                         FROM joined GROUP BY ALL))
-                WHERE r <= {top_songs_k}""").fetchall():
+                WHERE r <= {PipelineConfig.top_songs_k}""").fetchall():
             key = f"{genre}#{name}"
             out.add(_item(TOP_SONGS_TABLE, d, key, {
                 "date": d, "genre_track": key, "genre": genre,
@@ -81,7 +85,7 @@ def expected_kv(raw_dir: str, *, top_songs_k: int = 3,
                                             ORDER BY n DESC, track_genre) AS r
                   FROM (SELECT CAST(d AS VARCHAR) AS d, track_genre, count(*) AS n
                         FROM joined GROUP BY ALL))
-                WHERE r <= {top_genres_k}""").fetchall():
+                WHERE r <= {PipelineConfig.top_genres_k}""").fetchall():
             out.add(_item(TOP_GENRES_TABLE, d, genre, {
                 "date": d, "genre": genre, "listen_count": n, "rank": rank}))
         return out

@@ -23,11 +23,3 @@ def spread(values: list[float]) -> float:
     """Interquartile distance as a share of the median."""
     q1, q2, q3 = quartiles(values)
     return (q3 - q1) / q2 if q2 else float("inf")
-
-
-def percentile(values: list[float], p: float) -> float:
-    """Nearest-rank percentile: the smallest value with at least ``p`` % of
-    the samples at or below it."""
-    ordered = sorted(values)
-    rank = max(1, -(-len(ordered) * p // 100))
-    return float(ordered[int(rank) - 1])

@@ -5,18 +5,17 @@ loop: the whole input backlog is present when a pass starts.
 
 Run protocol (``run``):
 1. generate the inputs from the seed (untimed);
-2. build the session once, which launches the JVM;
-3. one untimed warm-up: both drivers drain a second lake of
-   ``WARM_UP_FILES`` files (ingest), or the oracle-checked pass over the
-   query list (query_mix);
+2. build the session once, which launches the JVM, then rebuild it
+   (stop, ``get_spark``) half of ``SETUPS`` times;
+3. one untimed warm-up on the last session: both drivers drain a second
+   lake of ``WARM_UP_FILES`` files (ingest), or the oracle-checked pass
+   over the query list (query_mix);
 4. measured passes on fresh copies of the inputs until ``seconds`` have
    passed (at least ``min_passes``); every pass is checked against the
    oracle;
    with ``trace`` on, instead: a traced pass whose spans and Spark event
    log give the per-layer metrics, then an untraced pass;
-5. rebuild the session ``SETUPS`` times (stop, ``get_spark``) in the warm
-   JVM; ``setup_s`` is the median build. Rebuilding before the measured
-   passes would hand them a session whose per-session state is cold.
+5. the other half of the rebuilds; ``setup_s`` is the median rebuild.
 """
 
 from __future__ import annotations
@@ -33,9 +32,17 @@ import host
 import layers
 import spans
 import oracle
-from stats import median, percentile
+from stats import median
 
-SETUPS = 5
+# Session rebuilds per run. A rebuild takes about 0.1 s and follows the
+# host's speed over the few seconds around it, so rebuilds taken back to
+# back agree with each other and not with those of another run. Half come
+# before the workload and half after it, so that setup_s, their median,
+# samples two stretches of the run. Each rebuild also pays about 0.5 s to
+# stop the session before it, which the run budget (see README.md) has to
+# hold. Rebuilding between the warm-up and the measured passes would hand
+# the passes a session the warm-up has not warmed.
+SETUPS = 8
 
 WORKLOADS = {
     # Per-file fixed cost dominates: each small daily file re-validates the
@@ -87,7 +94,8 @@ class Run:
         self.work = work
         self.spark = None
         self.record: dict = {"workload": name, "seed": seed, "seconds": seconds,
-                             "trace": int(trace), "passes": [], "checks": []}
+                             "trace": int(trace), "passes": [], "checks": [],
+                             "setup_builds_s": [], "setup_stops_s": []}
         self.attempted = self.failed = 0
         self.t0 = time.perf_counter()
 
@@ -107,31 +115,28 @@ class Run:
         return conf
 
     def start(self) -> None:
-        """The first session build, which also launches the JVM."""
+        """The first session build, which also launches the JVM, then the
+        first half of the rebuilds."""
         from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark import session
 
         os.makedirs(os.path.join(self.work, "eventlog"), exist_ok=True)
         t0 = time.perf_counter()
         self.spark = session.get_spark("perfbench", extra_conf=self.extra_conf())
         self.record["jvm_start_s"] = time.perf_counter() - t0
+        self.record["spark_conf"] = dict(self.spark.sparkContext.getConf().getAll())
+        self.rebuild(SETUPS // 2)
 
-    def setup(self) -> float:
-        """``SETUPS`` session rebuilds (stop, ``get_spark``) in the warmed-up
-        JVM; returns the median build time."""
+    def rebuild(self, n: int) -> None:
+        """``n`` timed session rebuilds (stop, ``get_spark``)."""
         from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark import session
 
-        builds, stops = [], []
-        for _ in range(SETUPS):
+        for _ in range(n):
             t0 = time.perf_counter()
             self.spark.stop()
-            stops.append(time.perf_counter() - t0)
+            self.record["setup_stops_s"].append(time.perf_counter() - t0)
             t0 = time.perf_counter()
             self.spark = session.get_spark("perfbench", extra_conf=self.extra_conf())
-            builds.append(time.perf_counter() - t0)
-        self.record["setup_builds_s"] = builds
-        self.record["setup_stops_s"] = stops
-        self.record["spark_conf"] = dict(self.spark.sparkContext.getConf().getAll())
-        return median(builds)
+            self.record["setup_builds_s"].append(time.perf_counter() - t0)
 
     def mark(self, phase: str) -> None:
         """Record the run's elapsed time at the end of ``phase``."""
@@ -344,7 +349,6 @@ def _end_to_end(run: Run, passes: list[dict], rows: int) -> dict:
     wall = median([p["wall_s"] for p in passes])
     per_item = [t for p in passes for t in p["per_item_s"]]
     run.record["item_samples"] = len(per_item)
-    run.record["item_p90_s"] = percentile(per_item, 90)
     return {"wall_s": wall, "rows_per_s": rows / wall,
             "item_p50_s": median(per_item)}
 
@@ -440,8 +444,10 @@ def run(name: str, seed: int, seconds: float, trace: bool,
         if not trace:
             r.record["peak_rss_parts_mb"] = host.peak_rss_parts_mb(r.spark)
             metrics["peak_rss_mb"] = sum(r.record["peak_rss_parts_mb"].values())
-        metrics["setup_s"] = metrics["session.get_spark_s"] = r.setup()
-        r.mark("setup")
+        r.rebuild(SETUPS - SETUPS // 2)
+        metrics["setup_s"] = median(r.record["setup_builds_s"])
+        # per layer: the run's first get_spark, which also launches the JVM
+        metrics["session.get_spark_s"] = r.record["jvm_start_s"]
     finally:
         r.record["host_after"] = host.snapshot()
         if r.spark is not None:
