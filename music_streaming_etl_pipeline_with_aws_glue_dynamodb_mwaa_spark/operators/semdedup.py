@@ -51,6 +51,12 @@ from pyspark.sql import functions as F
 from . import kmeans as _kmeans
 
 
+def _ceil_div(n: str, m: int):
+    """Exact integer ceil(n / m) of a BIGINT SQL expression ``n`` — a
+    double ``F.ceil(n / m)`` rounds once n passes 2^53."""
+    return F.expr(f"({n} + {m - 1}) div {m}")
+
+
 def semantic_dup_pairs(emb: DataFrame, *, id_col: str = "vec_id",
                        vec_col: str = "embedding", k: int = 8,
                        threshold: float = 0.95,
@@ -82,10 +88,7 @@ def semantic_dup_pairs(emb: DataFrame, *, id_col: str = "vec_id",
     # identical. Row set is the exact task enumeration the driver loop
     # produced (diagonal task per (cid, bi), two sides per off-diagonal).
     nb_df = (assign_map.groupBy("cluster_id")
-             .agg(F.greatest(
-                 F.lit(1),
-                 F.ceil(F.count(F.lit(1)) / F.lit(float(max_cell_rows))))
-                 .cast("int").alias("_nb")))
+             .agg(_ceil_div("count(1)", max_cell_rows).cast("int").alias("_nb")))
     task_df = (nb_df
                .select("cluster_id",
                        F.explode(F.sequence(F.lit(0), F.col("_nb") - 1))

@@ -288,23 +288,6 @@ def _hll_t_of_h(h):
         if isinstance(h, str) else F.ltrim(F.substring(h, 9, 15), F.lit("0"))
 
 
-def _hll_slot(key, lg_k: int):
-    """Portable register index of a value column (hashes per call —
-    prefer the shared-``_h`` builders inside multi-use pipelines)."""
-    k = F.col(key) if isinstance(key, str) else key
-    return _hll_slot_of_h(F.md5(k.cast("string")), lg_k)
-
-
-def _hll_rho(key):
-    """Portable rho of a value column: md5 hex digits 9..23 = a 60-bit
-    integer w; rho = 61 − length(bin(w)) (= leading zeros of the 60-bit
-    field + 1), the all-zero w mapping to 61. DuckDB mirror: ``CASE WHEN
-    w = 0 THEN 61 ELSE 61 - length(bin(w)) END`` with
-    ``w = ('0x' || substr(md5(v), 9, 15))::BIGINT``."""
-    k = F.col(key) if isinstance(key, str) else key
-    return _hll_rho_of_t(_hll_t_of_h(F.md5(k.cast("string"))))
-
-
 def hll_register_table(df: DataFrame, keys: list[str], value_key, *,
                        lg_k: int = 12) -> DataFrame:
     """(keys..., j, rho_max): the portable HLL register table of

@@ -10,8 +10,9 @@ service without a JVM connector:
 
 - reads are partitioned (``rowid % N`` buckets over the sqlite item table —
   substitute segment/totalSegments for a real DynamoDB parallel scan);
-- writes are distributed upserts with the same 25-item batch shape as
-  ``kvstore.write_dataframe`` (boto3 batch_writer semantics). Append-mode
+- writes are distributed upserts through ``kvstore.write_partition``, the
+  same task-side writer as ``kvstore.write_dataframe`` (25-item boto3
+  batch_writer semantics). Append-mode
   task batches commit as they flush — safe because INSERT OR REPLACE by
   primary key is idempotent under task retry/speculation (partial data on
   JOB failure mirrors DynamoDB batch-writer semantics). ``mode
@@ -47,7 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .kvstore import _connect
+from .kvstore import _connect, write_partition
 
 
 def _options(options) -> tuple[str, str]:
@@ -134,39 +135,17 @@ class _Writer(DataSourceWriter):
     truncated-but-unfilled."""
 
     def __init__(self, path: str, table: str, schema: StructType, *,
-                 overwrite: bool = False, batch_size: int = 25):
+                 overwrite: bool = False):
         self.path, self.table = path, table
         self.columns = [f.name for f in schema.fields]
-        self.batch_size = batch_size
         # uuid fixed at plan time: all tasks of this job share the staging
         # label; a concurrent overwrite job stages elsewhere.
         self.staging = (f"__staging_{uuid4().hex}__{table}"
                         if overwrite else None)
 
     def write(self, iterator: Iterator) -> WriterCommitMessage:
-        target = self.staging or self.table
-        con = _connect(self.path)
-        try:
-            keys = con.execute(
-                "SELECT hash_key, range_key FROM kv_tables WHERE name=?",
-                (self.table,)).fetchone()
-            if keys is None:
-                raise KeyError(f"KV table not declared: {self.table}")
-            hk_col, rk_col = keys
-            batch: list[tuple] = []
-            n = 0
-            for row in iterator:
-                item = dict(zip(self.columns, row))
-                batch.append((target, str(item[hk_col]),
-                              str(item[rk_col]) if rk_col else "",
-                              json.dumps(item, default=str)))
-                if len(batch) >= self.batch_size:
-                    n += self._flush(con, batch)
-                    batch = []
-            if batch:
-                n += self._flush(con, batch)
-        finally:
-            con.close()
+        write_partition(iterator, self.path, self.table, self.columns,
+                        label=self.staging)
         return WriterCommitMessage()
 
     def commit(self, messages) -> None:
@@ -183,11 +162,3 @@ class _Writer(DataSourceWriter):
             return   # append-mode partials persist; upserts are idempotent
         with _connect(self.path) as con:
             con.execute("DELETE FROM kv_items WHERE tbl=?", (self.staging,))
-
-    @staticmethod
-    def _flush(con, batch: list[tuple]) -> int:
-        con.executemany(
-            "INSERT OR REPLACE INTO kv_items(tbl, hk, rk, item) VALUES (?,?,?,?)",
-            batch)
-        con.commit()
-        return len(batch)

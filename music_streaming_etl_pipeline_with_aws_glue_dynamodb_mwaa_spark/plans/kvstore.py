@@ -10,8 +10,9 @@ The Spark-facing write path is ``write_dataframe``: ``df.foreachPartition``
 with a connection per partition and 25-item transactional batches — the same
 shape as a real DynamoDB ``batch_writer`` loader on a cluster, and the fix
 for the reference's driver-side full materialization
-(``load_dynamo.py:61-62``). Swapping sqlite for boto3 changes only
-``_PartitionWriter``.
+(``load_dynamo.py:61-62``). ``write_partition`` is the one task-side
+writer, shared with the ``kvstore`` Python Data Source
+(``plans.kv_datasource``); swapping sqlite for boto3 changes only it.
 
 Items are stored as JSON documents keyed by (hash_key, range_key), with
 DynamoDB put_item upsert semantics.
@@ -22,7 +23,9 @@ from __future__ import annotations
 import json
 import os
 import sqlite3
+from collections.abc import Iterable
 from dataclasses import dataclass
+from itertools import islice
 
 from pyspark.sql import DataFrame
 
@@ -36,12 +39,23 @@ CREATE TABLE IF NOT EXISTS kv_items (
 );
 """
 
+BATCH_SIZE = 25  # items per transaction, as boto3's batch_writer
+
 
 def _connect(path: str) -> sqlite3.Connection:
     con = sqlite3.connect(path, timeout=60)
     con.execute("PRAGMA journal_mode=WAL")
     con.execute("PRAGMA busy_timeout=60000")
     return con
+
+
+def _table_keys(con: sqlite3.Connection, name: str) -> tuple[str, str | None]:
+    row = con.execute(
+        "SELECT hash_key, range_key FROM kv_tables WHERE name=?", (name,)
+    ).fetchone()
+    if row is None:
+        raise KeyError(f"KV table not declared: {name}")
+    return row[0], row[1]
 
 
 @dataclass
@@ -64,12 +78,7 @@ class KVStore:
 
     def table_keys(self, name: str) -> tuple[str, str | None]:
         with _connect(self.path) as con:
-            row = con.execute(
-                "SELECT hash_key, range_key FROM kv_tables WHERE name=?", (name,)
-            ).fetchone()
-        if row is None:
-            raise KeyError(f"KV table not declared: {name}")
-        return row[0], row[1]
+            return _table_keys(con, name)
 
     # -- item ops ----------------------------------------------------------
     def put_item(self, table: str, item: dict) -> None:
@@ -131,45 +140,34 @@ class KVStore:
             return con.execute("SELECT count(*) FROM kv_items WHERE tbl=?", (table,)).fetchone()[0]
 
 
-def write_dataframe(df: DataFrame, store_path: str, table: str, *,
-                    batch_size: int = 25) -> None:
-    """S10: distributed KV load — one writer per partition, 25-item batches
-    (mirroring boto3 batch_writer, REF/glue_jobs/load_dynamo.py:69-78).
+def write_partition(rows: Iterable, store_path: str, table: str,
+                    columns: list[str], *, label: str | None = None) -> None:
+    """One task's rows as 25-item transactional upsert batches (boto3
+    batch_writer, REF/glue_jobs/load_dynamo.py:69-78). The table's key
+    columns are read once per partition. ``label`` stores the items under
+    another table name (the data source's staged overwrite)."""
+    con = _connect(store_path)
+    try:
+        hk_col, rk_col = _table_keys(con, table)
+        label = label or table
+        items = (dict(zip(columns, row)) for row in rows)
+        while batch := list(islice(items, BATCH_SIZE)):
+            con.executemany(
+                "INSERT OR REPLACE INTO kv_items(tbl, hk, rk, item) VALUES (?,?,?,?)",
+                [(label, str(it[hk_col]), str(it[rk_col]) if rk_col else "",
+                  json.dumps(it, default=str)) for it in batch],
+            )
+            con.commit()
+    finally:
+        con.close()
+
+
+def write_dataframe(df: DataFrame, store_path: str, table: str) -> None:
+    """S10: distributed KV load — one ``write_partition`` per partition.
 
     Rows arrive already item-shaped (operators.kv_projection) so the per-row
     work is a dict dump, not the reference's per-row build/guard/cast chain.
     """
     columns = df.columns
-
-    def _write_partition(rows) -> None:
-        con = _connect(store_path)
-        try:
-            batch = []
-            for row in rows:
-                batch.append(dict(zip(columns, row)))
-                if len(batch) >= batch_size:
-                    _flush(con, table, batch)
-                    batch = []
-            if batch:
-                _flush(con, table, batch)
-        finally:
-            con.close()
-
-    def _flush(con, tbl, batch) -> None:
-        keys = con.execute(
-            "SELECT hash_key, range_key FROM kv_tables WHERE name=?", (tbl,)
-        ).fetchone()
-        if keys is None:
-            raise KeyError(f"KV table not declared: {tbl}")
-        hk_col, rk_col = keys
-        con.executemany(
-            "INSERT OR REPLACE INTO kv_items(tbl, hk, rk, item) VALUES (?,?,?,?)",
-            [
-                (tbl, str(it[hk_col]), str(it[rk_col]) if rk_col else "",
-                 json.dumps(it, default=str))
-                for it in batch
-            ],
-        )
-        con.commit()
-
-    df.foreachPartition(_write_partition)
+    df.foreachPartition(
+        lambda rows: write_partition(rows, store_path, table, columns))

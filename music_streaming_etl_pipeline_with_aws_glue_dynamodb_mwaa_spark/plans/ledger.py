@@ -35,9 +35,6 @@ class Ledger:
     def _now() -> str:
         return datetime.datetime.now(datetime.timezone.utc).strftime("%Y-%m-%dT%H:%M:%S")
 
-    def is_processed(self, filename: str) -> bool:
-        return self.store.get_item(LEDGER_TABLE, filename) is not None
-
     def try_claim(self, filename: str) -> bool:
         """The gate (REF/dags/music_etl_pipeline.py:34-45): False if the file
         was ever seen (processing or processed), else claim it. One atomic

@@ -1,4 +1,4 @@
-"""The end-to-end batch pipeline driver (SURVEY.md §3.1).
+"""The end-to-end pipeline and its two drivers (SURVEY.md §3.1).
 
 One synchronous, in-process run of the reference's DAG
 (``REF/dags/music_etl_pipeline.py:142-145``):
@@ -6,9 +6,15 @@ One synchronous, in-process run of the reference's DAG
     discover oldest unprocessed stream file      (:18-25, S6/O3)
     → ledger gate (skip if seen)                 (:34-45)
     → validate: split good/quarantine, persist   (validate.py, F4/S7/S9)
+    → route: continue or reject the batch        (:65-67, 105-110)
     → transform: KPIs + top-k, partitioned write (transform.py:13-55)
     → KV load: three DynamoDB-shaped tables      (load_dynamo.py:157-173)
     → mark processed + archive                   (:47-63)
+
+``Pipeline.process`` is the validate → route → transform → KV-load body.
+The batch driver (``run_once``/``run_all``) wraps it in discovery, the
+ledger gate and archiving; the streaming driver (``run_streaming``) calls
+it once per micro-batch, with the checkpoint in place of the ledger.
 
 Deliberate divergences from the reference (SURVEY.md §7 risk 4):
 - stages run synchronously — the reference's ``trigger_glue_job`` is
@@ -175,38 +181,31 @@ class Pipeline:
             self.spark, os.path.join(self.cfg.validated_dir, "streams"))
         return lake.filter(F.col("listen_date").isin(dates))
 
-    def _validate_table(self, name: str, path: str, schema, *,
-                        mode: str) -> tuple[DataFrame, int]:
-        return self._validate_frame(name, io.read_csv(self.spark, path, schema),
-                                    mode=mode)
-
-    def validate_streams(self, path: str) -> DataFrame:
-        good, _ = self._validate_table("streams", path, STREAMS, mode="append")
-        return good
-
-    def validate_batch(self, stream_path: str) -> tuple[dict[str, DataFrame],
-                                                        dict[str, tuple[int, int]]]:
+    def validate_batch(self, streams_raw: DataFrame) -> tuple[dict[str, DataFrame],
+                                                          dict[str, tuple[int, int]]]:
         """The reference's validate job validates ALL THREE tables per run
-        (REF/glue_jobs/validate.py:53-67), not just the new stream file.
+        (REF/glue_jobs/validate.py:53-67), not just the new stream rows.
         Users are validated when the raw prefix exists (the testdata lake may
         omit them); streams append, dimensions overwrite. Returns the good
-        frames plus per-table (good, bad) counts for the routing branch."""
+        frames, persisted for transform, plus per-table (good, bad) counts
+        for the routing branch."""
+        plan = [("streams", streams_raw, "append"),
+                ("songs", io.read_csv(self.spark, self.cfg.raw_songs, SONGS),
+                 "overwrite")]
+        if os.path.isdir(self.cfg.raw_users) and os.listdir(self.cfg.raw_users):
+            plan.append(("users", io.read_csv(self.spark, self.cfg.raw_users, USERS),
+                         "overwrite"))
         frames: dict[str, DataFrame] = {}
         counts: dict[str, tuple[int, int]] = {}
-        plan = [("streams", stream_path, STREAMS, "append"),
-                ("songs", self.cfg.raw_songs, SONGS, "overwrite")]
-        if os.path.isdir(self.cfg.raw_users) and os.listdir(self.cfg.raw_users):
-            plan.append(("users", self.cfg.raw_users, USERS, "overwrite"))
-        for name, path, schema, mode in plan:
-            good, n_bad = self._validate_table(name, path, schema, mode=mode)
-            good = good.persist()  # counted now, re-read by transform
-            frames[name] = good
+        for name, raw, mode in plan:
+            good, n_bad = self._validate_frame(name, raw, mode=mode)
+            frames[name] = good.persist()  # counted now, re-read by transform
             counts[name] = (good.count(), n_bad)
         return frames, counts
 
     # -- stage 2: transform ---------------------------------------------------
     def transform(self, streams: DataFrame, songs: DataFrame) -> dict[str, DataFrame]:
-        joined = kpi.join_streams_songs(kpi.with_listen_date(streams), songs)
+        joined = kpi.join_streams_songs(streams, songs)
         joined.persist()  # 3-way fan-out; the reference recomputes it 3×
         try:
             outputs = {
@@ -230,7 +229,25 @@ class Pipeline:
         write_dataframe(kv_projection.top_genre_items(outputs["top_genres"]),
                         self.cfg.kv_path, TOP_GENRES_TABLE)
 
-    # -- full run -------------------------------------------------------------
+    # -- one batch: every stage --------------------------------------------
+    def process(self, streams_raw: DataFrame) -> bool:
+        """validate → route → transform → KV load for one batch of raw stream
+        rows; both drivers run exactly this. False when the router rejects
+        the batch (nothing after validation runs). The validated frames stay
+        cached until the KV load has read them."""
+        frames, counts = self.validate_batch(streams_raw)
+        try:
+            if not self.cfg.on_validation_result(counts):
+                return False
+            outputs = self.transform(self._transform_input(frames["streams"]),
+                                     frames["songs"])
+            self.load_kv(outputs)
+        finally:
+            for df in frames.values():
+                df.unpersist()
+        return True
+
+    # -- batch driver ---------------------------------------------------------
     def run_once(self) -> str | None:
         """Process the single oldest unprocessed file (the reference's
         one-file-per-DAG-run granularity); None if nothing to do.
@@ -242,17 +259,9 @@ class Pipeline:
             fname = os.path.basename(path)
             if not self.ledger.try_claim(fname):
                 continue
-            frames, counts = self.validate_batch(path)
-            try:
-                if not self.cfg.on_validation_result(counts):
-                    self.ledger.mark_rejected(fname)
-                    continue
-                outputs = self.transform(self._transform_input(frames["streams"]),
-                                         frames["songs"])
-            finally:
-                for df in frames.values():
-                    df.unpersist()
-            self.load_kv(outputs)
+            if not self.process(io.read_csv(self.spark, path, STREAMS)):
+                self.ledger.mark_rejected(fname)
+                continue
             self.ledger.mark_processed(fname)
             io.archive_files([path], self.cfg.archive_dir)
             return fname
@@ -266,18 +275,15 @@ class Pipeline:
 
     # -- streaming driver -----------------------------------------------------
     def process_stream_batch(self, streams_raw: DataFrame, epoch_id: int) -> None:
-        """``foreachBatch`` body: the SAME validate → transform → KV-load
-        stages on one streaming micro-batch (= one raw file under
-        ``maxFilesPerTrigger=1`` — the reference's one-file-per-DAG-run
-        granularity, preserved). Songs are re-validated per batch like the
-        batch driver; the sqlite ledger is NOT consulted — exactly-once
+        """``foreachBatch`` body: :meth:`process` on one streaming
+        micro-batch (= one raw file under ``maxFilesPerTrigger=1`` — the
+        reference's one-file-per-DAG-run granularity, preserved). All three
+        tables are validated and the router applies, as in the batch driver;
+        a rejected micro-batch still commits its offset, so it is consumed
+        and not retried. The sqlite ledger is NOT consulted — exactly-once
         comes from the checkpoint's file-source offset log instead
         (SURVEY.md §2.9: checkpoint-as-ledger)."""
-        streams, _ = self._validate_frame("streams", streams_raw, mode="append")
-        songs, _ = self._validate_table("songs", self.cfg.raw_songs, SONGS,
-                                        mode="overwrite")
-        outputs = self.transform(self._transform_input(streams), songs)
-        self.load_kv(outputs)
+        self.process(streams_raw)
 
     def run_streaming(self, *, checkpoint_dir: str | None = None,
                       archive: bool = False) -> None:
@@ -292,7 +298,7 @@ class Pipeline:
         ckpt = checkpoint_dir or os.path.join(self.cfg.base_dir, "checkpoints",
                                               "pipeline")
         stream = filestream.csv_file_stream(
-            self.spark, self.cfg.raw_streams, STREAMS,
+            self.spark, self.cfg.raw_streams, io.with_corrupt_col(STREAMS),
             archive_dir=self.cfg.archive_dir if archive else None)
         q = filestream.run_available_now(stream, self.process_stream_batch, ckpt)
         q.awaitTermination()

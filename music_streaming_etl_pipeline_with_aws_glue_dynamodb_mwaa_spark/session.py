@@ -21,6 +21,22 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else half of the host's RAM
+    (``/proc/meminfo`` MemTotal). Local mode runs the executors inside the
+    driver JVM; a max heap past physical memory lets the OS kill the
+    process before Spark's memory manager would spill."""
+    if env := os.environ.get("SPARK_DRIVER_MEMORY"):
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(line.split()[1]) for line in f
+                            if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "4g"
+    return f"{total_kb // 2048}m"
+
+
 def get_spark(app_name: str = "music-streaming-engine", *, cpus: int | None = None,
               shuffle_partitions: int | None = None, extra_conf: dict | None = None) -> SparkSession:
     """Create (or reuse) the engine's SparkSession.
@@ -42,7 +58,7 @@ def get_spark(app_name: str = "music-streaming-engine", *, cpus: int | None = No
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
     )

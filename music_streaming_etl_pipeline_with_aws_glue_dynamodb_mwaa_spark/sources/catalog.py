@@ -59,10 +59,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def streams_from_lineitem(lineitem: DataFrame) -> DataFrame:
     """Project lineitem into the reference's streams shape (user_id,
     track_id, listen_time) — the fact side of the flagship join."""

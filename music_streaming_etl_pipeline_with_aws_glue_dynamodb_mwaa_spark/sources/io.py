@@ -29,6 +29,14 @@ from pyspark.sql import types as T
 CORRUPT_COL = "_corrupt_record"
 
 
+def with_corrupt_col(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the PERMISSIVE-mode ``_corrupt_record`` string column
+    (CSV and JSON-Lines reads, batch and streaming alike)."""
+    if CORRUPT_COL in schema.fieldNames():
+        return schema
+    return T.StructType(list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)])
+
+
 def read_csv(spark: SparkSession, path: str | list[str],
              schema: T.StructType, *,
              keep_corrupt: bool = True) -> DataFrame:
@@ -39,11 +47,8 @@ def read_csv(spark: SparkSession, path: str | list[str],
     them — at scale a single bad row must never kill the job (the reference's
     pandas read would raise instead).
     """
-    sch = schema
-    if keep_corrupt and CORRUPT_COL not in [f.name for f in schema.fields]:
-        sch = T.StructType(list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)])
     return (
-        spark.read.schema(sch)
+        spark.read.schema(with_corrupt_col(schema) if keep_corrupt else schema)
         .option("header", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
@@ -146,12 +151,8 @@ def read_jsonl(spark: SparkSession, path: str | list[str],
     Never ``inferSchema`` at scale: inference is a full extra pass over
     100 TB and can flip types between runs; the schema is the contract.
     """
-    sch = schema
-    if keep_corrupt and CORRUPT_COL not in [f.name for f in schema.fields]:
-        sch = T.StructType(list(schema.fields)
-                           + [T.StructField(CORRUPT_COL, T.StringType(), True)])
     return (
-        spark.read.schema(sch)
+        spark.read.schema(with_corrupt_col(schema) if keep_corrupt else schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)

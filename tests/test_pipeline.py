@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import shutil
+from collections import Counter
 
 import pytest
 
@@ -239,3 +241,49 @@ def test_pipeline_routing_counts_surface(spark, lake):
     assert seen["streams"] == (4, 1)
     assert seen["songs"] == (3, 0)
     assert seen["users"] == (2, 1)
+
+
+def _lake_outputs(spark, base):
+    """(columns, row multiset) of every table under validated/,
+    bad-records/ and processed/."""
+    out = {}
+    for top in ("validated", "bad-records", "processed"):
+        for name in os.listdir(base / top):
+            df = spark.read.parquet(str(base / top / name))
+            out[f"{top}/{name}"] = (df.columns, Counter(map(tuple, df.collect())))
+    return out
+
+
+def test_batch_and_streaming_drivers_agree(spark, lake, tmp_path):
+    """Both drivers run the same stage body, so draining two copies of one
+    lake, one with run_all and one with run_streaming, gives the same
+    validated, quarantined and processed rows and the same KV items."""
+    twin = tmp_path / "twin"
+    shutil.copytree(lake, twin)
+    batch = Pipeline(spark, PipelineConfig(base_dir=str(lake)))
+    batch.run_all()
+    stream = Pipeline(spark, PipelineConfig(base_dir=str(twin)))
+    stream.run_streaming()
+
+    got = _lake_outputs(spark, twin)
+    assert sorted(got) == [
+        "bad-records/streams", "bad-records/users",
+        "processed/avg_metrics", "processed/top_genres", "processed/top_songs",
+        "validated/songs", "validated/streams", "validated/users"]
+    assert got == _lake_outputs(spark, lake)
+    for t in (KPI_TABLE, TOP_SONGS_TABLE, TOP_GENRES_TABLE):
+        assert sorted(stream.store.scan(t), key=repr) == \
+            sorted(batch.store.scan(t), key=repr)
+
+
+def test_streaming_router_rejects(spark, lake):
+    """The streaming driver applies the router too: under the strict policy
+    every micro-batch (users.csv always has a bad row) stops after
+    validation, with no processed output and no KV items."""
+    pipe = Pipeline(spark, PipelineConfig(base_dir=str(lake),
+                                          on_validation_result=route_reject_if_any_bad))
+    pipe.run_streaming()
+    assert spark.read.parquet(str(lake / "validated" / "streams")).count() == 5
+    assert not os.path.isdir(lake / "processed")
+    assert [pipe.store.count(t) for t in
+            (KPI_TABLE, TOP_SONGS_TABLE, TOP_GENRES_TABLE)] == [0, 0, 0]

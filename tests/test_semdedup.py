@@ -100,3 +100,23 @@ def test_semdedup_giant_cell_blocked(spark):
         emb, k=1, threshold=0.95, max_cell_rows=10_000)
         .select("vec_id").collect())
     assert surv_a == surv_b
+
+
+
+def test_block_count_is_exact_integer_ceil(spark):
+    """The per-cell sub-block count is ceil(n / m) in integers: it agrees
+    with math.ceil on small counts and stays exact past 2^53, where the
+    double quotient rounds down."""
+    import math
+
+    big = 2 ** 53 + 1
+    ms = (1, 2, 3, 7, 25)
+    rows = (spark.createDataFrame([(n,) for n in [*range(1, 60), big]], "n bigint")
+            .select("n", *[semdedup._ceil_div("n", m).alias(f"m{m}") for m in ms])
+            .collect())
+    for r in rows:
+        for m in ms:
+            assert r[f"m{m}"] == -(-r["n"] // m)
+            if r["n"] < 2 ** 53:
+                assert r[f"m{m}"] == math.ceil(r["n"] / m)
+    assert math.ceil(big / 1) != big   # the double form is off here
