@@ -144,8 +144,8 @@ class _Writer(DataSourceWriter):
                         if overwrite else None)
 
     def write(self, iterator: Iterator) -> WriterCommitMessage:
-        write_partition(iterator, self.path, self.table, self.columns,
-                        label=self.staging)
+        write_partition(iterator, self.path, {self.table: self.columns},
+                        self.columns, label=self.staging)
         return WriterCommitMessage()
 
     def commit(self, messages) -> None:

@@ -10,9 +10,11 @@ The Spark-facing write path is ``write_dataframe``: ``df.foreachPartition``
 with a connection per partition and 25-item transactional batches — the same
 shape as a real DynamoDB ``batch_writer`` loader on a cluster, and the fix
 for the reference's driver-side full materialization
-(``load_dynamo.py:61-62``). ``write_partition`` is the one task-side
-writer, shared with the ``kvstore`` Python Data Source
-(``plans.kv_datasource``); swapping sqlite for boto3 changes only it.
+(``load_dynamo.py:61-62``). Several tables load in one pass: their item
+frames are tagged with the table name and unioned, and each row goes to its
+own table. ``write_partition`` is the one task-side writer, shared with the
+``kvstore`` Python Data Source (``plans.kv_datasource``); swapping sqlite
+for boto3 changes only it.
 
 Items are stored as JSON documents keyed by (hash_key, range_key), with
 DynamoDB put_item upsert semantics.
@@ -25,9 +27,11 @@ import os
 import sqlite3
 from collections.abc import Iterable
 from dataclasses import dataclass
+from functools import reduce
 from itertools import islice
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 _SCHEMA = """
 CREATE TABLE IF NOT EXISTS kv_tables (
@@ -40,6 +44,7 @@ CREATE TABLE IF NOT EXISTS kv_items (
 """
 
 BATCH_SIZE = 25  # items per transaction, as boto3's batch_writer
+TABLE_COL = "_kv_table"  # names each row's table in a multi-table load
 
 
 def _connect(path: str) -> sqlite3.Connection:
@@ -140,34 +145,54 @@ class KVStore:
             return con.execute("SELECT count(*) FROM kv_items WHERE tbl=?", (table,)).fetchone()[0]
 
 
-def write_partition(rows: Iterable, store_path: str, table: str,
-                    columns: list[str], *, label: str | None = None) -> None:
+def write_partition(rows: Iterable, store_path: str,
+                    tables: dict[str, list[str]], columns: list[str], *,
+                    label: str | None = None) -> None:
     """One task's rows as 25-item transactional upsert batches (boto3
-    batch_writer, REF/glue_jobs/load_dynamo.py:69-78). The table's key
-    columns are read once per partition. ``label`` stores the items under
-    another table name (the data source's staged overwrite)."""
+    batch_writer, REF/glue_jobs/load_dynamo.py:69-78). ``columns`` are the
+    rows' columns; ``tables`` maps each table to its item columns. With
+    one table every row is one of its items; with several, each row names
+    its table in ``TABLE_COL``. The tables' key columns are read once per partition.
+    ``label`` stores the items under another table name (the data source's
+    staged overwrite)."""
     con = _connect(store_path)
     try:
-        hk_col, rk_col = _table_keys(con, table)
-        label = label or table
-        items = (dict(zip(columns, row)) for row in rows)
-        while batch := list(islice(items, BATCH_SIZE)):
+        pos = {c: i for i, c in enumerate(columns)}
+        plans = {}
+        for t, cols in tables.items():
+            hk_col, rk_col = _table_keys(con, t)
+            plans[t] = ([(c, pos[c]) for c in cols], hk_col, rk_col)
+        tag = pos[TABLE_COL] if len(tables) > 1 else None
+        only = next(iter(tables))
+
+        def record(row) -> tuple:
+            t = only if tag is None else row[tag]
+            cols, hk_col, rk_col = plans[t]
+            it = {c: row[i] for c, i in cols}
+            return (label or t, str(it[hk_col]), str(it[rk_col]) if rk_col else "",
+                    json.dumps(it, default=str))
+
+        records = map(record, rows)
+        while batch := list(islice(records, BATCH_SIZE)):
             con.executemany(
                 "INSERT OR REPLACE INTO kv_items(tbl, hk, rk, item) VALUES (?,?,?,?)",
-                [(label, str(it[hk_col]), str(it[rk_col]) if rk_col else "",
-                  json.dumps(it, default=str)) for it in batch],
-            )
+                batch)
             con.commit()
     finally:
         con.close()
 
 
-def write_dataframe(df: DataFrame, store_path: str, table: str) -> None:
-    """S10: distributed KV load — one ``write_partition`` per partition.
+def write_dataframe(items: dict[str, DataFrame], store_path: str) -> None:
+    """S10: distributed KV load of one or more tables — one
+    ``foreachPartition`` pass over the table-tagged union of their item
+    frames, one ``write_partition`` per partition.
 
     Rows arrive already item-shaped (operators.kv_projection) so the per-row
     work is a dict dump, not the reference's per-row build/guard/cast chain.
     """
-    columns = df.columns
-    df.foreachPartition(
-        lambda rows: write_partition(rows, store_path, table, columns))
+    tables = {t: df.columns for t, df in items.items()}
+    union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                   (df.withColumn(TABLE_COL, F.lit(t)) for t, df in items.items()))
+    columns = union.columns
+    union.foreachPartition(
+        lambda rows: write_partition(rows, store_path, tables, columns))

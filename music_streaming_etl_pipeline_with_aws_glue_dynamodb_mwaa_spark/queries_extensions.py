@@ -4122,6 +4122,44 @@ _EVAL_EXACT_SQL = f"""
 """
 
 
+def _overlapped(spark: SparkSession, *fns):
+    """Run ``fns`` on driver threads; return their results in order.
+
+    Their Spark jobs carry one shared job tag. The first failure cancels
+    the other threads' running jobs through that tag instead of waiting
+    for them to finish, then is raised together with any other thread's
+    own failure (an ``ExceptionGroup`` when there are several). A sibling
+    whose job was only cancelled adds nothing to the report."""
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+    from uuid import uuid4
+
+    sc = spark.sparkContext
+    tag = f"overlapped-{uuid4().hex}"
+
+    def tagged(fn):
+        sc.addJobTag(tag)
+        try:
+            return fn()
+        finally:
+            sc.removeJobTag(tag)
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(tagged, fn) for fn in fns]
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        failed = [f for f in futures if f in done and f.exception()]
+        if failed and pending:
+            sc.cancelJobsWithTag(tag)
+    # leaving the block joined the siblings; a cancelled job ends at once
+    errors = [f.exception() for f in failed] + [
+        e for f in futures if f in pending and (e := f.exception())
+        and tag not in str(e)]
+    if len(errors) > 1:
+        raise ExceptionGroup("overlapped driver jobs failed", errors)
+    if errors:
+        raise errors[0]
+    return [f.result() for f in futures]
+
+
 @register("neardup_minhash_eval", f"""
     -- exact-vs-LSH recall/precision on the deterministic 40% slice: both
     -- pipelines reproduced in SQL (md5 hash scheme), so the report row is
@@ -4167,8 +4205,6 @@ def neardup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.6). Two driver threads overlap them; contents are deterministic
     # pair sets either way (the shared lazy-ckpt postings materialize
     # once under the block manager's per-partition compute locks).
-    from concurrent.futures import ThreadPoolExecutor
-
     def _exact():
         return dedup.ngram_jaccard_pairs(
             docs, "doc_id", "text", n=3, threshold=0.8, postings=sh) \
@@ -4180,9 +4216,7 @@ def neardup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             hash_scheme="md5", postings=sh) \
             .select("doc_a", "doc_b").localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fe, _fa = _pool.submit(_exact), _pool.submit(_approx)
-        exact, approx = _fe.result(), _fa.result()
+    exact, approx = _overlapped(spark, _exact, _approx)
     tp = approx.join(exact, ["doc_a", "doc_b"], "left_semi") \
         .agg(F.count(F.lit(1)).alias("_c"))
     n_e = exact.agg(F.count(F.lit(1)).alias("_e"))

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators import dedup
@@ -268,6 +271,61 @@ def test_minhash_eval_report(spark):
         assert r["recall"] >= 0.9   # 48x12 bands at the 0.8 design point
     if r["n_approx"]:
         assert r["precision"] == r["n_common"] / r["n_approx"]
+
+
+def test_overlapped_raises_first_failure_without_waiting(spark):
+    """A failure on one driver thread surfaces at once: the sibling's
+    long Spark job (15 s per task) is cancelled, not waited for."""
+    from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.queries_extensions import (
+        _overlapped,
+    )
+
+    def slow():
+        return spark.range(0, 60, numPartitions=2).selectExpr(
+            "reflect('java.lang.Thread', 'sleep', CAST(500 AS BIGINT))").collect()
+
+    def boom():
+        time.sleep(1.0)   # let the sibling's job start
+        raise ValueError("injected")
+
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="injected"):
+        _overlapped(spark, slow, boom)
+    assert time.perf_counter() - t0 < 10
+
+
+def test_overlapped_reports_every_failure(spark):
+    from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.queries_extensions import (
+        _overlapped,
+    )
+
+    def a():
+        raise ValueError("a")
+
+    def b():
+        raise KeyError("b")
+
+    with pytest.raises(ExceptionGroup) as info:
+        _overlapped(spark, a, b)
+    assert sorted(type(e).__name__ for e in info.value.exceptions) == [
+        "KeyError", "ValueError"]
+
+
+def test_minhash_eval_surfaces_injected_failure(spark, monkeypatch):
+    """A failure injected into the exact side of neardup_minhash_eval is
+    what the query raises."""
+    from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark import (
+        queries_extensions,
+        queries_reference,
+    )
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("exact side down")
+
+    monkeypatch.setattr(queries_extensions.dedup, "ngram_jaccard_pairs", broken)
+    fn, _sql = queries_reference.REGISTRY["neardup_minhash_eval"]
+    with pytest.raises(RuntimeError, match="exact side down"):
+        fn(spark, SF_SMOKE)
 
 
 def test_dedup_exact_incremental_equals_full_recompute(spark):

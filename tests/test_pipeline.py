@@ -3,10 +3,15 @@ from __future__ import annotations
 import os
 import shutil
 from collections import Counter
+from uuid import uuid4
 
 import pytest
 
-from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.plans.kvstore import KVStore
+from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.plans.kvstore import (
+    TABLE_COL,
+    KVStore,
+    write_partition,
+)
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.plans.ledger import Ledger
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.plans.pipeline import (
     KPI_TABLE,
@@ -16,6 +21,7 @@ from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.plans.pipeli
     PipelineConfig,
     route_reject_if_any_bad,
 )
+from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.sources import io as lake_io
 
 SONGS_CSV = (
     "track_id,track_name,track_genre,duration_ms\n"
@@ -72,6 +78,45 @@ def test_kvstore_roundtrip(tmp_path):
     assert kv.get_item("T", "a", "b")["v"] == 2
     kv.update_item("T", "a", {"v": 3}, range_value="b")
     assert kv.get_item("T", "a", "b")["v"] == 3
+
+
+def test_write_partition_dispatches_rows_by_table(tmp_path):
+    """One partition carrying rows of all three KV tables gives the same
+    items as three single-table writes (30 KPI rows cross a 25-item
+    batch)."""
+    keys = {KPI_TABLE: ("date", "genre"), TOP_SONGS_TABLE: ("date", "genre_track"),
+            TOP_GENRES_TABLE: ("date", "genre")}
+    tables = {KPI_TABLE: ["date", "genre", "listen_count"],
+              TOP_SONGS_TABLE: ["date", "genre_track", "rank"],
+              TOP_GENRES_TABLE: ["date", "genre", "rank"]}
+    rows = {KPI_TABLE: [(f"2024-01-{d:02d}", "rock", d) for d in range(1, 31)],
+            TOP_SONGS_TABLE: [("2024-01-01", "rock#Alpha", 1),
+                              ("2024-01-01", "rock#Beta", 2)],
+            TOP_GENRES_TABLE: [("2024-01-01", "rock", 1), ("2024-01-01", "jazz", 2)]}
+
+    def store(name):
+        kv = KVStore(str(tmp_path / name))
+        for t, (hk, rk) in keys.items():
+            kv.ensure_table(t, hash_key=hk, range_key=rk)
+        return kv
+
+    single = store("single.db")
+    for t, cols in tables.items():
+        write_partition(rows[t], single.path, {t: cols}, cols)
+
+    columns = ["date", "genre", "listen_count", "genre_track", "rank", TABLE_COL]
+    mixed = []
+    for i in range(30):   # interleave the tables within the partition
+        for t, cols in tables.items():
+            if i < len(rows[t]):
+                item = dict(zip(cols, rows[t][i]))
+                mixed.append(tuple(item.get(c) for c in columns[:-1]) + (t,))
+    multi = store("multi.db")
+    write_partition(mixed, multi.path, tables, columns)
+
+    for t in tables:
+        assert sorted(multi.scan(t), key=repr) == sorted(single.scan(t), key=repr)
+        assert multi.count(t) == len(rows[t])
 
 
 def test_ledger_idempotent(tmp_path):
@@ -287,3 +332,102 @@ def test_streaming_router_rejects(spark, lake):
     assert not os.path.isdir(lake / "processed")
     assert [pipe.store.count(t) for t in
             (KPI_TABLE, TOP_SONGS_TABLE, TOP_GENRES_TABLE)] == [0, 0, 0]
+
+
+def test_unchanged_dimensions_are_not_revalidated(spark, lake, monkeypatch):
+    """The second file reuses the songs/users snapshots validated for the
+    first: no raw dimension CSV is read again, and the router still sees
+    the first file's dimension counts."""
+    reads = []
+    read_csv = lake_io.read_csv
+
+    def spy(spark_, path, *args, **kwargs):
+        reads.append(str(path))
+        return read_csv(spark_, path, *args, **kwargs)
+
+    monkeypatch.setattr(lake_io, "read_csv", spy)
+    seen = []
+    pipe = Pipeline(spark, PipelineConfig(
+        base_dir=str(lake), on_validation_result=lambda c: seen.append(dict(c)) or True))
+    pipe.run_once()
+    assert {os.path.basename(p) for p in reads} == {"streams1.csv", "songs", "users"}
+    first = len(reads)
+    pipe.run_once()
+    assert reads[first:] == [str(lake / "raw" / "streams" / "streams2.csv")]
+    assert seen[1]["songs"] == seen[0]["songs"] == (3, 0)
+    assert seen[1]["users"] == seen[0]["users"] == (2, 1)
+    assert seen[1]["streams"] == (1, 0)
+    # the second file joined against the reused songs snapshot
+    assert pipe.store.get_item(KPI_TABLE, "2024-01-03", "rock")["listen_count"] == 1
+
+
+def test_rewritten_dimension_is_revalidated(spark, lake):
+    """songs.csv rewritten between two files (t2 moves from rock to pop,
+    and a row without a genre arrives): the next file's KPIs and router
+    counts come from the new songs file."""
+    seen = []
+    pipe = Pipeline(spark, PipelineConfig(
+        base_dir=str(lake), on_validation_result=lambda c: seen.append(dict(c)) or True))
+    pipe.run_once()
+    (lake / "raw" / "songs" / "songs.csv").write_text(
+        SONGS_CSV.replace("t2,Beta,rock", "t2,Beta,pop") + "t4,Delta,,1000\n")
+    pipe.run_once()   # streams2: u4 plays t2 on 2024-01-03
+    assert seen[1]["songs"] == (3, 1)
+    assert seen[1]["users"] == seen[0]["users"]
+    assert pipe.store.get_item(KPI_TABLE, "2024-01-03", "pop")["listen_count"] == 1
+    assert pipe.store.get_item(KPI_TABLE, "2024-01-03", "rock") is None
+    songs = spark.read.parquet(str(lake / "validated" / "songs"))
+    assert {r["track_id"]: r["track_genre"] for r in songs.collect()} == {
+        "t1": "rock", "t2": "pop", "t3": "jazz"}
+    bad = spark.read.parquet(str(lake / "bad-records" / "songs"))
+    assert [r["track_id"] for r in bad.collect()] == ["t4"]
+
+
+def test_corrupt_rows_are_quarantined(spark, lake):
+    """Rows that fail CSV type coercion (an unparseable listen_time, a
+    non-integer duration_ms) land in bad-records with their raw line in
+    _corrupt_record, never in validated/."""
+    f1 = lake / "raw" / "streams" / "streams1.csv"
+    f1.write_text(STREAMS_1 + "u2,t3,not-a-time\n")
+    os.utime(f1, (1000, 1000))
+    (lake / "raw" / "songs" / "songs.csv").write_text(
+        SONGS_CSV + "t9,Omega,pop,not-a-number\n")
+    Pipeline(spark, PipelineConfig(base_dir=str(lake))).run_all()
+
+    def corrupt(name):
+        bad = spark.read.parquet(str(lake / "bad-records" / name))
+        return [r[lake_io.CORRUPT_COL] for r in bad.collect() if r[lake_io.CORRUPT_COL]]
+
+    assert corrupt("streams") == ["u2,t3,not-a-time"]
+    assert corrupt("songs") == ["t9,Omega,pop,not-a-number"]
+    streams = spark.read.parquet(str(lake / "validated" / "streams"))
+    songs = spark.read.parquet(str(lake / "validated" / "songs"))
+    assert lake_io.CORRUPT_COL not in streams.columns + songs.columns
+    assert streams.count() == 5 and streams.filter("listen_time IS NULL").count() == 0
+    assert sorted(r["track_id"] for r in songs.collect()) == ["t1", "t2", "t3"]
+
+
+def test_second_file_runs_fewer_spark_jobs(spark, lake, monkeypatch):
+    """Per-file cost guard, as a host-independent job count: each file runs
+    under its own job group. The first file validates and writes songs and
+    users (a write and a count each, at least four jobs); the second file
+    reuses both snapshots, so it runs at least that many fewer jobs."""
+    sc = spark.sparkContext
+    groups = []
+    process = Pipeline.process
+
+    def per_file(self, streams_raw):
+        groups.append(f"pipeline-file-{uuid4().hex}")
+        sc.setJobGroup(groups[-1], "one pipeline file")
+        try:
+            return process(self, streams_raw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(Pipeline, "process", per_file)
+    assert Pipeline(spark, PipelineConfig(base_dir=str(lake))).run_all() == [
+        "streams1.csv", "streams2.csv"]
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+    assert jobs[0] > 0
+    assert jobs[1] <= jobs[0] - 4, jobs
