@@ -119,8 +119,8 @@ def _worker(out_path: str) -> None:
     env["calib_secs"] = calibration_kernel()
     spark = get_spark("bench", cpus=cpus)
     # Warm-up: JVM, codegen, parquet footers — not part of any measurement.
-    # Through the catalog, not bare spark.read: events needs its
-    # version-dependent TIMESTAMP(NANOS) handling (catalog.load_table).
+    # Through the catalog, not bare spark.read: events needs its session
+    # conf and ts normalization (catalog.load_table).
     for t in ("part", "lineitem", "orders", "events", "documents",
               "embeddings"):
         if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):

@@ -5780,22 +5780,15 @@ _STREAM_RUN_SEQ = [0]
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of catalog.load_table(…, 'events'): file-stream
-    source over the same parquet with the SAME version-dependent ts
-    normalization (4.x native timestamp_ntz → reinterpret as UTC
-    instants; 3.x nanosAsLong bigint → µs truncation)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    sch = spark.read.parquet(path).schema
+    source over the same parquet, with the same footer schema, session
+    conf and ``ts`` normalization."""
+    catalog.pin_events_conf(spark)
+    sch = catalog.footer_schema(os.path.join(sf_dir, "events.parquet"))
     # the file-stream source needs a DIRECTORY base path; select the one
     # table file out of sf_dir with a glob filter
-    raw = (spark.readStream.schema(sch)
-           .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-    ts_dtype = dict(raw.dtypes).get("ts")
-    if ts_dtype == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_dtype == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return catalog.normalize_events_ts(
+        spark.readStream.schema(sch)
+        .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
 
 
 #: State-store partition count pinned for every memory-sink drain

@@ -51,8 +51,12 @@ REQUIRED_COLUMNS: dict[str, list[str]] = {
 
 # --------------------------------------------------------------------------
 # Synthetic testdata tables (/root/testdata/sf*/; see /root/repo/FIXTURES.md §B).
-# Parquet carries its own schema; these StructTypes document the contract and
-# back the CSV/JSON readers and streaming sources in tests.
+# Parquet carries its own schema, and sources.catalog.load_table reads it from
+# each file's footer; these StructTypes are the frames load_table returns
+# (tests/test_catalog.py holds them equal) and back the CSV/JSON readers and
+# streaming sources in tests. The files' unzoned timestamps read as
+# timestamp_ntz (o_orderdate, l_shipdate); events.ts is timestamp because
+# load_table converts it, whatever unit the file stores.
 # --------------------------------------------------------------------------
 
 REGION = T.StructType([
@@ -95,7 +99,7 @@ ORDERS = T.StructType([
     T.StructField("o_custkey", T.LongType(), True),
     T.StructField("o_orderstatus", T.StringType(), True),
     T.StructField("o_totalprice", T.DoubleType(), True),
-    T.StructField("o_orderdate", T.TimestampType(), True),
+    T.StructField("o_orderdate", T.TimestampNTZType(), True),
     T.StructField("o_orderpriority", T.StringType(), True),
 ])
 
@@ -110,7 +114,7 @@ LINEITEM = T.StructType([
     T.StructField("l_tax", T.DoubleType(), True),
     T.StructField("l_returnflag", T.StringType(), True),
     T.StructField("l_linestatus", T.StringType(), True),
-    T.StructField("l_shipdate", T.TimestampType(), True),
+    T.StructField("l_shipdate", T.TimestampNTZType(), True),
 ])
 
 EVENTS = T.StructType([

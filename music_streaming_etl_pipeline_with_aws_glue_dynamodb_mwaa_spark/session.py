@@ -62,9 +62,11 @@ def get_spark(app_name: str = "music-streaming-engine", *, cpus: int | None = No
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
     )
-    # TIMESTAMP(NANOS) parquet columns: PySpark 4.x reads them natively as
-    # timestamp_ntz; on 3.x the legacy conf reads raw long ns which the
-    # catalog converts (dtype-guarded, sources/catalog.py::load_table).
+    # TIMESTAMP(NANOS) parquet columns fail to read (PARQUET_TYPE_ILLEGAL)
+    # unless spark.sql.legacy.parquet.nanosAsLong is set, and then read as
+    # bigint ns; MICROS/MILLIS read as timestamp_ntz. The catalog sets the
+    # conf on every events open and converts either to timestamp
+    # (sources/catalog.py::pin_events_conf, normalize_events_ts).
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -45,7 +45,11 @@ def _explain_formatted(df) -> str:
 
 
 def _njobs(sc) -> int:
-    return len(sc.statusTracker().getJobIdsForGroup(None) or [])
+    """Jobs submitted so far: the newest job id + 1. Ids are sequential,
+    so differences stay exact after Spark drops old jobs from its status
+    store (``spark.ui.retainedJobs``, 1000 by default), where a count of
+    the retained ids would fall."""
+    return max(sc.statusTracker().getJobIdsForGroup(None) or [-1]) + 1
 
 
 def main() -> None:
