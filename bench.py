@@ -43,12 +43,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+#: between-slot GC trigger (MB of leftover RDD blocks clearCache missed)
+_GC_THRESHOLD_MB = 64
+
 #: Two batch samples disagreeing by more than this ratio mark the query
 #: for the targeted third batch (same spread the regression gate uses).
-#: between-slot GC trigger (MB of leftover RDD blocks clearCache missed);
-#: env-tunable so the gc-on/gc-off effect itself can be A/B-measured
-_GC_THRESHOLD_MB = int(os.environ.get("SPARK_GRAFT_BENCH_GC_MB", "64"))
-
 NOISY_RATIO = 1.5
 #: ...unless the faster sample is already under this floor — sub-second
 #: spread is JVM scheduling noise, and min-of-2 bounds it fine.
@@ -114,10 +113,9 @@ def _worker(out_path: str) -> None:
     from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.sources import catalog
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     env = _env_snapshot()
     env["calib_secs"] = calibration_kernel()
-    spark = get_spark("bench", cpus=cpus)
+    spark = get_spark("bench")
     # Warm-up: JVM, codegen, parquet footers — not part of any measurement.
     # Through the catalog, not bare spark.read: events needs its session
     # conf and ts normalization (catalog.load_table).

@@ -33,16 +33,7 @@ from pyspark.sql.types import LongType
 
 from ..functions.text_funcs import shingles, tokens
 
-import os as _os
-
-#: How jaccard_candidates materializes the shared postings subtree
-#: ("auto" routes by planner size estimate; "ckpt" = localCheckpoint
-#: (eager=False) RDD cache, "persist" = columnar InMemoryRelation,
-#: "none" = recompute per consumer). Env-switchable for A/B scale
-#: measurement (tools/scale_probe.py round-10 attribution).
-_POSTINGS_MAT = _os.environ.get("SPARK_GRAFT_POSTINGS_MAT", "auto")
-
-#: "auto" flip point, from the round-10 fresh-JVM A/B on the FULL
+#: Size-routing point, from the round-10 fresh-JVM A/B on the FULL
 #: ngram_jaccard_pairs query (identical 25600/2560 output pairs on every
 #: variant): the RDD-object cache the lazy localCheckpoint creates is
 #: fine while postings fit comfortably in memory as Java objects
@@ -170,20 +161,14 @@ def _materialize_postings(sh: DataFrame) -> DataFrame:
     _CACHED_POSTINGS — session-lifetime storage unless the caller
     releases it via :func:`release_cached_postings` (see that docstring
     for why the ckpt branch needs no such hook)."""
-    mode = _POSTINGS_MAT
-    if mode == "auto":
-        from .ids import _est_bytes
-        mode = ("persist" if _est_bytes(sh)
-                >= _POSTINGS_PERSIST_MIN_BYTES else "ckpt")
-    if mode == "persist":
-        out = sh.persist()
-        _CACHED_POSTINGS.append(out)
-        while len(_CACHED_POSTINGS) > _POSTINGS_CACHE_MAX:
-            _CACHED_POSTINGS.pop(0).unpersist()  # FIFO bound, see above
-        return out
-    if mode == "ckpt":
+    from .ids import _est_bytes
+    if _est_bytes(sh) < _POSTINGS_PERSIST_MIN_BYTES:
         return sh.localCheckpoint(eager=False)
-    return sh  # "none": recompute per consumer
+    out = sh.persist()
+    _CACHED_POSTINGS.append(out)
+    while len(_CACHED_POSTINGS) > _POSTINGS_CACHE_MAX:
+        _CACHED_POSTINGS.pop(0).unpersist()  # FIFO bound, see above
+    return out
 
 
 def _exact_jaccard_for_pairs(candidates: DataFrame, df: DataFrame,
@@ -244,8 +229,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, *,
                         n: int = 3, threshold: float = 0.8,
                         max_shingle_df: int | None = None,
                         prefix_filter: bool = True,
-                        materialize_postings: bool = True,
-                        verify_via_postings: bool | None = None,
                         postings: DataFrame | None = None) -> DataFrame:
     """All document pairs with n-gram-shingle Jaccard ≥ threshold — EXACT.
 
@@ -273,9 +256,9 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, *,
     Returns (doc_a, doc_b, jaccard), doc_a < doc_b. jaccard is one IEEE
     division of exact integers — deterministic, oracle-comparable.
 
-    ``materialize_postings`` (default on): the exploded postings feed BOTH
-    the docfreq aggregation and the prefix-ranked join side — without a
-    barrier Catalyst re-runs the scan+explode per consumer (measured: the
+    The exploded postings are materialized: they feed BOTH the docfreq
+    aggregation and the prefix-ranked join side — without a barrier
+    Catalyst re-runs the scan+explode per consumer (measured: the
     unmaterialized form costs 612s vs 160s at sf10). The materialization
     FORM routes by size (round 10, see _POSTINGS_PERSIST_MIN_BYTES): a lazy
     ``localCheckpoint`` RDD cache under the threshold, a columnar
@@ -285,25 +268,21 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, *,
     used as-is (no extra checkpoint; the caller owns materialization) so
     several shingle consumers over the same slice share ONE scan+explode.
 
-    ``verify_via_postings`` (round-12 measured default ``None`` = auto):
-    candidates verify via whole-array re-shingling + ``array_intersect``
-    (``_exact_jaccard_for_pairs``) UNLESS the caller shares a postings
-    stream, which then verifies from those same postings with zero extra
-    shingling. The round-12 same-JVM alternating A/B read arrays at
-    parity at sf0.1 (3.16 s vs 3.26 s min-basis) and 0.77× at sf1
+    Candidates verify via whole-array re-shingling + ``array_intersect``
+    (``_exact_jaccard_for_pairs``) UNLESS the caller shares a
+    ``postings`` stream, which then verifies from those same postings
+    with zero extra shingling. The round-12 same-JVM alternating A/B read
+    arrays at parity at sf0.1 (3.16 s vs 3.26 s min-basis) and 0.77× at sf1
     (6.56 s vs 8.54 s) — the postings form pays a candidate×|doc|
     exploded-row shuffle plus a pair groupBy where the array form does
     one in-row intersect per candidate; the gap widens with candidate
     count (see ``containment_pairs`` for the 4× containment-band case).
-    Pass True/False to pin a side (probes, A/Bs).
     """
     candidates, sh = jaccard_candidates(
         df, id_col, text_col, n=n, threshold=threshold,
         max_shingle_df=max_shingle_df, prefix_filter=prefix_filter,
-        materialize_postings=materialize_postings, postings=postings)
-    if verify_via_postings is None:
-        verify_via_postings = postings is not None
-    verified = (_jaccard_via_postings(candidates, sh) if verify_via_postings
+        postings=postings)
+    verified = (_jaccard_via_postings(candidates, sh) if postings is not None
                 else _exact_jaccard_for_pairs(candidates, df, id_col,
                                               text_col, n))
     return verified.filter(F.col("jaccard") >= threshold)
@@ -313,7 +292,6 @@ def jaccard_candidates(df: DataFrame, id_col: str, text_col: str, *,
                        n: int = 3, threshold: float = 0.8,
                        max_shingle_df: int | None = None,
                        prefix_filter: bool = True,
-                       materialize_postings: bool = True,
                        postings: DataFrame | None = None
                        ) -> tuple[DataFrame, DataFrame]:
     """The exact-jaccard path's candidate generator, exposed separately
@@ -324,12 +302,8 @@ def jaccard_candidates(df: DataFrame, id_col: str, text_col: str, *,
     (candidates (doc_a, doc_b), shingle postings (_id, _shingle));
     semantics documented on ``ngram_jaccard_pairs``, which folds exact
     verification over this exact frame pair."""
-    if postings is not None:
-        sh = postings
-    else:
-        sh = _shingled(df, id_col, text_col, n)
-        if materialize_postings:
-            sh = _materialize_postings(sh)
+    sh = (postings if postings is not None
+          else _materialize_postings(_shingled(df, id_col, text_col, n)))
     joinable = sh
     docfreq = sh.groupBy("_shingle").agg(F.count(F.lit(1)).alias("_df"))
     if max_shingle_df is not None:
@@ -803,8 +777,7 @@ def _overlap_counts_via_arrays(candidates: DataFrame, df: DataFrame,
 
 def containment_pairs(df: DataFrame, id_col: str, text_col: str, *,
                       n: int = 3, threshold: float = 0.8,
-                      max_shingle_df: int | None = None,
-                      verify_via_postings: bool = False) -> DataFrame:
+                      max_shingle_df: int | None = None) -> DataFrame:
     """DIRECTED near-dup pairs by set containment
     C(A→B) = |S(A)∩S(B)| / |S(A)| ≥ threshold — the asymmetric measure
     that catches a short document swallowed whole by a longer one
@@ -825,24 +798,20 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str, *,
     boilerplate-heavy corpora). Candidates = A-prefix postings ⋈ B-full
     postings on the shingle; verification is never a doc×doc product.
 
-    ``verify_via_postings`` (round-12 measured default False): verify
-    candidates by whole-array re-shingling + one ``array_intersect`` per
-    pair (``_overlap_counts_via_arrays``) instead of the postings
-    equi-join chain + pair groupBy (``_overlap_counts``). Same-JVM
-    alternating A/B, min-basis: arrays 3.69 s vs postings 4.65 s at
+    Candidates verify by whole-array re-shingling + one
+    ``array_intersect`` per pair (``_overlap_counts_via_arrays``), not by
+    the postings equi-join chain + pair groupBy (``_overlap_counts``).
+    Same-JVM alternating A/B, min-basis: arrays 3.69 s vs postings 4.65 s at
     sf0.1 (0.79×) and 7.45 s vs 30.7 s at sf1 (0.24×) — the containment
     band generates ~10× jaccard's candidates (no length-ratio prune), so
     the postings form's candidate×|doc| exploded shuffle dominates while
     the array form grows ~linearly. Output verified identical at both
-    scales (and pinned in tests); True keeps the postings form for
-    probes/A-Bs.
+    scales.
     """
-    candidates, sh = containment_candidates(
+    candidates, _ = containment_candidates(
         df, id_col, text_col, n=n, threshold=threshold,
         max_shingle_df=max_shingle_df)
-    counts = (_overlap_counts(candidates, sh) if verify_via_postings
-              else _overlap_counts_via_arrays(candidates, df, id_col,
-                                              text_col, n))
+    counts = _overlap_counts_via_arrays(candidates, df, id_col, text_col, n)
     return (counts.select(
                 "doc_a", "doc_b",
                 (F.col("_c").cast("double") / F.col("_na"))
@@ -907,8 +876,8 @@ def shared_ngram_pairs(df: DataFrame, id_col: str, text_col: str, *,
     The gram postings feed TWO consumers (the docfreq roll-up and the
     pruned join side), so they ride the same size-routed materialization
     barrier as the jaccard chain (round 12; previously the scan+explode
-    re-ran per consumer — the exact pattern ``ngram_jaccard_pairs``'s
-    ``materialize_postings`` exists for).
+    re-ran per consumer — the same barrier ``ngram_jaccard_pairs``
+    puts on its shingle postings).
     """
     sh = _materialize_postings(
         df.select(F.col(id_col).alias("_id"),

@@ -29,33 +29,8 @@ aggregation (operators/skew.py::salted_agg) if one dst dominates.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: Layout of the static per-round ``links`` frame on the SHUFFLED path
-#: (read at call time; env-switchable for fresh-JVM A/B measurement,
-#: tools/scale_probe.py --pagerank-ab):
-#:   "ckpt"     — localCheckpoint RDD (default; each round re-exchanges
-#:                links because an RDD scan reports no partitioning);
-#:   "bucketed" — write links ONCE as a bucketBy(src)+sortBy(src) catalog
-#:                table: every round's sort-merge join then reads links
-#:                pre-shuffled AND pre-sorted (no exchange, no sort on
-#:                the fact side) — the cluster-scale lever the round-10
-#:                attribution note said local mode "cannot express";
-#:                sources/io.py write_bucketed (E17) expresses it fine.
-_LINKS_LAYOUT = "ckpt"
-
-#: per-process counter making each bucketed-links table name unique —
-#: two concurrent :func:`pagerank` calls in one session must not share a
-#: catalog table / warehouse directory (round-12 ADVICE)
-_BUCKETED_SEQ = 0
-
-
-def _links_layout() -> str:
-    return _os.environ.get("SPARK_GRAFT_PAGERANK_LINKS", _LINKS_LAYOUT)
-
 
 #: below this node count the per-round rank frame (~16 B/node) is
 #: broadcast to the links join — a few MB beats a 2-sided shuffle of the
@@ -75,26 +50,6 @@ def _links_layout() -> str:
 #: the broadcast path past the threshold (30M cap) → 872.1 s — a
 #: 16.7M-row (~270 MB) broadcast per round plus per-task hashmap builds.
 #: The adaptive threshold stands.
-#:
-#: Round-11 (VERDICT r10 item 5): the bucketed-links layout IS
-#: expressible locally after all (write_bucketed → bucketBy(src)+
-#: sortBy(src) catalog table; the per-round SMJ then reads links with
-#: no exchange), and the measured sf10 A/B (BENCH_SF1_r11.json, fresh
-#: JVM per variant, same day) read bucketed 920.8 s vs ckpt 1513.0 s —
-#: 1.64× faster under that day's heavy host-neighbor load.
-#:
-#: Round-12 DECISION (VERDICT r11 item 1): the interleaved quad at sf10
-#: (ckpt/bucketed/ckpt/bucketed, fresh JVM each, per-run loads recorded
-#: — BENCH_SF1_r12.json.pagerank_links_ab_sf10) read min-basis ckpt
-#: 522.4 s vs bucketed 505.5 s (bucketed 1.03×), with ckpt repeating
-#: within 0.2% across its two runs. The r11 1.64× "win" does not
-#: reproduce once the layouts alternate within one sitting — it was a
-#: load-ramp artifact. Bucketed's one-time bucketBy write is pure
-#: overhead when the table is rebuilt per run, so "ckpt" stays the
-#: default; "bucketed" remains the opt-in SPARK_GRAFT_PAGERANK_LINKS
-#: layout and the right call on a real cluster where the bucketed edge
-#: table PERSISTS across jobs (the write amortizes, every later run
-#: starts exchange- and sort-free on the fact side).
 BROADCAST_NODES_MAX = 2_000_000
 
 
@@ -148,34 +103,8 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
         broadcast_ranks = n <= BROADCAST_NODES_MAX
 
     links = (e.join(out_deg, "src")
-             .select("src", "dst", (F.lit(1.0) / F.col("_deg")).alias("_w")))
-    bucketed_table = None
-    if not broadcast_ranks and _links_layout() == "bucketed":
-        # one up-front bucketed write buys every round an exchange-free,
-        # sort-free fact side in the SMJ (see _LINKS_LAYOUT)
-        from ..sources.io import write_bucketed
-        spark = links.sparkSession
-        # unique per call (round-12 ADVICE): a fixed name let two
-        # concurrent pagerank calls in one session clobber each other's
-        # catalog entry / warehouse dir, and leaked the managed table
-        global _BUCKETED_SEQ
-        _BUCKETED_SEQ += 1
-        table = f"_pagerank_links_bucketed_{_os.getpid()}_{_BUCKETED_SEQ}"
-        # a previous SESSION's leftover warehouse dir is invisible to
-        # this session's in-memory catalog, and saveAsTable refuses to
-        # claim an existing location — drop both table and directory
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        loc = _os.path.join(wh.removeprefix("file:"), table)
-        if _os.path.isdir(loc):
-            import shutil as _sh
-            _sh.rmtree(loc, ignore_errors=True)
-        nbuckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        write_bucketed(links, table, ["src"], nbuckets, sort_cols=["src"])
-        links = spark.table(table)
-        bucketed_table = (table, loc)
-    else:
-        links = links.localCheckpoint()
+             .select("src", "dst", (F.lit(1.0) / F.col("_deg")).alias("_w"))
+             .localCheckpoint())
     if symmetric:
         has_dangling, dangling, zero_in = False, None, None
     else:
@@ -231,15 +160,6 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
                           + F.lit(damping)
                           * (F.col("_in") + F.col("_dm") / n)).alias("rank"))
                  .localCheckpoint())
-    if bucketed_table is not None:
-        # every round eagerly localCheckpoint'ed, so the links table has
-        # no remaining reader — drop it instead of leaking one managed
-        # table + warehouse dir per call (round-12 ADVICE)
-        table, loc = bucketed_table
-        links.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
-        if _os.path.isdir(loc):
-            import shutil as _sh
-            _sh.rmtree(loc, ignore_errors=True)
     return ranks
 
 

@@ -30,6 +30,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import conf_override
 from .similarity import _cell_udf, norm_expr, train_ivf_centroids
 
 
@@ -69,9 +70,7 @@ def kmeans_fit(emb: DataFrame, vec_col: str = "embedding", *,
         # input size; AQE's per-query-stage jobs only add scheduling
         # round-trips to this fixed-shape loop (measured 6 jobs → 3 for
         # identical results), so it is paused for the loop and restored.
-        aqe_old = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with conf_override(spark, {"spark.sql.adaptive.enabled": "false"}):
             for _ in range(max_iter):
                 assigned = ubase.select(
                     _cell_udf(cents, 1)(F.col(vec_col)).getItem(0)
@@ -89,8 +88,6 @@ def kmeans_fit(emb: DataFrame, vec_col: str = "embedding", *,
                 cents = new
                 if shift < tol:
                     break
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_old)
         return cents
     finally:
         if ubase is not None:

@@ -32,22 +32,19 @@ from pyspark.sql import functions as F
 from ..functions.text_funcs import distinct_tokens, tokens
 
 
-def doc_term_stats(docs: DataFrame, id_col: str, text_col: str, *,
-                   materialize: bool = True) -> DataFrame:
+def doc_term_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, term, tf, dl, df, n_docs): term frequency in the doc, doc
     length in tokens, document frequency of the term, corpus size —
     exact integers, the shared substrate for any lexical score.
 
-    ``materialize`` (default on): the tf table fans out to three consumers
-    (dl, df, the final join); column pruning makes their subtrees differ,
-    so Catalyst re-explodes the raw text per consumer with no exchange
-    reuse. A lazy ``localCheckpoint`` computes the explode+count once
-    (plan-asserted in tests/test_plans.py) — same barrier pattern as the
-    jaccard postings."""
+    The tf table fans out to three consumers (dl, df, the final join);
+    column pruning makes their subtrees differ, so Catalyst would
+    re-explode the raw text per consumer with no exchange reuse. A lazy
+    ``localCheckpoint`` computes the explode+count once (plan-asserted in
+    tests/test_plans.py)."""
     tf = (docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-          .groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
-    if materialize:
-        tf = tf.localCheckpoint(eager=False)
+          .groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+          .localCheckpoint(eager=False))
     dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))

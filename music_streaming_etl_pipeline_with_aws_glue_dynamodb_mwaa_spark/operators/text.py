@@ -278,8 +278,7 @@ def _gate(keys: DataFrame, broadcast_keys: bool | None) -> DataFrame:
 
 def remove_common_segments(docs: DataFrame, id_col: str, text_col: str, *,
                            seg_tokens: int = 8, max_docfreq: int = 1,
-                           broadcast_common: bool | None = None,
-                           materialize_segments: bool = True) -> DataFrame:
+                           broadcast_common: bool | None = None) -> DataFrame:
     """Corpus-level boilerplate removal, CCNet/RefinedWeb-style: cut every
     non-overlapping ``seg_tokens``-token segment that appears in MORE than
     ``max_docfreq`` distinct documents (headers, footers, cookie banners —
@@ -305,10 +304,9 @@ def remove_common_segments(docs: DataFrame, id_col: str, text_col: str, *,
     segs = (chunk_documents(docs.select(id_col, text_col), id_col, text_col,
                             chunk_tokens=seg_tokens, overlap_tokens=0)
             .withColumn("_h", F.md5(F.col("chunk_text"))))
-    if materialize_segments:
-        # segs feeds both the docfreq agg and the flag join — compute the
-        # chunk explode once (lazy localCheckpoint, ContextCleaner-freed)
-        segs = segs.localCheckpoint(eager=False)
+    # segs feeds both the docfreq agg and the flag join — compute the
+    # chunk explode once (lazy localCheckpoint, ContextCleaner-freed)
+    segs = segs.localCheckpoint(eager=False)
     common = (segs.groupBy("_h")
               .agg(F.countDistinct(id_col).alias("_df"))
               .where(F.col("_df") > max_docfreq)
@@ -329,8 +327,7 @@ def remove_common_segments(docs: DataFrame, id_col: str, text_col: str, *,
 
 def remove_duplicate_spans(docs: DataFrame, id_col: str, text_col: str, *,
                            k: int = 6, max_docfreq: int = 1,
-                           broadcast_common: bool | None = None,
-                           materialize_grams: bool = True) -> DataFrame:
+                           broadcast_common: bool | None = None) -> DataFrame:
     """Exact duplicated-SPAN removal at overlapping k-gram granularity
     (the Lee et al. 2022 "Deduplicating Training Data Makes Language
     Models Better" family): any token whose position is covered by a
@@ -369,13 +366,10 @@ def remove_duplicate_spans(docs: DataFrame, id_col: str, text_col: str, *,
                 lambda s: F.concat_ws(
                     " ", F.slice(toks, s + 1, k)))).alias("_pos", "_g"))
     grams = grams.withColumn("_h", F.md5("_g")).drop("_g")
-    if materialize_grams:
-        # the gram stream feeds BOTH the docfreq agg and the probe side of
-        # the semi join — a lazy localCheckpoint computes the tokenize +
-        # explode once instead of per consumer (same pattern and rationale
-        # as dedup.ngram_jaccard_pairs' materialize_postings; blocks are
-        # freed by the ContextCleaner)
-        grams = grams.localCheckpoint(eager=False)
+    # the gram stream feeds BOTH the docfreq agg and the probe side of the
+    # semi join — a lazy localCheckpoint computes the tokenize + explode
+    # once instead of per consumer (blocks are freed by the ContextCleaner)
+    grams = grams.localCheckpoint(eager=False)
     common = (grams.select("_h", id_col).groupBy("_h")
               .agg(F.countDistinct(id_col).alias("_df"))
               .where(F.col("_df") > max_docfreq)

@@ -60,6 +60,7 @@ from .operators import (
 )
 from .operators import pyref, validate
 from .queries_reference import register
+from .session import conf_override
 from .streaming import dedupe, joins, stateful, windowed
 from .sources import catalog, io, layout
 
@@ -5801,8 +5802,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: ≤ ~1.25M state rows each at the sf10 probe; a real continuous
 #: deployment sizes this to its key cardinality instead. Results are
 #: partition-count-invariant (same rows, same hashes).
-_STREAM_DRAIN_SHUFFLE = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE",
-                                           "8"))
+_STREAM_DRAIN_SHUFFLE = 8
 
 
 def _drain_to_memory(stream_df: DataFrame, prefix: str,
@@ -5814,15 +5814,11 @@ def _drain_to_memory(stream_df: DataFrame, prefix: str,
     _STREAM_RUN_SEQ[0] += 1
     name = f"_{prefix}_{_STREAM_RUN_SEQ[0]}"
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(_STREAM_DRAIN_SHUFFLE))
-    try:
+    with conf_override(spark, {"spark.sql.shuffle.partitions":
+                               _STREAM_DRAIN_SHUFFLE}):
         q = (stream_df.writeStream.format("memory").queryName(name)
              .outputMode(output_mode).trigger(availableNow=True).start())
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -10693,22 +10689,18 @@ def kmeans_assign_agreement_eval(spark: SparkSession,
     # changes), and the loop runs with AQE paused: each round's collect
     # is bounded at k×(d+1) rows whatever the input, so adaptive
     # re-planning only adds per-query-stage scheduler jobs (the
-    # kmeans_fit measurement, round 13); restored in `finally`.
+    # kmeans_fit measurement, round 13).
     sums = [F.sum(F.floor(F.col("embedding").getItem(i)
                           * F.lit(_KME_EVAL_SCALE) + F.lit(0.5))
                   .cast("long")).alias(f"_s{i}")
             for i in range(dim)]
-    _aqe_old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with conf_override(spark, {"spark.sql.adaptive.enabled": "false"}):
         for rnd in range(1, _KME_EVAL_ROUNDS + 1):
             rows = cur.groupBy(f"_c{rnd - 1}").agg(*sums).collect()
             cs = sorted((int(r[f"_c{rnd - 1}"]),
                          [float(r[f"_s{i}"]) for i in range(dim)])
                         for r in rows)
             cur = assign(cs, f"_c{rnd}")
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", _aqe_old)
     j = (a0.select("vec_id", F.col("_c0").alias("_cs"))
          .join(cur.select("vec_id",
                           F.col(f"_c{_KME_EVAL_ROUNDS}").alias("_cl")),

@@ -12,6 +12,7 @@ any pandas-UDF boundary.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -72,6 +73,25 @@ def get_spark(app_name: str = "music-streaming-engine", *, cpus: int | None = No
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def conf_override(spark, conf: dict):
+    """Set each runtime conf key in ``conf`` for the ``with`` body, then
+    restore the value it had before — also when the body raises.
+
+    Session conf is shared by every thread of the session, so two
+    threads overriding the same key at once would restore each other's
+    values. No code in this package changes conf from more than one
+    thread: the driver threads of ``_overlapped`` only run actions."""
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def enable_runtime_bloom_filters(spark, *,

@@ -141,21 +141,6 @@ def test_prefix_filter_matches_full_join(spark):
         assert full == pref and len(full) > 0
 
 
-def test_postings_verify_matches_array_verify(spark):
-    """The postings-join verification (count common postings, no text
-    re-shingle) must be BIT-identical to the array_intersect path — same
-    pairs, same jaccard bits (same exact integers, same single division)."""
-    docs = _docs(spark)
-    post = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", n=3, threshold=0.5).collect()}
-    arr = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-           for r in dedup.ngram_jaccard_pairs(
-               docs, "doc_id", "text", n=3, threshold=0.5,
-               verify_via_postings=False).collect()}
-    assert post == arr and len(post) > 0
-
-
 def test_dedup_exact_fingerprint_key_matches_raw_key(spark):
     docs = _docs(spark)
     fp = dedup.dedup_exact(docs, ["text"], ["doc_id"])
@@ -229,32 +214,20 @@ def test_containment_prefix_filter_matches_brute_force(spark):
     assert fast == brute and brute, "fixture must contain containment pairs"
 
 
-def test_verification_paths_identical(spark):
-    """round-12: the array-intersect verification (measured default) and
-    the postings-join verification must produce identical pair tables for
-    BOTH similarity families — full rows, not just the pair keys."""
-    docs = _docs(spark)
-    for fn, kw in ((dedup.ngram_jaccard_pairs, {}),
-                   (dedup.containment_pairs, {})):
-        via = sorted(map(tuple, fn(docs, "doc_id", "text", n=3,
-                                   threshold=0.8, verify_via_postings=True,
-                                   **kw).collect()))
-        arr = sorted(map(tuple, fn(docs, "doc_id", "text", n=3,
-                                   threshold=0.8, verify_via_postings=False,
-                                   **kw).collect()))
-        assert via == arr and via, fn.__name__
-
-
-def test_jaccard_shared_postings_defaults_to_postings_verification(spark):
-    """The auto default must keep zero-extra-shingling verification when a
-    caller shares a postings stream (the minhash-eval sharing contract)."""
+@pytest.mark.parametrize("threshold", (0.5, 0.8))
+def test_jaccard_shared_postings_defaults_to_postings_verification(
+        spark, threshold):
+    """A caller sharing a postings stream gets zero-extra-shingling
+    verification from those postings (the minhash-eval sharing
+    contract); it must be BIT-identical to the array_intersect
+    verification a plain call runs — same pairs, same jaccard bits."""
     docs = _docs(spark)
     sh = dedup._shingled(docs, "doc_id", "text", 3)
     shared = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.8,
+        docs, "doc_id", "text", n=3, threshold=threshold,
         postings=sh).collect()))
     plain = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.8).collect()))
+        docs, "doc_id", "text", n=3, threshold=threshold).collect()))
     assert shared == plain and shared
 
 
@@ -362,7 +335,7 @@ def test_media_payload_dedup_collapses_planted_dups(spark):
     assert {r["media_id"] for r in kept.collect()} == {1, 3}
 
 
-def test_release_cached_postings_lifecycle(spark):
+def test_release_cached_postings_lifecycle(spark, monkeypatch):
     """The persist() branch of _materialize_postings registers its frame
     for explicit release (round-10 ADVICE: cached InMemoryRelations
     otherwise live for the session); release_cached_postings unpersists
@@ -372,23 +345,20 @@ def test_release_cached_postings_lifecycle(spark):
     d.release_cached_postings()          # drain whatever earlier tests cached
     assert d.release_cached_postings() == 0   # idempotent once drained
     docs = _docs(spark)
-    old = d._POSTINGS_MAT
-    d._POSTINGS_MAT = "persist"
-    try:
-        pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text",
-                                          n=3, threshold=0.5)
-        pairs.count()
-        assert len(d._CACHED_POSTINGS) >= 1
-        cached = list(d._CACHED_POSTINGS)
-        assert d.release_cached_postings() == len(cached)
-        assert d._CACHED_POSTINGS == []
-        for frame in cached:
-            assert not frame.is_cached
-    finally:
-        d._POSTINGS_MAT = old
+    # every postings frame is over a 0-byte threshold: the persist branch
+    monkeypatch.setattr(d, "_POSTINGS_PERSIST_MIN_BYTES", 0)
+    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text",
+                                      n=3, threshold=0.5)
+    pairs.count()
+    assert len(d._CACHED_POSTINGS) >= 1
+    cached = list(d._CACHED_POSTINGS)
+    assert d.release_cached_postings() == len(cached)
+    assert d._CACHED_POSTINGS == []
+    for frame in cached:
+        assert not frame.is_cached
 
 
-def test_postings_cache_scope_and_fifo_cap(spark):
+def test_postings_cache_scope_and_fifo_cap(spark, monkeypatch):
     """round-12 (VERDICT r11 item 4): postings_cache_scope releases only
     the frames cached INSIDE the scope, leaving a pre-existing cache
     alone; the FIFO cap bounds registry growth in sessions that never
@@ -396,8 +366,7 @@ def test_postings_cache_scope_and_fifo_cap(spark):
     import music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators.dedup as d
     d.release_cached_postings()
     docs = _docs(spark)
-    old_mat, old_cap = d._POSTINGS_MAT, d._POSTINGS_CACHE_MAX
-    d._POSTINGS_MAT = "persist"
+    monkeypatch.setattr(d, "_POSTINGS_PERSIST_MIN_BYTES", 0)
     try:
         outer = dedup.ngram_jaccard_pairs(docs, "doc_id", "text",
                                           n=3, threshold=0.5)
@@ -413,19 +382,17 @@ def test_postings_cache_scope_and_fifo_cap(spark):
         assert all(f.is_cached for f in d._CACHED_POSTINGS)
         # FIFO cap: the oldest frame is evicted once the registry
         # exceeds the bound
-        d._POSTINGS_CACHE_MAX = n_outer
+        monkeypatch.setattr(d, "_POSTINGS_CACHE_MAX", n_outer)
         oldest = d._CACHED_POSTINGS[0]
         dedup.ngram_jaccard_pairs(docs, "doc_id", "text",
                                   n=4, threshold=0.8).count()
         assert len(d._CACHED_POSTINGS) == n_outer
         assert not oldest.is_cached
     finally:
-        d._POSTINGS_MAT = old_mat
-        d._POSTINGS_CACHE_MAX = old_cap
         d.release_cached_postings()
 
 
-def test_curation_pipeline_releases_postings_cache(spark):
+def test_curation_pipeline_releases_postings_cache(spark, monkeypatch):
     """round-12 (VERDICT r11 item 4): after curation_pipeline returns,
     the session's cache manager is back to baseline — no accumulated
     postings InMemoryRelations — and the returned frame is still fully
@@ -435,12 +402,9 @@ def test_curation_pipeline_releases_postings_cache(spark):
     d.release_cached_postings()
     spark.catalog.clearCache()
     docs = _docs(spark)
-    old = d._POSTINGS_MAT
-    d._POSTINGS_MAT = "persist"        # force the branch that registers
-    try:
-        out = corpus.curation_pipeline(docs)
-        assert d._CACHED_POSTINGS == []
-        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-        assert out.count() > 0         # release never costs correctness
-    finally:
-        d._POSTINGS_MAT = old
+    # force the branch that registers
+    monkeypatch.setattr(d, "_POSTINGS_PERSIST_MIN_BYTES", 0)
+    out = corpus.curation_pipeline(docs)
+    assert d._CACHED_POSTINGS == []
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert out.count() > 0         # release never costs correctness

@@ -112,39 +112,3 @@ def test_triangle_count_random_graph_vs_bruteforce(spark):
     got = {r["node"]: r["n_triangles"]
            for r in graph.triangle_count(df).collect()}
     assert got == _brute_triangles(edges)
-
-
-def test_pagerank_bucketed_links_layout_matches_ckpt(spark, monkeypatch):
-    """SPARK_GRAFT_PAGERANK_LINKS=bucketed routes the shuffled path's
-    links through a bucketBy(src)+sortBy(src) catalog table (round-11
-    sf10 A/B lever) — same ranks as the default localCheckpoint layout,
-    and repeat runs in one session reclaim the previous table/location."""
-    from pyspark.sql import functions as F
-    edges = spark.range(4000).select(
-        (F.col("id") % 499).alias("src"),
-        ((F.col("id") * 7) % 499).alias("dst"))
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_LINKS", "ckpt")
-    a = {r["node"]: r["rank"] for r in graph.pagerank(
-        edges, iterations=2, symmetric=True,
-        broadcast_ranks=False).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_LINKS", "bucketed")
-    b = {r["node"]: r["rank"] for r in graph.pagerank(
-        edges, iterations=2, symmetric=True,
-        broadcast_ranks=False).collect()}
-    # second bucketed run exercises the stale-table/location reclaim
-    b2 = {r["node"]: r["rank"] for r in graph.pagerank(
-        edges, iterations=2, symmetric=True,
-        broadcast_ranks=False).collect()}
-    assert set(a) == set(b) == set(b2)
-    for k in a:
-        assert abs(a[k] - b[k]) < 1e-12 and abs(a[k] - b2[k]) < 1e-12
-    # round-12 ADVICE: names are per-call unique and the managed table +
-    # warehouse dir are dropped after the loop — no catalog leftovers
-    assert not [t.name for t in spark.catalog.listTables()
-                if t.name.startswith("_pagerank_links_bucketed")]
-    import os
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    assert not [d for d in (os.listdir(wh) if os.path.isdir(wh) else [])
-                if d.startswith("_pagerank_links_bucketed")]

@@ -45,7 +45,7 @@ def calib():
 qa = load_tree(TREE_A)
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.session import get_spark  # noqa: E402
 
-spark = get_spark("paired_ab", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
+spark = get_spark("paired_ab")
 sc = spark.sparkContext
 names = [n for n in ONLY.split(",")]
 

@@ -76,8 +76,7 @@ def main() -> None:
         names = [n for n, _ in sorted(bench.items(), key=lambda kv: -kv[1])
                  if n in qs][:args.top]
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark = get_spark("profile", cpus=cpus)
+    spark = get_spark("profile")
     sc = spark.sparkContext
     for t in ("part", "lineitem", "orders", "events", "documents",
               "embeddings"):

@@ -295,7 +295,7 @@ def main() -> int:
     # --quick (round 11): skip the CHAIN ratio sweep and normalization
     # (unchanged code paths re-certified in the previous round's file)
     # and run only the explicitly requested probes — used when a round
-    # adds targeted probes (--stream10 / --pagerank-ab) on top of a
+    # adds targeted probes (--stream10) on top of a
     # still-valid prior full sweep.
     quick = "--quick" in sys.argv
     spark = get_spark("scale-probe")
@@ -639,58 +639,6 @@ print("HLL_PROBE_JSON:" + json.dumps(res))
                 print(f"# hll probe {tag}/{variant}: {payload} "
                       f"(rc={r.returncode})", file=sys.stderr)
 
-    # Bucketed-links PageRank A/B (round-11, VERDICT r10 item 5; round-12
-    # VERDICT r11 item 1): the full part_order_pagerank query at sf10,
-    # one FRESH JVM per run. Round 12 upgraded the single pair to an
-    # INTERLEAVED quad — ckpt/bucketed/ckpt/bucketed in one sitting, per
-    # -run load averages recorded — so a load ramp during the sitting
-    # shows up as within-variant spread instead of silently biasing
-    # whichever variant ran second (exactly what inflated the r11 pair
-    # ~5x vs r10's quiet-day ckpt).
-    pagerank_ab = None
-    if "--pagerank-ab" in sys.argv:
-        import subprocess
-        sf10 = _ensure_sf10()
-        prog = r"""
-import sys, time
-sys.path.insert(0, %(repo)r)
-import __spark_entry__ as e
-from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.session import get_spark
-spark = get_spark("pagerank-ab")
-import os
-spark.read.parquet(%(sf10)r + "/lineitem.parquet").count()
-t0 = time.perf_counter()
-e.queries()["part_order_pagerank"](spark, %(sf10)r) \
-    .write.format("noop").mode("overwrite").save()
-print("PAGERANK_AB_SECS:%%.3f" %% (time.perf_counter() - t0))
-"""
-        pagerank_ab = {"runs": [], "min": {}}
-        for variant in ("ckpt", "bucketed", "ckpt", "bucketed"):
-            env = dict(os.environ)
-            env["SPARK_GRAFT_PAGERANK_LINKS"] = variant
-            load0 = os.getloadavg()[0]
-            print(f"# pagerank A/B: {variant} (fresh JVM, load "
-                  f"{load0:.2f}) ...", file=sys.stderr)
-            r = subprocess.run(
-                [sys.executable, "-c",
-                 prog % {"repo": REPO, "sf10": sf10}],
-                env=env, cwd=REPO, capture_output=True, text=True,
-                timeout=5400)
-            secs = None
-            for ln in r.stdout.splitlines():
-                if ln.startswith("PAGERANK_AB_SECS:"):
-                    secs = float(ln.split(":", 1)[1])
-            pagerank_ab["runs"].append(
-                {"variant": variant, "secs": secs,
-                 "load_1m_start": round(load0, 2),
-                 "load_1m_end": round(os.getloadavg()[0], 2)})
-            if secs is not None:
-                cur = pagerank_ab["min"].get(variant)
-                pagerank_ab["min"][variant] = (
-                    secs if cur is None else min(cur, secs))
-            print(f"# pagerank A/B {variant}: {secs}s (rc={r.returncode})",
-                  file=sys.stderr)
-
     line = json.dumps({
         "metric": "sf1_scale_probe", "unit": "sec",
         "copies": COPIES, "queries": result,
@@ -699,8 +647,6 @@ print("PAGERANK_AB_SECS:%%.3f" %% (time.perf_counter() - t0))
         **({"stream_sf1": stream} if stream is not None else {}),
         **({"stream_sf10": stream10} if stream10 is not None else {}),
         **({"hll_three_way": hll} if hll is not None else {}),
-        **({"pagerank_links_ab_sf10": pagerank_ab}
-           if pagerank_ab is not None else {}),
         "worst_ratio": worst, "blowup_gate": BLOWUP,
         "superlinear": sorted(n for n, r in result.items()
                               if r["ratio"] > BLOWUP),
