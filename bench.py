@@ -7,28 +7,30 @@ Each query is forced with the ``noop`` sink — a full evaluation of every
 output column with zero write cost (a bare ``count()`` would let Catalyst
 prune the computed columns and under-measure).
 
-Protocol (round-10, VERDICT r9 item 1 — noise-immune by construction):
-the sample basis is **min over K interleaved fresh-JVM batches**, not a
-within-JVM median. Rationale, measured over rounds 4-9 on this box:
-ambient load inflates whole stretches of a single long-lived JVM's pass
-(r9: 22 median-basis flags, ALL of which re-measured at parity in fresh
-JVMs), so any within-JVM estimator needs manual forensic reclassification
-every round. A fresh-JVM min only reads high when EVERY batch was hit at
-that query's slot — and a third, targeted fresh-JVM batch re-runs exactly
-the queries whose first two samples disagree >1.5x, so a single noisy
-stretch cannot survive into the reported number. Each batch is a separate
-``python bench.py --worker`` subprocess: one SparkSession, one warmup,
-one full pass, its own env snapshot — what a real single-query deployment
-sees, and what tools/bench_compare.py's fresh-JVM re-measure already
-measured as ground truth.
+Protocol: the sample basis is **min over K interleaved fresh-JVM
+batches**, not a within-JVM median. Ambient load inflates whole
+stretches of a single long-lived JVM's pass, so a fresh-JVM min only
+reads high when EVERY batch was hit at that query's slot — and a third,
+targeted fresh-JVM batch re-runs exactly the queries whose first two
+samples disagree >1.5x, so a single noisy stretch cannot survive into the
+reported number. Each batch is a separate ``python bench.py --worker``
+subprocess: one SparkSession, one warmup, one full pass, its own env
+snapshot — what a real single-query deployment sees.
+
+Each query's seconds split into two phases: ``build`` (the query
+function: plan construction plus its eager driver actions, such as
+checkpoints, collects and one-time fixture builds) and ``exec`` (the
+noop write of the returned frame), each with the number of Spark jobs it
+ran.
 
 Output keys: ``queries`` = per-query min across batches (primary basis,
-tagged ``basis: fresh_jvm_min``); ``batches`` = each batch's full
-per-query dict + env block (auditable raw data); ``retried`` = the
-queries that drew the targeted third batch. Cross-round comparability:
-r6-r9 files carry their min estimator in ``queries_min`` and r1-r5 files
-are min-only, so min-vs-min comparisons stay like-for-like
-(tools/bench_compare.py picks the estimator pair).
+tagged ``basis: fresh_jvm_min``); ``phases`` = per query, the
+``{build_s, exec_s, jobs_build, jobs_exec}`` record of the batch that gave
+that min; ``batches`` = each batch's full per-query seconds, phases and
+env block (auditable raw data); ``retried`` = the queries that drew the
+targeted third batch. Restrict a run to some queries with
+``SPARK_GRAFT_BENCH_ONLY=q1,q2``; compare two trees by running that in
+each checkout.
 """
 
 from __future__ import annotations
@@ -47,7 +49,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 _GC_THRESHOLD_MB = 64
 
 #: Two batch samples disagreeing by more than this ratio mark the query
-#: for the targeted third batch (same spread the regression gate uses).
+#: for the targeted third batch.
 NOISY_RATIO = 1.5
 #: ...unless the faster sample is already under this floor — sub-second
 #: spread is JVM scheduling noise, and min-of-2 bounds it fine.
@@ -70,51 +72,24 @@ def _env_snapshot() -> dict:
             "cpu_count": os.cpu_count()}
 
 
-def calibration_kernel(reps: int = 3) -> float:
-    """Fixed CPU-bound calibration kernel (round-12, VERDICT r11 item 3):
-    ``cpu_count`` threads each running a deterministic numpy sort+fp
-    pass (GIL-releasing, so the pool genuinely occupies every core),
-    timed min-over-``reps`` — the same estimator the bench uses for
-    queries. ALL-cores on purpose: a single-threaded probe on a 32-core
-    box reads quiet until the box is fully saturated (measured: 0.83 s
-    at load 13 — identical to idle), while the 32-thread Spark passes
-    it is meant to calibrate degrade with ANY core stolen. No Spark, no
-    I/O, no randomness — its wall moves only with host CPU contention,
-    so the regression gate can NORMALIZE cross-run comparisons by the
-    calibration ratio instead of adjudicating "empty process table,
-    load 13" by narrative. Recorded per fresh-JVM batch in
-    env["calib_secs"] (start) / env["calib_secs_end"]."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    import numpy as np
-    n = os.cpu_count() or 8
-    x = (np.arange(4_000_000, dtype=np.int64) * 2654435761) % 1000003
-
-    def _one(_i: int) -> float:
-        y = np.sort(x)
-        return float(np.sqrt(y.astype(np.float64)).sum())
-
-    best = None
-    with ThreadPoolExecutor(max_workers=n) as ex:
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            list(ex.map(_one, range(n)))
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-    return round(best, 4)
+def _njobs(sc) -> int:
+    """Jobs submitted so far: the newest job id + 1. Ids are sequential,
+    so differences stay exact after Spark drops old jobs from its status
+    store (``spark.ui.retainedJobs``, 1000 by default), where a count of
+    the retained ids would fall."""
+    return max(sc.statusTracker().getJobIdsForGroup(None) or [-1]) + 1
 
 
 def _worker(out_path: str) -> None:
     """ONE fresh-JVM batch: warmup, then a single timed pass over the
     registry (optionally restricted via $SPARK_GRAFT_BENCH_ONLY), with
-    cache hygiene between queries. Writes {queries, env} JSON."""
+    cache hygiene between queries. Writes {queries, phases, env} JSON."""
     import __spark_entry__ as entrymod
     from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.session import get_spark
     from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.sources import catalog
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     env = _env_snapshot()
-    env["calib_secs"] = calibration_kernel()
     spark = get_spark("bench")
     # Warm-up: JVM, codegen, parquet footers — not part of any measurement.
     # Through the catalog, not bare spark.read: events needs its session
@@ -225,11 +200,27 @@ def _worker(out_path: str) -> None:
         keep = set(only.split(","))
         items = [(n, f) for n, f in items if n in keep]
 
+    sc = spark.sparkContext
     times: dict[str, float] = {}
+    phases: dict[str, dict] = {}
     for name, fn in items:
+        # job counts are read outside the timed spans
+        sc.setJobDescription(f"bench:{name}:build")
+        j0 = _njobs(sc)
         t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times[name] = round(time.perf_counter() - t0, 3)
+        df = fn(spark, sf_dir)
+        build = time.perf_counter() - t0
+        j1 = _njobs(sc)
+        sc.setJobDescription(f"bench:{name}:exec")
+        t0 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        exec_ = time.perf_counter() - t0
+        j2 = _njobs(sc)
+        del df  # its py4j handle would pin checkpoint blocks past the gc below
+        sc.setJobDescription(None)
+        times[name] = round(build + exec_, 3)
+        phases[name] = {"build_s": round(build, 3), "exec_s": round(exec_, 3),
+                        "jobs_build": j1 - j0, "jobs_exec": j2 - j1}
         # JVM-state hygiene BETWEEN measurements (untimed): queries that
         # persist() intermediates or register memory-sink temp views
         # would otherwise accumulate cached blocks across a full pass —
@@ -266,11 +257,8 @@ def _worker(out_path: str) -> None:
             env.setdefault("gc_trigger_slots", []).append(
                 [name, round(_leftover / 1048576), round(time.perf_counter() - _tg, 3)])
     env["load_avg_1m_end"] = round(os.getloadavg()[0], 2)
-    # bracket the pass: contention arriving MID-batch shows up as a
-    # start/end calibration spread; the gate normalizes by the mean
-    env["calib_secs_end"] = calibration_kernel()
     with open(out_path, "w") as fh:
-        json.dump({"queries": times, "env": env}, fh)
+        json.dump({"queries": times, "phases": phases, "env": env}, fh)
     spark.stop()
 
 
@@ -316,9 +304,18 @@ def main() -> None:
         batches.append(_spawn_batch())
 
     samples: dict[str, list[float]] = {}
-    for b in batches:
+    # per query, the phase record of the batch with the min seconds: a
+    # slower batch's record (say, one that built a cold fixture) is not it
+    phases: dict[str, dict] = {}
+
+    def _collect(b: dict) -> None:
         for n, s in b["queries"].items():
+            if n not in samples or s < min(samples[n]):
+                phases[n] = b["phases"][n]
             samples.setdefault(n, []).append(float(s))
+
+    for b in batches:
+        _collect(b)
 
     # Targeted third batch: queries whose batch samples disagree >1.5x
     # were measured through at least one noisy stretch — grant them one
@@ -333,8 +330,7 @@ def main() -> None:
               f"high-variance queries ...", file=sys.stderr)
         tb = _spawn_batch(only=noisy)
         batches.append(tb)
-        for n, s in tb["queries"].items():
-            samples.setdefault(n, []).append(float(s))
+        _collect(tb)
         retried = {n: [round(s, 3) for s in samples[n]] for n in noisy}
 
     mins = {n: round(min(ss), 3) for n, ss in samples.items()}
@@ -347,8 +343,8 @@ def main() -> None:
         "unit": "sec",
         "basis": "fresh_jvm_min",
         "queries": mins,
-        "batches": [{"queries": b["queries"], "env": b["env"]}
-                    for b in batches],
+        "phases": phases,
+        "batches": batches,
         "retried": retried,
         "sf": sf,
         "env": env,

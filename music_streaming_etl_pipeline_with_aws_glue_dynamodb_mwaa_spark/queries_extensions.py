@@ -15,7 +15,6 @@ Hash-comparability notes:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -59,7 +58,7 @@ from .operators import (
     transcripts,
 )
 from .operators import pyref, validate
-from .queries_reference import register
+from .queries_reference import _fixture_dir, register
 from .session import conf_override
 from .streaming import dedupe, joins, stateful, windowed
 from .sources import catalog, io, layout
@@ -3518,11 +3517,8 @@ def neardup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite") \
             .parquet(os.path.join(fix, "index"))
 
-    # fixture key encodes the sketch parameters — a default change in
-    # dedup.py can never silently serve a stale-parameter index
-    fixture_name = "minhash_band_index_md5_n3_h48_b12_v1"
     idx = spark.read.parquet(os.path.join(
-        _fixture_dir(sf_dir, fixture_name, build), "index"))
+        _fixture_dir(sf_dir, "minhash_band_index", build), "index"))
     return dedup.minhash_near_dup_pairs_incremental(
         new, idx, old, "doc_id", "text", n=3, num_hashes=48, bands=12,
         threshold=0.7, hash_scheme="md5")
@@ -5318,65 +5314,6 @@ _JSONL_BAD_LINES = [
 ]
 
 
-def _sf_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of the source tables (name+size+mtime of every
-    parquet): regenerated testdata at the same path gets a fresh fixture
-    instead of silently serving a stale one (round-4 ADVICE fix)."""
-    import glob
-    import hashlib
-    h = hashlib.sha256()
-    for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        st = os.stat(p)
-        h.update(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}\n"
-                 .encode())
-    return h.hexdigest()[:12]
-
-
-def _fixture_dir(sf_dir: str, name: str, build) -> str:
-    """Idempotent per-(fixture, source-content) scratch dir. ``build(tmp)``
-    runs into a private temp dir which is atomically renamed into place —
-    the final directory's existence IS the ready marker, so a crashed build
-    never half-publishes and two concurrent drivers race safely (the loser's
-    rename fails and its build is discarded)."""
-    import shutil
-    base = os.path.join(
-        tempfile.gettempdir(), "spark_graft_fixtures", name,
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{_sf_fingerprint(sf_dir)}")
-    if not os.path.exists(base):
-        tmp = f"{base}.build-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp, exist_ok=True)
-        build(tmp)
-        try:
-            os.replace(tmp, base)
-        except OSError:  # concurrent builder won the rename — use theirs
-            shutil.rmtree(tmp, ignore_errors=True)
-        # publish-time sweep, scoped to THIS sf's entries: crashed builds
-        # and fixtures for superseded source fingerprints would otherwise
-        # accumulate in /tmp forever. Other sf dirs' entries (different
-        # prefix) are never touched, and EVERY stale entry — in-progress
-        # `.build-` dirs AND already-published dirs for an older source
-        # fingerprint — gets a 1 h mtime grace period: a concurrent driver
-        # still running against the previous testdata generation may hold
-        # an in-flight read on its (published) fixture, which must never
-        # be deleted out from under it (round-4 + round-5 ADVICE catches).
-        # Only genuinely abandoned entries are reaped.
-        import time as _time
-        parent = os.path.dirname(base)
-        prefix = os.path.basename(os.path.normpath(sf_dir)) + "-"
-        for entry in os.listdir(parent):
-            p = os.path.join(parent, entry)
-            if p == base or not entry.startswith(prefix):
-                continue
-            try:
-                if _time.time() - os.stat(p).st_mtime < 3600:
-                    continue
-            except OSError:
-                continue
-            shutil.rmtree(p, ignore_errors=True)
-    return base
-
-
 def _jsonl_fixture(spark: SparkSession, sf_dir: str) -> str:
     def build(fix: str) -> None:
         docs = catalog.load_table(spark, sf_dir, "documents")
@@ -5387,7 +5324,7 @@ def _jsonl_fixture(spark: SparkSession, sf_dir: str) -> str:
         with open(os.path.join(fix, "bad", "planted.jsonl"), "w") as fh:
             fh.writelines(ln + "\n" for ln in _JSONL_BAD_LINES)
 
-    fix = _fixture_dir(sf_dir, "jsonl_docs_v1", build)
+    fix = _fixture_dir(sf_dir, "jsonl_docs", build)
     # concrete dirs, not a glob: Spark's FileStreamSink probe stat()s the
     # raw path string and logs a FileNotFoundException trace per glob read
     return [os.path.join(fix, "good"), os.path.join(fix, "bad")]
@@ -5620,7 +5557,7 @@ def _evolving_fixture(spark: SparkSession, sf_dir: str) -> str:
         early.write.mode("overwrite").parquet(os.path.join(fix, "b1"))
         late.write.mode("overwrite").parquet(os.path.join(fix, "b2"))
 
-    return _fixture_dir(sf_dir, "evolving_docs_v1", build)
+    return _fixture_dir(sf_dir, "evolving_docs", build)
 
 
 @register("parquet_schema_evolution", """
@@ -5728,7 +5665,7 @@ def _ivm_fixture(spark: SparkSession, sf_dir: str) -> str:
         m.write.mode("overwrite").parquet(os.path.join(fix, "view"))
 
     return os.path.join(
-        _fixture_dir(sf_dir, "ivm_orders_cust_v1", build), "view")
+        _fixture_dir(sf_dir, "ivm_orders_cust", build), "view")
 
 
 @register("orders_join_view_refresh", """
@@ -5891,7 +5828,7 @@ def _versioned_fixture(spark: SparkSession, sf_dir: str) -> str:
         V.write_snapshot(o, root)
 
     return os.path.join(
-        _fixture_dir(sf_dir, "versioned_orders_v1", build), "orders_tbl")
+        _fixture_dir(sf_dir, "versioned_orders", build), "orders_tbl")
 
 
 @register("orders_time_travel_v1", """
@@ -6123,7 +6060,7 @@ def _kvstore_fixture(spark: SparkSession, sf_dir: str) -> str:
          .mode("append").save())
 
     return os.path.join(
-        _fixture_dir(sf_dir, "kvstore_items_v1", build), "kv.db")
+        _fixture_dir(sf_dir, "kvstore_items", build), "kv.db")
 
 
 @register("kvstore_read_genre_kpis",
@@ -6520,7 +6457,7 @@ def _pipeline_e2e_fixture(spark: SparkSession, sf_dir: str) -> str:
         # ledger consumed the file and the raw dir drained into archive.
         assert pipe.run_once() is None, "ledger failed to mark batch done"
 
-    return os.path.join(_fixture_dir(sf_dir, "pipeline_e2e_v2", build),
+    return os.path.join(_fixture_dir(sf_dir, "pipeline_e2e", build),
                         "lake", "kv", "store.db")
 
 
@@ -6718,7 +6655,7 @@ def _pipeline_stream_e2e_fixture(spark: SparkSession, sf_dir: str) -> str:
         # the oracle hash would expose any violation, but fail fast here.
         pipe.run_streaming()
 
-    return os.path.join(_fixture_dir(sf_dir, "pipeline_stream_e2e_v1",
+    return os.path.join(_fixture_dir(sf_dir, "pipeline_stream_e2e",
                                      build), "lake", "kv", "store.db")
 
 
@@ -7442,7 +7379,7 @@ def _orc_fixture(spark: SparkSession, sf_dir: str) -> str:
         io.write_orc(catalog.load_table(spark, sf_dir, "documents"),
                      os.path.join(fix, "docs_orc"))
 
-    return os.path.join(_fixture_dir(sf_dir, "orc_docs_v1", build),
+    return os.path.join(_fixture_dir(sf_dir, "orc_docs", build),
                         "docs_orc")
 
 

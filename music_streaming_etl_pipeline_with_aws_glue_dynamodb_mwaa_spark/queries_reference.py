@@ -15,6 +15,7 @@ tools/oracle_check.py and .claude/skills/verify/SKILL.md):
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 from collections.abc import Callable
@@ -308,11 +309,86 @@ _CSV_DOCS_SCHEMA = T.StructType([
 # malformed shapes PERMISSIVE must route to _corrupt_record (probed: both do)
 _CSV_BAD_LINES = ["not_a_number,en,web,12,hello world", "123,en"]
 
-_CSV_FIXTURE_VERSION = "v1"
+
+@functools.cache
+def _code_fingerprint() -> str:
+    """sha256 of this package's ``.py`` sources, computed once per process:
+    a fixture built by one tree's code (say, before an edit to
+    ``plans/pipeline.py``) is never served to another tree's queries."""
+    import glob
+    import hashlib
+    root = os.path.dirname(os.path.abspath(__file__))
+    h = hashlib.sha256()
+    for p in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        h.update(os.path.relpath(p, root).encode() + b"\0")
+        with open(p, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()[:12]
+
+
+def _sf_fingerprint(sf_dir: str) -> str:
+    """Content fingerprint of the source tables (name+size+mtime of every
+    parquet): regenerated testdata at the same path gets a fresh fixture
+    instead of silently serving a stale one (round-4 ADVICE fix)."""
+    import glob
+    import hashlib
+    h = hashlib.sha256()
+    for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        st = os.stat(p)
+        h.update(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}\n"
+                 .encode())
+    return h.hexdigest()[:12]
+
+
+def _fixture_dir(sf_dir: str, name: str, build) -> str:
+    """Idempotent per-(fixture, source data, package code) scratch dir
+    under ``$TMPDIR/spark_graft_fixtures``. ``build(tmp)`` runs into a
+    private temp dir which is atomically renamed into place — the final
+    directory's existence IS the ready marker, so a crashed build never
+    half-publishes and two concurrent drivers race safely (the loser's
+    rename fails and its build is discarded)."""
+    import shutil
+    base = os.path.join(
+        tempfile.gettempdir(), "spark_graft_fixtures", name,
+        f"{os.path.basename(os.path.normpath(sf_dir))}-{_sf_fingerprint(sf_dir)}"
+        f"-{_code_fingerprint()}")
+    if not os.path.exists(base):
+        tmp = f"{base}.build-{os.getpid()}"
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp, exist_ok=True)
+        build(tmp)
+        try:
+            os.replace(tmp, base)
+        except OSError:  # a concurrent build won the rename — use theirs
+            shutil.rmtree(tmp, ignore_errors=True)
+        # publish-time sweep, scoped to THIS sf's entries: crashed builds
+        # and fixtures for superseded source or code fingerprints would
+        # otherwise accumulate in /tmp forever. Other sf dirs' entries
+        # (different prefix) are never touched, and EVERY stale entry —
+        # in-progress `.build-` dirs AND already-published dirs for an
+        # older fingerprint — gets a 1 h mtime grace period: a concurrent
+        # driver still running against the previous testdata generation
+        # may hold an in-flight read on its (published) fixture, which
+        # must never be deleted out from under it (round-4 + round-5
+        # ADVICE catches). Only genuinely abandoned entries are reaped.
+        import time as _time
+        parent = os.path.dirname(base)
+        prefix = os.path.basename(os.path.normpath(sf_dir)) + "-"
+        for entry in os.listdir(parent):
+            p = os.path.join(parent, entry)
+            if p == base or not entry.startswith(prefix):
+                continue
+            try:
+                if _time.time() - os.stat(p).st_mtime < 3600:
+                    continue
+            except OSError:
+                continue
+            shutil.rmtree(p, ignore_errors=True)
+    return base
 
 
 def _csv_fixture(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Materialize the CSV fixture for ``sf_dir`` (idempotent, marker-gated).
+    """Materialize the CSV fixture for ``sf_dir`` (``_fixture_dir``).
 
     Layout: ``<fix>/good/part-*.csv`` (Spark-written, header per file) +
     ``<fix>/bad/planted.csv`` (header + the malformed lines). Returns the
@@ -323,11 +399,7 @@ def _csv_fixture(spark: SparkSession, sf_dir: str) -> list[str]:
     Integer/string columns only — CSV round-trips them bit-exactly (no
     float/timestamp formatting trap).
     """
-    fix = os.path.join(tempfile.gettempdir(), "spark_graft_fixtures",
-                       f"csv_docs_{_CSV_FIXTURE_VERSION}",
-                       os.path.basename(os.path.normpath(sf_dir)))
-    marker = os.path.join(fix, "_READY")
-    if not os.path.exists(marker):
+    def build(fix: str) -> None:
         docs = catalog.load_table(spark, sf_dir, "documents")
         io.write_csv(docs.select(*[f.name for f in _CSV_DOCS_SCHEMA.fields]),
                      os.path.join(fix, "good"))
@@ -335,8 +407,8 @@ def _csv_fixture(spark: SparkSession, sf_dir: str) -> list[str]:
         with open(os.path.join(fix, "bad", "planted.csv"), "w") as fh:
             fh.write("doc_id,lang,source,n_chars,text\n")
             fh.writelines(ln + "\n" for ln in _CSV_BAD_LINES)
-        with open(marker, "w") as fh:
-            fh.write("ok\n")
+
+    fix = _fixture_dir(sf_dir, "csv_docs", build)
     return [os.path.join(fix, "good"), os.path.join(fix, "bad")]
 
 

@@ -20,9 +20,7 @@ import duckdb
 
 import __spark_entry__ as entrymod
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.session import get_spark
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.sources.catalog import TABLES
 
 
 def _norm_cell(v) -> str:
@@ -68,72 +66,6 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
-
-    # Coverage ledger (round-5 VERDICT item 8): rotation debt tracked by
-    # number, not narrative — how much of the registry has EVER held a
-    # driver correctness row, and how much the current 50-window adds.
-    import glob
-    import json
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # STRICT counting (round-8 VERDICT item 2): a window row counts as
-    # oracle-validated only when the driver actually COMPARED something
-    # (rows_match True) — the r1/r2 `err: no_oracle` placeholder rows
-    # carried no rows/schema/hash comparison and must not retire debt.
-    # Rows-only-BY-DESIGN queries (no oracle entry) can never earn a
-    # rows_match row — the driver's strongest possible check for them is
-    # the rows-only row (spark_rows recorded, err == no_oracle), so they
-    # ledger in their own tier instead of inflating either count.
-    validated: set[str] = set()
-    rows_only_checked: set[str] = set()
-    last_round: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        try:
-            import re as _re
-            rnd = int(_re.search(r"r(\d+)", os.path.basename(f)).group(1))
-            d = json.load(open(f))
-            for k, v in d.items():
-                if not isinstance(v, dict):
-                    continue
-                if v.get("rows_match") is True:
-                    validated.add(k)
-                    last_round[k] = max(last_round.get(k, 0), rnd)
-                elif (v.get("err") == "no_oracle"
-                      and v.get("spark_rows") is not None):
-                    rows_only_checked.add(k)
-                    last_round[k] = max(last_round.get(k, 0), rnd)
-        except Exception:
-            pass
-    window = list(qs)[:50]
-    ob = [n for n in qs if n in oracles]
-    ro = [n for n in qs if n not in oracles]
-    ob_debt = [n for n in ob if n not in validated]
-    ro_unchecked = [n for n in ro if n not in rows_only_checked]
-    first_time = [n for n in window
-                  if n not in validated
-                  and not (n not in oracles and n in rows_only_checked)]
-    print(f"# registry: {len(qs)} queries ({len(ob)} oracle-backed + "
-          f"{len(ro)} rows-only-by-design); "
-          f"oracle-validated ever (strict: rows_match=True only): "
-          f"{len(validated & set(ob))}/{len(ob)} "
-          f"(never genuinely validated: {len(ob_debt)}); "
-          f"rows-only with a driver rows-only row ever: "
-          f"{len(set(ro) - set(ro_unchecked))}/{len(ro)} "
-          f"(never driver-checked: {len(ro_unchecked)}); "
-          f"current window adds {len(first_time)} first-time rows")
-    if ob_debt:
-        print(f"#   oracle-backed debt: {sorted(ob_debt)}")
-    if ro_unchecked:
-        print(f"#   rows-only never driver-checked: {sorted(ro_unchecked)}")
-    # Staleness metric (round-9 VERDICT item 5): with the never-validated
-    # ledger at zero, rotation quality = how RECENT each query's last
-    # driver row is. The window should push min/median upward each round.
-    lr = sorted(last_round.get(n, 0) for n in qs)
-    if lr:
-        med = lr[len(lr) // 2]
-        stalest = sorted((last_round.get(n, 0), n) for n in qs)[:5]
-        print(f"# last-validated-round over registry: min=r{lr[0]} "
-              f"median=r{med} (stalest: "
-              f"{', '.join(f'{n}@r{r}' for r, n in stalest)})")
 
     for name, fn in qs.items():
         if only and name not in only:

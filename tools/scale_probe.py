@@ -45,8 +45,8 @@ DST = os.path.join(REPO, ".scale_probe", "sf1")
 COPIES = 10
 #: the reference-surface chain the probe certifies (VERDICT r5 item 6),
 #: plus the round-6 two-phase rewrites — the queries whose sf0.1 cost
-#: DELIBERATELY grew (bench_compare ALLOWED_TRADES) because the
-#: single-task window they replaced cannot scale; this probe is the
+#: DELIBERATELY grew because the single-task window they replaced
+#: cannot scale; this probe is the
 #: evidence side of that trade (their ratio at 10x data should track
 #: the data, not a single task's sort) — plus, round 7 (VERDICT r6
 #: item 3), the five most expensive operators in the suite: the
