@@ -45,9 +45,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-#: between-slot GC trigger (MB of leftover RDD blocks clearCache missed)
-_GC_THRESHOLD_MB = 64
-
 #: Two batch samples disagreeing by more than this ratio mark the query
 #: for the targeted third batch.
 NOISY_RATIO = 1.5
@@ -73,11 +70,12 @@ def _env_snapshot() -> dict:
 
 
 def _njobs(sc) -> int:
-    """Jobs submitted so far: the newest job id + 1. Ids are sequential,
-    so differences stay exact after Spark drops old jobs from its status
-    store (``spark.ui.retainedJobs``, 1000 by default), where a count of
-    the retained ids would fall."""
-    return max(sc.statusTracker().getJobIdsForGroup(None) or [-1]) + 1
+    """Jobs submitted so far, whatever their job group (Structured
+    Streaming runs its micro-batches under its own group): the DAG
+    scheduler's next job id. It counts at submission, so it needs no
+    listener-bus event, and stays exact after Spark drops old jobs from
+    its status store (``spark.ui.retainedJobs``)."""
+    return sc._jsc.sc().dagScheduler().nextJobId()
 
 
 def _worker(out_path: str) -> None:
@@ -216,7 +214,7 @@ def _worker(out_path: str) -> None:
         df.write.format("noop").mode("overwrite").save()
         exec_ = time.perf_counter() - t0
         j2 = _njobs(sc)
-        del df  # its py4j handle would pin checkpoint blocks past the gc below
+        del df  # drop its py4j handle before the blocks are released below
         sc.setJobDescription(None)
         times[name] = round(build + exec_, 3)
         phases[name] = {"build_s": round(build, 3), "exec_s": round(exec_, 3),
@@ -231,31 +229,15 @@ def _worker(out_path: str) -> None:
             if t.name.startswith("_") and t.isTemporary:
                 spark.catalog.dropTempView(t.name)
         # ...and lazy localCheckpoint RDD blocks, which clearCache does
-        # NOT touch (they are plain RDD cache blocks, freed by the
-        # ContextCleaner only once their JVM refs are collected).
+        # NOT touch (they are plain RDD cache blocks, otherwise freed by
+        # the ContextCleaner only once their JVM refs are collected).
         # Measured round 12: 7 ckpt'd-postings queries left 160 MB of
         # blocks behind clearCache, inflating LATER Python-worker
-        # queries 1.3-1.8x in-suite while the same queries measured at
-        # parity isolated; one System.gc() released all of it. Collect
-        # Python first so py4j drops its object handles, then trigger
-        # the JVM cycle. THRESHOLD-gated (not every leftover block):
-        # System.gc() is a full-heap hint whose concurrent phases can
-        # bleed into the NEXT timed slot, so the common few-MB leftover
-        # is cheaper to carry than to collect — only the pathological
-        # accumulation case pays the cycle.
-        _blocks = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        _leftover = sum(b.memSize() for b in _blocks)
-        if _leftover > _GC_THRESHOLD_MB * 1024 * 1024:
-            import gc as _gc
-            _gc.collect()
-            _tg = time.perf_counter()
-            spark.sparkContext._jvm.System.gc()
-            # diagnostic trail: WHICH slot crossed the threshold and what
-            # the (untimed) cycle cost — the async aftermath (ContextCleaner
-            # unpersist/shuffle-file floods) lands in the NEXT slots, so
-            # any in-suite inflation can be matched against these markers
-            env.setdefault("gc_trigger_slots", []).append(
-                [name, round(_leftover / 1048576), round(time.perf_counter() - _tg, 3)])
+        # queries 1.3-1.8x in-suite. No frame outlives its query (module
+        # memos hold Python values only), so every RDD still persisted
+        # here is garbage: release it now rather than wait for a GC.
+        for rdd in sc._jsc.getPersistentRDDs().values():
+            rdd.unpersist(True)
     env["load_avg_1m_end"] = round(os.getloadavg()[0], 2)
     with open(out_path, "w") as fh:
         json.dump({"queries": times, "phases": phases, "env": env}, fh)

@@ -39,29 +39,33 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+#: an edge list at or under this many rows (after symmetrization) is
+#: solved on the driver; above it, distributed label propagation.
+DRIVER_EDGES_MAX = 1_000_000
+
+
 def connected_components(pairs: DataFrame, src: str, dst: str, *,
-                         max_iter: int = 25,
-                         driver_threshold: int = 1_000_000) -> DataFrame:
+                         max_iter: int = 25) -> DataFrame:
     """(node, component) for every node in the edge list; ``component`` is
     the minimum node id reachable from ``node`` (deterministic cluster
     representative). Nodes not present in ``pairs`` don't appear — union
     singletons downstream (see ``cluster_assignments``).
 
-    Adaptive execution: an edge list at or under ``driver_threshold`` rows
+    Adaptive execution: an edge list at or under ``DRIVER_EDGES_MAX`` rows
     (AFTER near-dup pruning, the edge set is tiny relative to the corpus —
     it's the duplicates, not the data) is solved with a driver-side
     union-find: one bounded collect, microseconds of CPU, identical
     min-label output. Distributed label propagation pays ~4 scheduled jobs
     PER ROUND, which dwarfs the work itself until edges reach many
-    millions. Set ``driver_threshold=0`` to force the distributed path
-    (the 100 TB route, and how the equivalence test runs it).
+    millions; past the threshold the distributed path is the 100 TB
+    route.
     """
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     e = (e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
          .distinct()
          .localCheckpoint(eager=False))     # materialize edges once, reuse per round
 
-    if driver_threshold and e.count() <= driver_threshold:
+    if e.count() <= DRIVER_EDGES_MAX:
         rows = e.collect()
         parent: dict = {}
 
@@ -84,7 +88,7 @@ def connected_components(pairs: DataFrame, src: str, dst: str, *,
         schema = e.select(F.col("u").alias("node"),
                           F.col("v").alias("component")).schema
         # broadcast hint (round 12): this frame is driver-built and
-        # bounded by driver_threshold edges (≤ 2·threshold nodes), but a
+        # bounded by DRIVER_EDGES_MAX edges (≤ 2·threshold nodes), but a
         # createDataFrame relation carries an UNKNOWN size estimate, so
         # without the hint every downstream label attach plans as a
         # SortMergeJoin that shuffles the (wide) corpus side — measured

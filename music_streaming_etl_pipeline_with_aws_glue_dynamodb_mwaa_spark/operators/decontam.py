@@ -8,7 +8,7 @@ is file-granular); this is a first-class extension operator.
 Spark-first shape: both sides explode to (id, shingle) postings and meet in
 an inverted-index EQUI-join — only colliding n-grams shuffle, never a doc×
 bench cross join. The benchmark side is small by nature (eval sets are KBs
-to MBs against a 100 TB corpus), so it is broadcast by default: the corpus
+to MBs against a 100 TB corpus), so it is always broadcast: the corpus
 side then never shuffles at all — a map-side join over the scan.
 """
 
@@ -22,8 +22,7 @@ from ..functions.text_funcs import shingles
 
 def contamination_pairs(docs: DataFrame, benchmark: DataFrame, *,
                         id_col: str = "doc_id", text_col: str = "text",
-                        n: int = 3, min_overlap: int = 2,
-                        broadcast_benchmark: bool = True) -> DataFrame:
+                        n: int = 3, min_overlap: int = 2) -> DataFrame:
     """(doc_id, bench_id, n_shared_ngrams) for every training/benchmark pair
     sharing ≥ ``min_overlap`` DISTINCT n-gram shingles.
 
@@ -35,10 +34,8 @@ def contamination_pairs(docs: DataFrame, benchmark: DataFrame, *,
                     F.explode(shingles(text_col, n)).alias("_g"))
     b = benchmark.select(F.col(id_col).alias("bench_id"),
                          F.explode(shingles(text_col, n)).alias("_g"))
-    if broadcast_benchmark:
-        b = F.broadcast(b)
     return (
-        d.join(b, "_g")
+        d.join(F.broadcast(b), "_g")
         .groupBy("doc_id", "bench_id")
         .agg(F.count(F.lit(1)).alias("n_shared_ngrams"))
         .filter(F.col("n_shared_ngrams") >= min_overlap)
@@ -47,14 +44,13 @@ def contamination_pairs(docs: DataFrame, benchmark: DataFrame, *,
 
 def contaminated_docs(docs: DataFrame, benchmark: DataFrame, *,
                       id_col: str = "doc_id", text_col: str = "text",
-                      n: int = 3, min_overlap: int = 2,
-                      broadcast_benchmark: bool = True) -> DataFrame:
+                      n: int = 3, min_overlap: int = 2) -> DataFrame:
     """Doc-level verdict: how many benchmark items each training document
     collides with, and the worst overlap — the frame you anti-join against
     the corpus to decontaminate it."""
     pairs = contamination_pairs(
         docs, benchmark, id_col=id_col, text_col=text_col, n=n,
-        min_overlap=min_overlap, broadcast_benchmark=broadcast_benchmark)
+        min_overlap=min_overlap)
     return pairs.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_benchmarks_hit"),
         F.max("n_shared_ngrams").alias("max_shared_ngrams"),

@@ -106,8 +106,8 @@ def postings_cache_scope():
 # Exact dedup
 # --------------------------------------------------------------------------
 
-def dedup_exact(df: DataFrame, keys: list[str], order_by: list[str], *,
-                fingerprint_strings: bool = True) -> DataFrame:
+def dedup_exact(df: DataFrame, keys: list[str],
+                order_by: list[str]) -> DataFrame:
     """Keep exactly one row per key group, deterministically (first under
     ``order_by`` ascending). ``dropDuplicates`` keeps an *arbitrary* row —
     unacceptable for reproducible corpus builds.
@@ -115,9 +115,8 @@ def dedup_exact(df: DataFrame, keys: list[str], order_by: list[str], *,
     One hash-shuffle on ``keys``; Spark ≥3.5 turns the rank-filter into
     WindowGroupLimit (partial top-1 before the shuffle).
 
-    ``fingerprint_strings`` (default on): string-typed keys are replaced by
-    their ``md5`` fingerprint in the window's partition spec — the row
-    payload is untouched. Hash-partitioning and sort-comparing multi-KB
+    String-typed keys are replaced by their ``md5`` fingerprint in the
+    window's partition spec — the row payload is untouched. Hash-partitioning and sort-comparing multi-KB
     document text inflates exchange bytes and comparator cost for no
     benefit; a 128-bit fingerprint is the only way this survives 100 TB
     documents. NULL keys group as NULL either way (md5(NULL)=NULL), and an
@@ -126,7 +125,7 @@ def dedup_exact(df: DataFrame, keys: list[str], order_by: list[str], *,
     dtypes = dict(df.dtypes)
 
     def _wkey(c: str):
-        if fingerprint_strings and dtypes.get(c) == "string":
+        if dtypes.get(c) == "string":
             return F.md5(F.col(c))
         return F.col(c)
 

@@ -55,7 +55,6 @@ BROADCAST_NODES_MAX = 2_000_000
 
 def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
              damping: float = 0.85, iterations: int = 10,
-             broadcast_ranks: bool | None = None,
              symmetric: bool = False) -> DataFrame:
     """PageRank over a directed edge list (parallel edges collapse to one).
 
@@ -65,9 +64,9 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
     has NO dangling nodes (checked once up front), the per-round scalar
     job is skipped entirely.
 
-    ``broadcast_ranks`` (default: auto by node count, same adaptive
-    pattern as ``cluster.connected_components``): the rank frame is k·16
-    bytes — for graphs under ~2M nodes shipping it to every executor makes
+    The rank join routes on node count (``BROADCAST_NODES_MAX``, the
+    adaptive pattern of ``cluster.connected_components``): the rank frame
+    is k·16 bytes — for graphs under ~2M nodes shipping it to every executor makes
     each round a map-only broadcast join over the static ``links`` frame
     plus ONE aggregation shuffle, instead of re-shuffling the edge frame's
     join side every round. At web scale ranks no longer fit an executor →
@@ -99,8 +98,7 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= BROADCAST_NODES_MAX
+    broadcast_ranks = n <= BROADCAST_NODES_MAX
 
     links = (e.join(out_deg, "src")
              .select("src", "dst", (F.lit(1.0) / F.col("_deg")).alias("_w"))

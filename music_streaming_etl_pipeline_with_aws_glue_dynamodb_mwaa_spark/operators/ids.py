@@ -44,11 +44,10 @@ from pyspark.sql import functions as F
 #: fixed jobs: range sampling + checkpoint + counts — measured 2.3-3.8x
 #: on sub-second sf0.1 riders), and a 64 MB frame sorts trivially in one
 #: task. Catalyst OVERestimates post-join frames (multiplies children),
-#: which errs toward the scale path — the safe direction. Passing an
-#: explicit ``num_partitions`` bypasses the shortcut entirely (that is
-#: how the partition-sweep tests pin the two-phase path, and how a
-#: caller asserts scale intent). Both forms are hash-certified against
-#: the SAME oracles (the r6 rewrite kept every oracle unchanged).
+#: which errs toward the scale path — the safe direction. Both forms
+#: are hash-certified against the SAME oracles (the r6 rewrite kept
+#: every oracle unchanged). The two-phase path range-partitions into
+#: ``spark.sql.shuffle.partitions`` buckets.
 SMALL_N_BYTES = 64 << 20
 
 
@@ -62,8 +61,7 @@ def _est_bytes(df: DataFrame) -> int:
         return 1 << 62
 
 
-def _take_window_path(df: DataFrame, num_partitions: int | None,
-                      order_cols: list[str] | None = None) -> bool:
+def _take_window_path(df: DataFrame, order_cols: list[str]) -> bool:
     """Route between the single-task window and the two-phase machinery.
 
     CONTRACT (round-7 ADVICE): ``order_cols`` MUST be a TOTAL order —
@@ -80,7 +78,7 @@ def _take_window_path(df: DataFrame, num_partitions: int | None,
     action per call and raises on duplicate order keys (debug/test
     only — it is a full extra aggregation over the frame).
     """
-    if order_cols and _os.environ.get("SPARK_GRAFT_IDS_CHECK_TOTAL_ORDER"):
+    if _os.environ.get("SPARK_GRAFT_IDS_CHECK_TOTAL_ORDER"):
         # distinct over a STRUCT, not bare columns (round-8 ADVICE):
         # countDistinct(a, b) drops rows where ANY column is NULL, so a
         # frame with one NULL-keyed row would falsely raise; a struct
@@ -98,11 +96,10 @@ def _take_window_path(df: DataFrame, num_partitions: int | None,
                 f"differently and the adaptive routing would make "
                 f"results depend on runtime size stats; append a unique "
                 f"tie-breaker column")
-    return num_partitions is None and _est_bytes(df) <= SMALL_N_BYTES
+    return _est_bytes(df) <= SMALL_N_BYTES
 
 
-def _range_sorted(df: DataFrame, order_cols: list[str],
-                  num_partitions: int | None):
+def _range_sorted(df: DataFrame, order_cols: list[str]):
     """Range-partition + in-partition sort ONCE, tagged with the physical
     partition id, plus the per-partition row counts and total.
 
@@ -115,7 +112,7 @@ def _range_sorted(df: DataFrame, order_cols: list[str],
     ``counts`` maps pid → row count (k entries to the driver — bounded
     by the partition count, never by the data).
     """
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     d = (df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
            .sortWithinPartitions(*order_cols)
            .withColumn("_pid", F.spark_partition_id())
@@ -132,8 +129,8 @@ def _range_sorted(df: DataFrame, order_cols: list[str],
         raise ValueError(
             f"range partition holds {max(counts.values())} rows ≥ 2^33 — "
             f"monotonically_increasing_id's record counter would overflow "
-            f"into the partition-id bits; raise num_partitions "
-            f"(currently {len(counts)})")
+            f"into the partition-id bits; raise "
+            f"spark.sql.shuffle.partitions (currently {len(counts)})")
     return d, counts, sum(counts.values())
 
 
@@ -173,24 +170,22 @@ def _global_index(d: DataFrame, offsets: dict[int, int]):
 
 def global_row_numbers(df: DataFrame, order_cols: list[str], *,
                        out_col: str = "row_num",
-                       start: int = 0,
-                       num_partitions: int | None = None) -> DataFrame:
+                       start: int = 0) -> DataFrame:
     """Append ``out_col``: dense ``start..start+N-1`` following the total
     order of ``order_cols`` (ascending). Small frames (see
     :data:`SMALL_N_BYTES`) take the plain window."""
-    if _take_window_path(df, num_partitions, order_cols):
+    if _take_window_path(df, order_cols):
         w = Window.orderBy(*order_cols)
         return df.withColumn(
             out_col, (F.row_number().over(w) + F.lit(start - 1))
             .cast("long"))
-    d, counts, _ = _range_sorted(df, order_cols, num_partitions)
+    d, counts, _ = _range_sorted(df, order_cols)
     idx = _global_index(d, _offsets_of(counts, start))
     return d.withColumn(out_col, idx.cast("long")).drop("_pid")
 
 
 def global_ntile(df: DataFrame, order_cols: list[str], n_bins: int, *,
-                 out_col: str = "bucket",
-                 num_partitions: int | None = None) -> DataFrame:
+                 out_col: str = "bucket") -> DataFrame:
     """Append ``out_col``: the ANSI ``ntile(n_bins) OVER (ORDER BY …)``
     bucket (1-based BIGINT) following the total order of ``order_cols``
     — WITHOUT the single-task global window.
@@ -209,11 +204,11 @@ def global_ntile(df: DataFrame, order_cols: list[str], n_bins: int, *,
     (pass a unique tie-breaker), hash-exact against the window form's
     oracle. The ``floor`` divisions are exact: row indices ≪ 2⁵³.
     """
-    if _take_window_path(df, num_partitions, order_cols):
+    if _take_window_path(df, order_cols):
         w = Window.orderBy(*order_cols)
         return df.withColumn(out_col,
                              F.ntile(n_bins).over(w).cast("long"))
-    d, counts, n = _range_sorted(df, order_cols, num_partitions)
+    d, counts, n = _range_sorted(df, order_cols)
     # materialize the index ONCE (see _global_index caution): the bucket
     # formula references it three times, and a nondeterministic id
     # inlined there would re-evaluate per occurrence (observed: rows
@@ -235,8 +230,7 @@ def global_ntile(df: DataFrame, order_cols: list[str], n_bins: int, *,
 
 
 def global_cumsums(df: DataFrame, order_cols: list[str],
-                   value_cols: list[str], out_cols: list[str], *,
-                   num_partitions: int | None = None) -> DataFrame:
+                   value_cols: list[str], out_cols: list[str]) -> DataFrame:
     """Append one INCLUSIVE running total per ``value_cols[i]`` (named
     ``out_cols[i]``), all following the SAME total order of
     ``order_cols`` — the multi-measure form of :func:`global_cumsum`,
@@ -249,7 +243,7 @@ def global_cumsums(df: DataFrame, order_cols: list[str],
     doubles would make the result depend on the partition count).
     """
     assert len(value_cols) == len(out_cols)
-    if _take_window_path(df, num_partitions, order_cols):
+    if _take_window_path(df, order_cols):
         # plain-cumsum callers don't need the grand totals — skip the
         # extra aggregation job the with_totals form pays for them
         w = Window.orderBy(*order_cols).rowsBetween(
@@ -259,21 +253,20 @@ def global_cumsums(df: DataFrame, order_cols: list[str],
             out = out.withColumn(o, F.sum(v).over(w).cast("long"))
         return out
     out, _ = global_cumsums_with_totals(df, order_cols, value_cols,
-                                        out_cols,
-                                        num_partitions=num_partitions)
+                                        out_cols)
     return out
 
 
 def global_cumsums_with_totals(
         df: DataFrame, order_cols: list[str],
-        value_cols: list[str], out_cols: list[str], *,
-        num_partitions: int | None = None) -> tuple[DataFrame, list[int]]:
+        value_cols: list[str],
+        out_cols: list[str]) -> tuple[DataFrame, list[int]]:
     """:func:`global_cumsums` plus the grand totals per measure — they
     fall out of the driver-side prefix for free (the final accumulator),
     so callers that also need Σvalue (a KS scan needs n_a/n_b, an AUC
     needs P/N) skip a whole extra aggregation job and its cross-join."""
     assert len(value_cols) == len(out_cols)
-    if _take_window_path(df, num_partitions, order_cols):
+    if _take_window_path(df, order_cols):
         # checkpoint ONCE: the totals collect() and the returned frame's
         # later action would otherwise each execute the input's full
         # lineage — the two-phase branch runs the upstream exactly once
@@ -289,7 +282,7 @@ def global_cumsums_with_totals(
                       for i, v in enumerate(value_cols)]).collect()[0]
         return out, [int(row[f"_t{i}"] or 0)
                      for i in range(len(value_cols))]
-    d, counts, _ = _range_sorted(df, order_cols, num_partitions)
+    d, counts, _ = _range_sorted(df, order_cols)
     sums = {r["_pid"]: [r[f"_s{i}"] for i in range(len(value_cols))]
             for r in d.groupBy("_pid").agg(
                 *[F.sum(v).alias(f"_s{i}")
@@ -321,8 +314,7 @@ def global_cumsums_with_totals(
 
 
 def global_cumsum(df: DataFrame, order_cols: list[str], value_col: str, *,
-                  out_col: str = "cumsum",
-                  num_partitions: int | None = None) -> DataFrame:
+                  out_col: str = "cumsum") -> DataFrame:
     """Append ``out_col``: the INCLUSIVE running total of ``value_col``
     following the total order of ``order_cols`` — the same two-phase
     trick as :func:`global_row_numbers` (``sum() OVER (ORDER BY …)``
@@ -331,5 +323,4 @@ def global_cumsum(df: DataFrame, order_cols: list[str], value_col: str, *,
     those into per-partition offsets, then each partition folds its own
     rows locally. Single-measure wrapper over :func:`global_cumsums`.
     """
-    return global_cumsums(df, order_cols, [value_col], [out_col],
-                          num_partitions=num_partitions)
+    return global_cumsums(df, order_cols, [value_col], [out_col])

@@ -11,11 +11,13 @@ feature extraction (per-channel/sample statistics) — and, since round 10,
 for 8-bit truecolor PNG: ``png_decode``/``png_encode`` implement the full
 deflate container with all five scanline filters (None/Sub/Up/Average/
 Paeth) on stdlib zlib + numpy, no media libs. Remaining compressed
-formats (jpeg/mp4) have no decoder in this environment: ``decode`` raises
-``NotImplementedError`` there (the PIL/av hook), and ``fake=True``
-substitutes a deterministic byte-derived stand-in so the Spark-side
-machinery — schema, ``mapInPandas`` Arrow-batch iterator (bounded memory),
-UDF signatures, JVM metadata extraction — stays testable on any payload.
+formats (jpeg/mp4) have no decoder here: ``decode`` raises
+``NotImplementedError`` for them (the PIL/av hook). The payload-agnostic
+operators (``extract_media_features``, ``resize_images``,
+``sample_frames``) use a deterministic byte-derived stand-in instead of a
+decoder, so the Spark-side machinery — schema, ``mapInPandas``
+Arrow-batch iterator (bounded memory), UDF signatures, JVM metadata
+extraction — runs on any payload.
 """
 
 from __future__ import annotations
@@ -37,10 +39,7 @@ _FEATURES_SCHEMA = (
 
 def decode(payload: bytes, kind: str):
     """Real decode hook. Plug PIL/torchaudio/av here when available."""
-    raise NotImplementedError(
-        f"no decoder for kind={kind!r} in this environment; "
-        "use extract_media_features(..., fake=True) for the plumbing path"
-    )
+    raise NotImplementedError(f"no decoder for kind={kind!r}")
 
 
 def _fake_feature(payload: bytes) -> np.ndarray:
@@ -51,9 +50,9 @@ def _fake_feature(payload: bytes) -> np.ndarray:
     return buf.astype(np.float64) / 255.0
 
 
-def extract_media_features(media: DataFrame, *, fake: bool = False,
-                           batch_size_hint: int = 1024) -> DataFrame:
-    """Per-payload feature extraction via ``mapInPandas``.
+def extract_media_features(media: DataFrame) -> DataFrame:
+    """Per-payload feature extraction via ``mapInPandas``; the feature is
+    the ``_fake_feature`` stand-in.
 
     Arrow streams record batches through the iterator: memory is bounded by
     one batch of payloads per task, independent of partition size — the
@@ -64,13 +63,8 @@ def extract_media_features(media: DataFrame, *, fake: bool = False,
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                data = bytes(payload) if payload is not None else b""
-                if fake:
-                    feats.append(_fake_feature(data))
-                else:
-                    feats.append(np.asarray(decode(data, kind), dtype=np.float64))
+            feats = [_fake_feature(bytes(p) if p is not None else b"")
+                     for p in pdf["payload"]]
             yield pd.DataFrame({
                 "media_id": pdf["media_id"],
                 "kind": pdf["kind"],
@@ -83,20 +77,16 @@ def extract_media_features(media: DataFrame, *, fake: bool = False,
     return media.mapInPandas(fn, _FEATURES_SCHEMA)
 
 
-def resize_images(media: DataFrame, *, width: int, height: int,
-                  fake: bool = False) -> DataFrame:
-    """Image resize via ``mapInPandas`` — 1:1 rows, new dims, re-encoded
-    payload. Real path plugs a decoder into ``decode``; the ``fake`` path
-    passes payload bytes through untouched and stamps the target dims, so
-    schema/batching/partitioning are testable without PIL."""
+def resize_images(media: DataFrame, *, width: int, height: int) -> DataFrame:
+    """Image resize plumbing via ``mapInPandas`` — 1:1 rows: payload bytes
+    pass through untouched and the target dims are stamped, so
+    schema/batching/partitioning run without a decoder (the decoding
+    resize is ``resize_images_real``)."""
     out_schema = ("media_id long, kind string, payload binary, mime string, "
                   "width int, height int")
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not fake:
-                for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                    decode(bytes(payload or b""), kind)   # raises: no decoder here
             yield pd.DataFrame({
                 "media_id": pdf["media_id"],
                 "kind": pdf["kind"],
@@ -109,14 +99,12 @@ def resize_images(media: DataFrame, *, width: int, height: int,
     return media.mapInPandas(fn, out_schema)
 
 
-def sample_frames(media: DataFrame, *, frame_interval_ms: int,
-                  fake: bool = False) -> DataFrame:
+def sample_frames(media: DataFrame, *, frame_interval_ms: int) -> DataFrame:
     """Video/audio frame sampling via ``mapInPandas`` — the 1:N exploding
     UDF shape (one payload row → one row per sampled timestamp, from
     ``duration_ms`` metadata; rows without a duration yield one frame at 0).
 
-    The frame-extraction itself is stubbed like ``decode``; the ``fake``
-    path emits a deterministic pseudo-frame per timestamp —
+    No frame is decoded: each timestamp gets a deterministic pseudo-frame,
     ``md5(HEX(payload) ":" idx)`` over the uppercase hex STRING, an
     engine-portable derivation (DuckDB can reproduce it: hex + md5 are
     varchar-native there, md5-over-blob is not), which is what makes the
@@ -131,11 +119,9 @@ def sample_frames(media: DataFrame, *, frame_interval_ms: int,
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, tss, frames = [], [], [], []
-            for mid, payload, kind, dur in zip(pdf["media_id"], pdf["payload"],
-                                               pdf["kind"], pdf["duration_ms"]):
+            for mid, payload, dur in zip(pdf["media_id"], pdf["payload"],
+                                         pdf["duration_ms"]):
                 data = bytes(payload) if payload is not None else b""
-                if not fake:
-                    decode(data, kind)                    # raises: no decoder here
                 n = 1 if pd.isna(dur) else int(dur) // frame_interval_ms + 1
                 hx = data.hex().upper()
                 for i in range(n):
@@ -780,8 +766,8 @@ def resize_images_real(media: DataFrame, *, width: int,
 def extract_media_features_real(media: DataFrame) -> DataFrame:
     """REAL feature extraction over decodable payloads: images → per-channel
     mean/std + dims; audio → mean/std/rms/peak + duration. 8-dim vector
-    (zero-padded), same schema as the fake path so downstream similarity
-    search is source-agnostic.
+    (zero-padded), same schema as ``extract_media_features`` so downstream
+    similarity search is source-agnostic.
 
     Bad-row routing (same posture as the CSV/JSONL sources — one corrupt
     payload must never kill a 100 TB job): an undecodable/truncated/

@@ -30,8 +30,7 @@ from .ids import global_ntile
 
 
 def rfm_scores(orders: DataFrame, key_col: str, date_col: str,
-               amount_cents: "F.Column", *, n_bins: int = 5,
-               num_partitions: int | None = None) -> DataFrame:
+               amount_cents: "F.Column", *, n_bins: int = 5) -> DataFrame:
     """Per-key RFM metrics and 1..n_bins scores from an order fact.
 
     Returns (key, recency_days, frequency, monetary_cents, r_score,
@@ -53,11 +52,11 @@ def rfm_scores(orders: DataFrame, key_col: str, date_col: str,
                  "frequency", "monetary_cents"))
     scored = m.withColumn("_nr", -F.col("recency_days"))
     scored = global_ntile(scored, ["_nr", key_col], n_bins,
-                          out_col="r_score", num_partitions=num_partitions)
+                          out_col="r_score")
     scored = global_ntile(scored, ["frequency", key_col], n_bins,
-                          out_col="f_score", num_partitions=num_partitions)
+                          out_col="f_score")
     scored = global_ntile(scored, ["monetary_cents", key_col], n_bins,
-                          out_col="m_score", num_partitions=num_partitions)
+                          out_col="m_score")
     return scored.select(
         key_col, "recency_days", "frequency", "monetary_cents",
         "r_score", "f_score", "m_score",

@@ -313,8 +313,17 @@ def cosine_topk_sq8(emb: DataFrame, queries: DataFrame, k: int = 10, *,
     )
     cand = top_k_per_group(approx, ["_qid"], "_approx", k * overfetch,
                            tie_break=["neighbor_id"]).select("_qid", "neighbor_id")
+    return _exact_rerank(cand, emb, queries, k, id_col=id_col,
+                         vec_col=vec_col, query_id_col=query_id_col)
 
-    # exact re-rank: fetch full vectors for survivors only
+
+def _exact_rerank(cand: DataFrame, emb: DataFrame, queries: DataFrame,
+                  k: int, *, id_col: str, vec_col: str,
+                  query_id_col: str) -> DataFrame:
+    """Second stage of the approximate top-k operators: join the full
+    vectors back for the (``_qid``, ``neighbor_id``) candidates only,
+    score the exact cosine, keep the top ``k`` per query (ties by
+    neighbour id) — ``cosine_topk``'s output schema."""
     full_c = emb.select(F.col(id_col).alias("neighbor_id"),
                         F.col(vec_col).alias("_v"),
                         norm_expr(vec_col).alias("_n"))
@@ -452,21 +461,8 @@ def cosine_topk_pq(emb: DataFrame, queries: DataFrame, k: int = 10, *,
                            ["_qid"], "_approx", k * overfetch,
                            tie_break=["neighbor_id"]) \
         .select("_qid", "neighbor_id")
-
-    full_c = emb.select(F.col(id_col).alias("neighbor_id"),
-                        F.col(vec_col).alias("_v"),
-                        norm_expr(vec_col).alias("_n"))
-    full_q = queries.select(F.col(query_id_col).alias("_qid"),
-                            F.col(vec_col).alias("_qv"),
-                            norm_expr(vec_col).alias("_qn"))
-    exact = (
-        cand.join(full_c, "neighbor_id").join(F.broadcast(full_q), "_qid")
-        .select(F.col("_qid").alias(query_id_col), "neighbor_id",
-                (dot_expr("_v", "_qv") / (F.col("_n") * F.col("_qn")))
-                .alias("cosine"))
-    )
-    return top_k_per_group(exact, [query_id_col], "cosine", k,
-                           tie_break=["neighbor_id"])
+    return _exact_rerank(cand, emb, queries, k, id_col=id_col,
+                         vec_col=vec_col, query_id_col=query_id_col)
 
 
 # --------------------------------------------------------------------------
@@ -592,21 +588,8 @@ def cosine_topk_jl(emb: DataFrame, queries: DataFrame, k: int = 10, *,
     cand = top_k_per_group(cand, ["_qid"], "_approx", rerank_factor * k,
                            tie_break=["neighbor_id"]) \
         .select("_qid", "neighbor_id")
-    # exact re-rank: fetch full vectors for candidates only
-    qfull = queries.select(F.col(query_id_col).alias("_qid"),
-                           F.col(vec_col).alias("_qv"),
-                           norm_expr(vec_col).alias("_qn"))
-    scored = (cand
-              .join(emb.select(F.col(id_col).alias("neighbor_id"),
-                               F.col(vec_col).alias("_nv"),
-                               norm_expr(vec_col).alias("_nn")),
-                    "neighbor_id")
-              .join(F.broadcast(qfull), "_qid")
-              .select(F.col("_qid").alias(query_id_col), "neighbor_id",
-                      (dot_expr("_nv", "_qv")
-                       / (F.col("_nn") * F.col("_qn"))).alias("cosine")))
-    return top_k_per_group(scored, [query_id_col], "cosine", k,
-                           tie_break=["neighbor_id"])
+    return _exact_rerank(cand, emb, queries, k, id_col=id_col,
+                         vec_col=vec_col, query_id_col=query_id_col)
 
 
 # --------------------------------------------------------------------------

@@ -91,8 +91,7 @@ def interval_coverage(df: DataFrame, keys: list[str], start_col: str,
 
 def concurrency_histogram(df: DataFrame, start_col: str, end_col: str, *,
                           length: "callable | None" = None,
-                          scaled: bool = False,
-                          num_partitions: int | None = None) -> DataFrame:
+                          scaled: bool = False) -> DataFrame:
     """Sweep-line load profile over half-open ``[start, end)`` intervals:
     how much wall-clock time the system spent at each concurrency level.
 
@@ -113,12 +112,13 @@ def concurrency_histogram(df: DataFrame, start_col: str, end_col: str, *,
     Default path: the running sum is ONE global window (all boundaries
     through a single task) — exact and fine for dashboard-sized interval
     sets. ``scaled=True`` is the lake path: range-partition the
-    boundaries on (time, delta), per-partition delta sums + head
-    timestamps to the driver (k rows), prefix-sum into level offsets,
-    then each partition folds its own rows with the NEXT partition's
-    head as the final segment end (the ``ids.global_cumsum`` plan plus a
-    boundary handoff) — identical output, certified against the same
-    oracle, with no single-task stage. The scaled path computes
+    boundaries on (time, delta) into ``spark.sql.shuffle.partitions``
+    ranges, per-partition delta sums + head timestamps to the driver
+    (k rows), prefix-sum into level offsets, then each partition folds
+    its own rows with the NEXT partition's head as the final segment end
+    (the ``ids.global_cumsum`` plan plus a boundary handoff) — identical
+    output, certified against the same oracle, with no single-task
+    stage. The scaled path computes
     durations natively (timestamps are converted to unix micros
     JVM-side first); ``length`` applies to the default path only.
     """
@@ -128,7 +128,7 @@ def concurrency_histogram(df: DataFrame, start_col: str, end_col: str, *,
                      F.lit(-1).cast("bigint").alias("_d"))
     bounds = starts.unionByName(ends)
     if scaled:
-        return _concurrency_histogram_scaled(bounds, num_partitions)
+        return _concurrency_histogram_scaled(bounds)
     w = Window.orderBy("_t", "_d")
     level = F.sum("_d").over(w.rowsBetween(Window.unboundedPreceding, 0))
     nxt = F.lead("_t").over(w)
@@ -178,8 +178,7 @@ def value_runs(df: DataFrame, keys: list[str], order_col: str,
             .drop("_island"))
 
 
-def _concurrency_histogram_scaled(bounds: DataFrame,
-                                  num_partitions: int | None) -> DataFrame:
+def _concurrency_histogram_scaled(bounds: DataFrame) -> DataFrame:
     """Two-phase sweep (the 100 TB path of ``concurrency_histogram``):
     no global window — a range exchange on the boundary order, one
     k-row driver job (per-partition delta sum + head time + count),
@@ -200,8 +199,7 @@ def _concurrency_histogram_scaled(bounds: DataFrame,
 
     if bounds.schema["_t"].dataType.typeName().startswith("timestamp"):
         bounds = bounds.select(F.unix_micros("_t").alias("_t"), "_d")
-    parts = (num_partitions
-             or bounds.sparkSession.sparkContext.defaultParallelism)
+    parts = int(bounds.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     b = (bounds.repartitionByRange(parts, F.col("_t"), F.col("_d"))
          .sortWithinPartitions("_t", "_d")
          .withColumn("_pid", F.spark_partition_id())

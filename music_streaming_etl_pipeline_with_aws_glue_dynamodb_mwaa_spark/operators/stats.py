@@ -663,8 +663,7 @@ def autocorrelation(daily: DataFrame, keys: list[str], order_col: str,
 
 
 def ks_two_sample(df: DataFrame, group_col: str, val_col: str, *,
-                  group_a, group_b,
-                  num_partitions: int | None = None) -> DataFrame:
+                  group_a, group_b) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov statistic, INTEGER-exact argmax:
     D = max over values of |F_a − F_b| is located by maximizing the
     cross-multiplied |c_a·n_b − c_b·n_a| (exact longs — no float CDF is
@@ -691,8 +690,7 @@ def ks_two_sample(df: DataFrame, group_col: str, val_col: str, *,
                     F.count(F.when(F.col(group_col) == group_b, 1))
                     .alias("_cb")))
     cum, (n_a, n_b) = ids.global_cumsums_with_totals(
-        per_val, ["v"], ["_ca", "_cb"], ["ca", "cb"],
-        num_partitions=num_partitions)
+        per_val, ["v"], ["_ca", "_cb"], ["ca", "cb"])
     scored = (cum.withColumn("_scaled",
                              F.abs(F.col("ca") * F.lit(n_b)
                                    - F.col("cb") * F.lit(n_a)))
@@ -709,8 +707,7 @@ def ks_two_sample(df: DataFrame, group_col: str, val_col: str, *,
 
 
 def equidepth_histogram(df: DataFrame, val_col: str, uniq_col: str, *,
-                        n_buckets: int = 12,
-                        num_partitions: int | None = None) -> DataFrame:
+                        n_buckets: int = 12) -> DataFrame:
     """EXACT equi-depth histogram: rows split into ``n_buckets`` ANSI
     ntile buckets by value (unique column as tie-break → total order),
     then per-bucket (bucket, n, lo, hi) — the boundary table an
@@ -725,7 +722,7 @@ def equidepth_histogram(df: DataFrame, val_col: str, uniq_col: str, *,
     """
     b = ids.global_ntile(df.select(val_col, uniq_col),
                          [val_col, uniq_col], n_buckets,
-                         out_col="bucket", num_partitions=num_partitions)
+                         out_col="bucket")
     return (b.groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.min(val_col).alias("lo"),

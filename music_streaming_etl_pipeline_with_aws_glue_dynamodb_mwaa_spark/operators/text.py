@@ -249,36 +249,9 @@ def chunk_documents(docs: DataFrame, id_col: str, text_col: str, *,
             .filter(F.col("n_tokens") > 0))
 
 
-def _semi_flag_join(stream: DataFrame, keys: DataFrame, on: str,
-                    broadcast_keys: bool | None) -> DataFrame:
-    """Left join ``stream`` to the (distinct, single-column) ``keys`` frame
-    with an explicit join-strategy gate (round-4 VERDICT item 3):
-
-    - ``True``  → ``F.broadcast`` hint — right when the key set is known
-      small (the common case: boilerplate/duplicated grams collapse under
-      distinct);
-    - ``False`` → ``hint("shuffle_hash")`` — never builds a driver-side
-      broadcast; right at web scale with ``max_docfreq=1`` where the
-      duplicated-gram set is billions of 16-byte keys (tens of GB);
-    - ``None``  → no hint: the planner + AQE size the build side at
-      runtime and pick broadcast only when it actually fits — the
-      scale-safe default.
-    """
-    return stream.join(_gate(keys.withColumn("_drop", F.lit(True)),
-                             broadcast_keys), on, "left")
-
-
-def _gate(keys: DataFrame, broadcast_keys: bool | None) -> DataFrame:
-    if broadcast_keys is True:
-        return F.broadcast(keys)
-    if broadcast_keys is False:
-        return keys.hint("shuffle_hash")
-    return keys
-
-
 def remove_common_segments(docs: DataFrame, id_col: str, text_col: str, *,
-                           seg_tokens: int = 8, max_docfreq: int = 1,
-                           broadcast_common: bool | None = None) -> DataFrame:
+                           seg_tokens: int = 8,
+                           max_docfreq: int = 1) -> DataFrame:
     """Corpus-level boilerplate removal, CCNet/RefinedWeb-style: cut every
     non-overlapping ``seg_tokens``-token segment that appears in MORE than
     ``max_docfreq`` distinct documents (headers, footers, cookie banners —
@@ -294,10 +267,10 @@ def remove_common_segments(docs: DataFrame, id_col: str, text_col: str, *,
     1. segment explode (narrow) → docfreq hash-agg keyed by the segment's
        md5 — 128-bit key, never the multi-KB segment text;
     2. the over-frequent set comes back to the segment stream as a
-       left-semi flag whose join strategy is GATED by
-       ``broadcast_common`` (see ``_semi_flag_join``): default None lets
-       AQE runtime-size the build side — broadcast when it fits, shuffle
-       hash join when (at web scale, ``max_docfreq=1``) it's tens of GB;
+       left-join flag with no join hint: the planner and AQE size the
+       build side at runtime — broadcast when boilerplate collapses to a
+       small set, a shuffled join when (at web scale, ``max_docfreq=1``)
+       it's tens of GB;
     3. one groupBy(doc) re-assembly with an array_sort on segment index —
        order restored without an ordered shuffle.
     """
@@ -311,7 +284,7 @@ def remove_common_segments(docs: DataFrame, id_col: str, text_col: str, *,
               .agg(F.countDistinct(id_col).alias("_df"))
               .where(F.col("_df") > max_docfreq)
               .select("_h"))
-    flagged = _semi_flag_join(segs, common, "_h", broadcast_common)
+    flagged = segs.join(common.withColumn("_drop", F.lit(True)), "_h", "left")
     kept_text = F.array_join(
         F.transform(
             F.array_sort(F.collect_list(
@@ -326,8 +299,7 @@ def remove_common_segments(docs: DataFrame, id_col: str, text_col: str, *,
 
 
 def remove_duplicate_spans(docs: DataFrame, id_col: str, text_col: str, *,
-                           k: int = 6, max_docfreq: int = 1,
-                           broadcast_common: bool | None = None) -> DataFrame:
+                           k: int = 6, max_docfreq: int = 1) -> DataFrame:
     """Exact duplicated-SPAN removal at overlapping k-gram granularity
     (the Lee et al. 2022 "Deduplicating Training Data Makes Language
     Models Better" family): any token whose position is covered by a
@@ -341,10 +313,9 @@ def remove_duplicate_spans(docs: DataFrame, id_col: str, text_col: str, *,
 
     Spark-first shape: positions explode narrowly; docfreq is ONE hash
     agg on the md5 of the gram (16-byte keys, never text); the
-    over-frequent gram set joins back under the ``broadcast_common``
-    strategy gate (``_semi_flag_join`` semantics: None → AQE runtime
-    sizing; True → forced broadcast; False → shuffle hash join — the
-    web-scale path where the duplicated-gram set is unbroadcastable).
+    over-frequent gram set joins back with no join hint, so AQE sizes
+    the build side at runtime (a shuffled join at web scale, where the
+    duplicated-gram set is unbroadcastable).
     Covered positions resolve IN-ROW and LINEARLY: equal-length k-gram
     intervals over the sorted start list merge into disjoint runs with
     one indexed filter pass (run head ⇔ gap to previous start > k), and
@@ -374,7 +345,7 @@ def remove_duplicate_spans(docs: DataFrame, id_col: str, text_col: str, *,
               .agg(F.countDistinct(id_col).alias("_df"))
               .where(F.col("_df") > max_docfreq)
               .select("_h"))
-    hits = (grams.join(_gate(common, broadcast_common), "_h", "left_semi")
+    hits = (grams.join(common, "_h", "left_semi")
             .groupBy(id_col)
             .agg(F.sort_array(F.collect_set("_pos")).alias("_starts")))
     base = docs.select(id_col, toks.alias("_toks"))

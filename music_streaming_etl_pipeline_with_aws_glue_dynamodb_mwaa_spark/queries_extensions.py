@@ -927,7 +927,7 @@ def media_kind_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM media WHERE kind = 'image'
 """ % _MEDIA_FIXTURE_SQL)
 def media_resize_stamped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """resize_images fake path over the image slice: payload blob passes
+    """resize_images over the image slice: payload blob passes
     through the Arrow iterator untouched (hash-checked byte-for-byte),
     target dims stamped — the mapInPandas plumbing a real PIL resize rides.
 
@@ -935,7 +935,7 @@ def media_resize_stamped(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar-hashable by the driver's comparator; byte-for-byte passthrough is
     still what's being proven — equal digests ⇔ equal payloads."""
     imgs = _media_fixture(spark, sf_dir).filter(F.col("kind") == "image")
-    out = multimodal.resize_images(imgs, width=224, height=224, fake=True)
+    out = multimodal.resize_images(imgs, width=224, height=224)
     # sha2 over the hex encoding, not the raw blob: DuckDB 1.0's sha256 only
     # accepts VARCHAR, and hex() is uppercase on both engines.
     return out.select(
@@ -953,11 +953,11 @@ def media_resize_stamped(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE kind IN ('audio', 'video')
 """)
 def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sample_frames fake path over audio/video: metadata-driven 1:N fan-out
+    """sample_frames over audio/video: metadata-driven 1:N fan-out
     (duration_ms // interval + 1 frames) inside the Arrow iterator, frame
     stand-ins derived portably from the payload hex."""
     av = _media_fixture(spark, sf_dir).filter(F.col("kind") != "image")
-    return multimodal.sample_frames(av, frame_interval_ms=1000, fake=True)
+    return multimodal.sample_frames(av, frame_interval_ms=1000)
 
 
 @register("media_feature_extract", f"""
@@ -971,15 +971,14 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM media
 """)
 def media_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """extract_media_features fake path: bounded-memory Arrow batches emit a
+    """extract_media_features: bounded-memory Arrow batches emit a
     deterministic byte-derived feature vector (first 8 payload bytes / 255).
 
     Registered projection serializes the vector as CSV of the exact byte
     values (``round(x*255)`` recovers each 0..255 byte bit-exactly — x was
     produced by one IEEE division) so cells are scalar-hashable by the
     driver's comparator; the operator itself still returns array<double>."""
-    feats = multimodal.extract_media_features(_media_fixture(spark, sf_dir),
-                                              fake=True)
+    feats = multimodal.extract_media_features(_media_fixture(spark, sf_dir))
     return feats.select(
         "media_id", "kind", "byte_len",
         F.array_join(

@@ -38,8 +38,7 @@ def with_corrupt_col(schema: T.StructType) -> T.StructType:
 
 
 def read_csv(spark: SparkSession, path: str | list[str],
-             schema: T.StructType, *,
-             keep_corrupt: bool = True) -> DataFrame:
+             schema: T.StructType) -> DataFrame:
     """Header CSV scan with explicit schema (S1/S2).
 
     PERMISSIVE mode: rows that fail type coercion land with nulls plus the
@@ -48,7 +47,7 @@ def read_csv(spark: SparkSession, path: str | list[str],
     pandas read would raise instead).
     """
     return (
-        spark.read.schema(with_corrupt_col(schema) if keep_corrupt else schema)
+        spark.read.schema(with_corrupt_col(schema))
         .option("header", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
@@ -56,12 +55,11 @@ def read_csv(spark: SparkSession, path: str | list[str],
     )
 
 
-def write_csv(df: DataFrame, path: str, *, mode: str = "overwrite",
-              header: bool = True) -> None:
+def write_csv(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
     """Header CSV sink — the write side of S1/S2 (the reference only ever
     CONSUMES CSV; emitting it closes the round-trip so the scan path is
     oracle-checkable: queries_reference.csv_scan_roundtrip)."""
-    df.write.mode(mode).option("header", header).csv(path)
+    df.write.mode(mode).option("header", True).csv(path)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -135,8 +133,7 @@ def archive_files(paths: list[str], archive_dir: str) -> list[str]:
 
 
 def read_jsonl(spark: SparkSession, path: str | list[str],
-               schema: T.StructType, *,
-               keep_corrupt: bool = True) -> DataFrame:
+               schema: T.StructType) -> DataFrame:
     """JSON-Lines scan with explicit schema — the lingua franca of LLM
     corpus interchange (one JSON object per line, splittable, appendable).
 
@@ -152,7 +149,7 @@ def read_jsonl(spark: SparkSession, path: str | list[str],
     100 TB and can flip types between runs; the schema is the contract.
     """
     return (
-        spark.read.schema(with_corrupt_col(schema) if keep_corrupt else schema)
+        spark.read.schema(with_corrupt_col(schema))
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)

@@ -253,14 +253,17 @@ def test_fuzzy_canonicalize_min_id_wins(spark):
 
 # ------------------------------------------------- global cumsum / diff / corr
 
-def test_global_cumsum_matches_window(spark):
+def test_global_cumsum_matches_window(spark, monkeypatch):
     from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators import ids
+    from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.session import conf_override
     import random
+    monkeypatch.setattr(ids, "SMALL_N_BYTES", -1)   # two-phase path
     rng = random.Random(7)
     rows = [(i, rng.randint(1, 100)) for i in range(500)]
     df = spark.createDataFrame(rows, "k long, v long").repartition(13)
-    out = {r["k"]: r["cumsum"] for r in
-           ids.global_cumsum(df, ["k"], "v", num_partitions=7).collect()}
+    with conf_override(spark, {"spark.sql.shuffle.partitions": 7}):
+        out = {r["k"]: r["cumsum"] for r in
+               ids.global_cumsum(df, ["k"], "v").collect()}
     acc = 0
     for k, v in sorted(rows):
         acc += v

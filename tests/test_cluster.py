@@ -13,12 +13,15 @@ from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators im
 
 def _both_paths(df):
     """Run the driver union-find path AND the distributed
-    label-propagation path; assert they agree; return the result."""
+    label-propagation path (routing threshold patched to 0); assert they
+    agree; return the result."""
     a = {r["node"]: r["component"]
          for r in cluster.connected_components(df, "doc_a", "doc_b").collect()}
-    b = {r["node"]: r["component"]
-         for r in cluster.connected_components(
-             df, "doc_a", "doc_b", driver_threshold=0).collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cluster, "DRIVER_EDGES_MAX", 0)
+        b = {r["node"]: r["component"]
+             for r in cluster.connected_components(
+                 df, "doc_a", "doc_b").collect()}
     assert a == b
     return a
 

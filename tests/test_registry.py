@@ -31,11 +31,20 @@ def duck():
     return con
 
 
-def test_spark_and_oracle_columns_agree(spark, duck):
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+@pytest.fixture(scope="module")
+def oracle_schemas(spark):
+    """{name: Spark output schema} for every oracle-checked query, each
+    plan built once (analysis only, never executed) for both column
+    checks below."""
+    qs = entrymod.queries()
+    return {name: qs[name](spark, SF_SMOKE).schema
+            for name in entrymod.oracle_sql()}
+
+
+def test_spark_and_oracle_columns_agree(oracle_schemas, duck):
     mismatches = {}
-    for name, sql in oracles.items():
-        spark_cols = sorted(qs[name](spark, SF_SMOKE).columns)  # plan only
+    for name, sql in entrymod.oracle_sql().items():
+        spark_cols = sorted(oracle_schemas[name].names)
         duck_cols = sorted(r[0] for r in
                            duck.execute("DESCRIBE " + sql).fetchall())
         if spark_cols != duck_cols:
@@ -43,16 +52,14 @@ def test_spark_and_oracle_columns_agree(spark, duck):
     assert not mismatches, mismatches
 
 
-def test_no_unhashable_columns_in_oracle_checked_queries(spark):
+def test_no_unhashable_columns_in_oracle_checked_queries(oracle_schemas):
     """The driver's comparator factorizes result cells with pandas and dies
     on binary/array/map/struct values (r2: media_resize_stamped et al. ERR'd
     with `unhashable type`). Any oracle-checked query must project scalar
     cells only — digests for blobs, CSV/JSON for arrays. Analysis-only:
     builds each plan, never executes it."""
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     offenders = {}
-    for name in oracles:
-        schema = qs[name](spark, SF_SMOKE).schema
+    for name, schema in oracle_schemas.items():
         bad = [f.name for f in schema.fields
                if f.dataType.typeName() in ("binary", "array", "map", "struct")]
         if bad:

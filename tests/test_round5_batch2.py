@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators import (
     baskets, segments, skyline, spans, timeseries)
+from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.session import conf_override
 
 
 # ------------------------------------------------------ topk_neighbors ---
@@ -430,10 +431,10 @@ def test_concurrency_histogram_scaled_matches_window_path(spark):
                  for r in spans.concurrency_histogram(
                      df, "s", "e", length=lambda s, e: e - s).collect())
     for parts in (1, 3, 8):
-        got = sorted((r["level"], r["total_us"], r["n_segments"])
-                     for r in spans.concurrency_histogram(
-                         df, "s", "e", scaled=True,
-                         num_partitions=parts).collect())
+        with conf_override(spark, {"spark.sql.shuffle.partitions": parts}):
+            got = sorted((r["level"], r["total_us"], r["n_segments"])
+                         for r in spans.concurrency_histogram(
+                             df, "s", "e", scaled=True).collect())
         assert got == ref, parts
 
 
@@ -444,9 +445,10 @@ def test_concurrency_histogram_scaled_timestamps(spark):
     df = spark.createDataFrame(
         [(t0, t0 + 10 * s), (t0 + 5 * s, t0 + 15 * s)],
         "s timestamp, e timestamp")
-    got = {r["level"]: r["total_us"] for r in
-           spans.concurrency_histogram(df, "s", "e", scaled=True,
-                                       num_partitions=2).collect()}
+    with conf_override(spark, {"spark.sql.shuffle.partitions": 2}):
+        got = {r["level"]: r["total_us"] for r in
+               spans.concurrency_histogram(df, "s", "e",
+                                           scaled=True).collect()}
     assert got == {1: 10_000_000, 2: 5_000_000}
 
 
@@ -492,16 +494,12 @@ def test_concurrency_histogram_scaled_multi_arrow_batch(spark):
     ref = sorted((r["level"], r["total_us"], r["n_segments"])
                  for r in spans.concurrency_histogram(
                      df, "s", "e", length=lambda s, e: e - s).collect())
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "7")
+    with conf_override(spark, {
+            "spark.sql.execution.arrow.maxRecordsPerBatch": 7,
+            "spark.sql.shuffle.partitions": 4}):
         got = sorted((r["level"], r["total_us"], r["n_segments"])
                      for r in spans.concurrency_histogram(
-                         df, "s", "e", scaled=True,
-                         num_partitions=4).collect())
-    finally:
-        spark.conf.set(key, old)
+                         df, "s", "e", scaled=True).collect())
     assert got == ref
 
 

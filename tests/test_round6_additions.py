@@ -9,18 +9,22 @@ from pyspark.sql import functions as F
 
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators import (
     dedup,
+    ids,
     profile,
     stats,
     text,
 )
+from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.session import conf_override
 
 
 @pytest.mark.parametrize("parts", [1, 4])
-def test_equidepth_histogram_counts_and_bounds(spark, parts):
+def test_equidepth_histogram_counts_and_bounds(spark, monkeypatch, parts):
+    monkeypatch.setattr(ids, "SMALL_N_BYTES", -1)   # two-phase path
     rows = [(v, i) for i, v in enumerate([5, 1, 9, 3, 3, 7, 2, 8, 6, 4, 0])]
     df = spark.createDataFrame(rows, "v long, id long").repartition(3)
-    out = {r["bucket"]: r for r in stats.equidepth_histogram(
-        df, "v", "id", n_buckets=4, num_partitions=parts).collect()}
+    with conf_override(spark, {"spark.sql.shuffle.partitions": parts}):
+        out = {r["bucket"]: r for r in stats.equidepth_histogram(
+            df, "v", "id", n_buckets=4).collect()}
     # 11 rows, 4 buckets → sizes 3,3,3,2; contiguous value ranges
     assert [out[b]["n"] for b in (1, 2, 3, 4)] == [3, 3, 3, 2]
     ordered = sorted(rows)

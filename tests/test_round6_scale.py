@@ -29,17 +29,20 @@ from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators im
     stats,
     text,
 )
+from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.session import conf_override
 
 
 @pytest.mark.parametrize("n_rows,n_bins", [(500, 5), (501, 7), (3, 10)])
 @pytest.mark.parametrize("parts", [1, 3, 8])
-def test_global_ntile_matches_window(spark, n_rows, n_bins, parts):
+def test_global_ntile_matches_window(spark, monkeypatch, n_rows, n_bins,
+                                     parts):
+    monkeypatch.setattr(ids, "SMALL_N_BYTES", -1)   # two-phase path
     rng = random.Random(42)
     rows = [(i, rng.randint(1, 50)) for i in range(n_rows)]
     df = spark.createDataFrame(rows, "k long, v long").repartition(13)
-    got = {r["k"]: r["bucket"] for r in
-           ids.global_ntile(df, ["v", "k"], n_bins,
-                            num_partitions=parts).collect()}
+    with conf_override(spark, {"spark.sql.shuffle.partitions": parts}):
+        got = {r["k"]: r["bucket"] for r in
+               ids.global_ntile(df, ["v", "k"], n_bins).collect()}
     want = {r["k"]: r["b"] for r in df.select(
         "k", F.ntile(n_bins).over(Window.orderBy("v", "k")).alias("b"))
         .collect()}
@@ -47,13 +50,15 @@ def test_global_ntile_matches_window(spark, n_rows, n_bins, parts):
 
 
 @pytest.mark.parametrize("parts", [1, 3, 8])
-def test_global_cumsums_two_measures(spark, parts):
+def test_global_cumsums_two_measures(spark, monkeypatch, parts):
+    monkeypatch.setattr(ids, "SMALL_N_BYTES", -1)   # two-phase path
     rng = random.Random(9)
     rows = [(i, rng.randint(0, 9), rng.randint(0, 9)) for i in range(400)]
     df = spark.createDataFrame(rows, "k long, a long, b long").repartition(11)
-    out = {r["k"]: (r["ca"], r["cb"]) for r in
-           ids.global_cumsums(df, ["k"], ["a", "b"], ["ca", "cb"],
-                              num_partitions=parts).collect()}
+    with conf_override(spark, {"spark.sql.shuffle.partitions": parts}):
+        out = {r["k"]: (r["ca"], r["cb"]) for r in
+               ids.global_cumsums(df, ["k"], ["a", "b"],
+                                  ["ca", "cb"]).collect()}
     aa = bb = 0
     for k, a, b in sorted(rows):
         aa += a
@@ -62,13 +67,15 @@ def test_global_cumsums_two_measures(spark, parts):
 
 
 @pytest.mark.parametrize("parts", [1, 3, 8])
-def test_ks_two_sample_partition_invariant(spark, parts):
+def test_ks_two_sample_partition_invariant(spark, monkeypatch, parts):
+    monkeypatch.setattr(ids, "SMALL_N_BYTES", -1)   # two-phase path
     rng = random.Random(5)
     rows = [("a" if rng.random() < 0.5 else "b",
              rng.randint(0, 40)) for _ in range(600)]
     df = spark.createDataFrame(rows, "g string, v long").repartition(9)
-    row = stats.ks_two_sample(df, "g", "v", group_a="a", group_b="b",
-                              num_partitions=parts).collect()[0]
+    with conf_override(spark, {"spark.sql.shuffle.partitions": parts}):
+        row = stats.ks_two_sample(df, "g", "v", group_a="a",
+                                  group_b="b").collect()[0]
     # brute-force reference
     av = sorted(v for g, v in rows if g == "a")
     bv = sorted(v for g, v in rows if g == "b")
@@ -97,7 +104,8 @@ def test_ks_two_sample_tie_takes_smallest_value(spark):
 
 
 @pytest.mark.parametrize("parts", [1, 3, 8])
-def test_rfm_scores_match_window_ntile(spark, parts):
+def test_rfm_scores_match_window_ntile(spark, monkeypatch, parts):
+    monkeypatch.setattr(ids, "SMALL_N_BYTES", -1)   # two-phase path
     rng = random.Random(3)
     rows = [(k, f"2024-01-{rng.randint(1, 28):02d}",
              rng.randint(100, 9999)) for k in range(97)]
@@ -105,9 +113,9 @@ def test_rfm_scores_match_window_ntile(spark, parts):
         .select("ck", F.col("d").cast("date").alias("d"), "cents") \
         .repartition(7)
     # the sweep varies the RANGE partition count inside the three
-    # global_ntile calls (round-6 ADVICE: the parameter was unused)
-    got = segments.rfm_scores(od, "ck", "d", F.col("cents"),
-                              num_partitions=parts)
+    # global_ntile calls (each range-sorts eagerly, inside the override)
+    with conf_override(spark, {"spark.sql.shuffle.partitions": parts}):
+        got = segments.rfm_scores(od, "ck", "d", F.col("cents"))
     # window-ntile reference on the same metric frame
     m = got.select("ck", "recency_days", "frequency", "monetary_cents")
     r_w = Window.orderBy(F.col("recency_days").desc(), F.col("ck"))

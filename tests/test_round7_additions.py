@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark import queries_extensions as qx
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators import ids
+from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.session import conf_override
 
 from .conftest import SF_SMOKE
 
@@ -37,8 +38,8 @@ def test_cast_semantics_audit_pins(spark):
 
 
 def test_ids_small_frames_take_the_window_path(spark):
-    """Below the planner-stats threshold (and with no explicit
-    num_partitions) the helpers must plan a plain window — no range
+    """Below the planner-stats threshold the helpers must plan a plain
+    window — no range
     exchange, no mapInPandas. Must be a PARQUET-derived frame: local
     relations / checkpointed RDDs report unknown stats (Long.MaxValue)
     and deliberately route to the two-phase path."""
@@ -61,18 +62,24 @@ def test_ids_unknown_stats_route_to_two_phase(spark):
     assert "Window" not in plan
 
 
-def test_ids_explicit_partitions_force_two_phase(spark):
-    """An explicit num_partitions always takes the range-partition
-    two-phase machinery regardless of size — and matches the window
-    form exactly."""
+def test_ids_forced_two_phase_matches_window(spark, monkeypatch):
+    """With the size threshold patched below any frame, the helpers take
+    the range-partition two-phase machinery at 3 and at the default
+    partition count, and match the window form exactly."""
     df = spark.createDataFrame([(i, (i * 13) % 29) for i in range(97)],
                                "k long, v long")
-    two = {r["k"]: r["b"] for r in
-           ids.global_ntile(df, ["v", "k"], 5, out_col="b",
-                            num_partitions=3).collect()}
-    win = {r["k"]: r["b"] for r in
-           ids.global_ntile(df, ["v", "k"], 5, out_col="b").collect()}
-    assert two == win
+
+    def buckets():
+        return {r["k"]: r["b"] for r in
+                ids.global_ntile(df, ["v", "k"], 5, out_col="b").collect()}
+
+    monkeypatch.setattr(ids, "SMALL_N_BYTES", -1)
+    with conf_override(spark, {"spark.sql.shuffle.partitions": 3}):
+        two = buckets()
+    two_default = buckets()
+    monkeypatch.setattr(ids, "SMALL_N_BYTES", 1 << 63)
+    win = buckets()
+    assert two == two_default == win
 
 
 def test_ids_cumsum_window_path_totals(spark):

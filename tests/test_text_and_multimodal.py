@@ -43,20 +43,13 @@ def test_fingerprint_whitespace_invariant(spark):
 def test_media_plumbing_fake_features(spark):
     docs = spark.createDataFrame([(1, "hello"), (2, "")], "doc_id long, text string")
     media = multimodal.media_from_documents(docs)
-    feats = multimodal.extract_media_features(media, fake=True).collect()
+    feats = multimodal.extract_media_features(media).collect()
     by_id = {r["media_id"]: r for r in feats}
     assert by_id[1]["byte_len"] == 5
     assert by_id[1]["content_md5"] == hashlib.md5(b"hello").hexdigest()
     assert len(by_id[1]["feature"]) == multimodal.FEATURE_DIM
     assert by_id[1]["feature"][0] == pytest.approx(ord("h") / 255.0)
     assert by_id[2]["byte_len"] == 0  # empty payload survives the batch path
-
-
-def test_media_real_decode_is_stubbed(spark):
-    docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    media = multimodal.media_from_documents(docs)
-    with pytest.raises(Exception, match="no decoder"):
-        multimodal.extract_media_features(media, fake=False).collect()
 
 
 def test_media_byte_stats_no_payload_deserialization(spark):
@@ -70,9 +63,9 @@ def test_resize_images_fake_path(spark):
     docs = spark.createDataFrame([(1, "abcd"), (2, "xy")], "doc_id long, text string")
     media = multimodal.media_from_documents(docs)
     out = {r["media_id"]: r for r in
-           multimodal.resize_images(media, width=64, height=48, fake=True).collect()}
+           multimodal.resize_images(media, width=64, height=48).collect()}
     assert (out[1]["width"], out[1]["height"]) == (64, 48)
-    assert bytes(out[1]["payload"]) == b"abcd"  # fake path passes bytes through
+    assert bytes(out[1]["payload"]) == b"abcd"  # bytes pass through
     assert set(out) == {1, 2}
 
 
@@ -84,7 +77,7 @@ def test_sample_frames_fanout_from_duration(spark):
          (2, "image", b"ii", "image/png", 8, 8, None)],
         "media_id long, kind string, payload binary, mime string, "
         "width int, height int, duration_ms long")
-    rows = multimodal.sample_frames(media, frame_interval_ms=100, fake=True).collect()
+    rows = multimodal.sample_frames(media, frame_interval_ms=100).collect()
     by_media = {}
     for r in rows:
         by_media.setdefault(r["media_id"], []).append((r["frame_idx"], r["ts_ms"]))
@@ -95,15 +88,6 @@ def test_sample_frames_fanout_from_duration(spark):
     frames = {(r["media_id"], r["frame_idx"]): r["frame"] for r in rows}
     assert frames[(1, 0)] == hashlib.md5(b"7676:0").hexdigest()
     assert frames[(1, 2)] == hashlib.md5(b"7676:2").hexdigest()
-
-
-def test_sample_frames_real_decode_is_stubbed(spark):
-    media = spark.createDataFrame(
-        [(1, "video", b"vv", "video/mp4", None, None, 100)],
-        "media_id long, kind string, payload binary, mime string, "
-        "width int, height int, duration_ms long")
-    with pytest.raises(Exception, match="no decoder"):
-        multimodal.sample_frames(media, frame_interval_ms=50, fake=False).collect()
 
 
 def test_winnowing_shared_substring_guarantee(spark):

@@ -244,10 +244,10 @@ def main() -> int:
     orig_gate = ids._take_window_path
     gate_state = {"window_hits": 0, "force_scale": False}
 
-    def _tracking_gate(df, num_partitions, order_cols=None):
+    def _tracking_gate(df, order_cols):
         if gate_state["force_scale"]:
             return False
-        took = orig_gate(df, num_partitions, order_cols)
+        took = orig_gate(df, order_cols)
         gate_state["window_hits"] += took
         return took
 
