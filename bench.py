@@ -81,8 +81,9 @@ def _njobs(sc) -> int:
 def _worker(out_path: str) -> None:
     """ONE fresh-JVM batch: warmup, then a single timed pass over the
     registry (optionally restricted via $SPARK_GRAFT_BENCH_ONLY), with
-    cache hygiene between queries. Writes {queries, phases, env} JSON."""
+    one materialize scope per query. Writes {queries, phases, env} JSON."""
     import __spark_entry__ as entrymod
+    from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.materialize import scope
     from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.session import get_spark
     from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.sources import catalog
 
@@ -103,8 +104,9 @@ def _worker(out_path: str) -> None:
     _wq = entrymod._ANCHORS[0] if getattr(entrymod, "_ANCHORS", None) \
         else next(iter(entrymod.queries()))
     _t0 = time.perf_counter()
-    entrymod.queries()[_wq](spark, sf_dir) \
-        .write.format("noop").mode("overwrite").save()
+    with scope():
+        entrymod.queries()[_wq](spark, sf_dir) \
+            .write.format("noop").mode("overwrite").save()
     env["warmup_query"] = _wq
     env["warmup_secs"] = round(time.perf_counter() - _t0, 3)
     # ...and ONE untimed streaming drain (round-11, VERDICT r10 item 3):
@@ -190,7 +192,6 @@ def _worker(out_path: str) -> None:
     except Exception:  # pragma: no cover — datasource API unavailable
         pass
     env["warmup_python_secs"] = round(time.perf_counter() - _t0, 3)
-    spark.catalog.clearCache()
 
     items = list(entrymod.queries().items())
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")  # subset hook (also
@@ -202,42 +203,33 @@ def _worker(out_path: str) -> None:
     times: dict[str, float] = {}
     phases: dict[str, dict] = {}
     for name, fn in items:
-        # job counts are read outside the timed spans
-        sc.setJobDescription(f"bench:{name}:build")
-        j0 = _njobs(sc)
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        build = time.perf_counter() - t0
-        j1 = _njobs(sc)
-        sc.setJobDescription(f"bench:{name}:exec")
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        exec_ = time.perf_counter() - t0
-        j2 = _njobs(sc)
-        del df  # drop its py4j handle before the blocks are released below
-        sc.setJobDescription(None)
+        # One scope per query: on exit it releases every frame the build
+        # materialized, so no query's stored blocks slow a later one
+        # (measured round 12: 160 MB of leftover checkpoint blocks made
+        # later Python-worker queries 1.3-1.8x slower in-suite). Job
+        # counts are read outside the timed spans.
+        with scope():
+            sc.setJobDescription(f"bench:{name}:build")
+            j0 = _njobs(sc)
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            build = time.perf_counter() - t0
+            j1 = _njobs(sc)
+            sc.setJobDescription(f"bench:{name}:exec")
+            t0 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            exec_ = time.perf_counter() - t0
+            j2 = _njobs(sc)
+            del df
+            sc.setJobDescription(None)
         times[name] = round(build + exec_, 3)
         phases[name] = {"build_s": round(build, 3), "exec_s": round(exec_, 3),
                         "jobs_build": j1 - j0, "jobs_exec": j2 - j1}
-        # JVM-state hygiene BETWEEN measurements (untimed): queries that
-        # persist() intermediates or register memory-sink temp views
-        # would otherwise accumulate cached blocks across a full pass —
-        # measured effect: end-of-pass GC stalls and 2-8x inflation of
-        # later shuffle-heavy queries.
-        spark.catalog.clearCache()
+        # memory-sink temp views would otherwise accumulate across a
+        # full pass (untimed)
         for t in spark.catalog.listTables():
             if t.name.startswith("_") and t.isTemporary:
                 spark.catalog.dropTempView(t.name)
-        # ...and lazy localCheckpoint RDD blocks, which clearCache does
-        # NOT touch (they are plain RDD cache blocks, otherwise freed by
-        # the ContextCleaner only once their JVM refs are collected).
-        # Measured round 12: 7 ckpt'd-postings queries left 160 MB of
-        # blocks behind clearCache, inflating LATER Python-worker
-        # queries 1.3-1.8x in-suite. No frame outlives its query (module
-        # memos hold Python values only), so every RDD still persisted
-        # here is garbage: release it now rather than wait for a GC.
-        for rdd in sc._jsc.getPersistentRDDs().values():
-            rdd.unpersist(True)
     env["load_avg_1m_end"] = round(os.getloadavg()[0], 2)
     with open(out_path, "w") as fh:
         json.dump({"queries": times, "phases": phases, "env": env}, fh)

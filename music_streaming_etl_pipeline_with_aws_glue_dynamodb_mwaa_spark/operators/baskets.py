@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 
 def pair_support(df: DataFrame, basket_col: str, item_col: str, *,
                  min_support: int = 2,
@@ -101,7 +103,7 @@ def topk_neighbors(pairs: DataFrame, *, k: int = 3) -> DataFrame:
     # symmetrizing union would otherwise each re-execute the entire
     # pair-mining subtree (distinct + support join + within-basket
     # self-join) feeding this operator.
-    pairs = pairs.localCheckpoint()
+    pairs = materialize(pairs)
     fwd = pairs.select(F.col("item_a").alias("item"),
                        F.col("item_b").alias("neighbor"),
                        "n_pair", "n_a", "n_b")
@@ -131,7 +133,7 @@ def association_rules(pairs: DataFrame, *, min_confidence: float = 0.0,
     are single IEEE divisions of exact longs. ``min_confidence`` prunes
     AFTER the exact ratio — no float feeds a join or grouping.
     """
-    pairs = pairs.localCheckpoint()
+    pairs = materialize(pairs)
     fwd = pairs.select(F.col("item_a").alias("antecedent"),
                        F.col("item_b").alias("consequent"),
                        "n_pair", F.col("n_a").alias("n_antecedent"),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text_funcs import tokens
+from ..materialize import materialize
 
 #: end-of-word marker, appended as a separate final symbol so merges
 #: can't cross word boundaries and word-final units stay distinct
@@ -139,11 +140,10 @@ def learn_bpe(docs: DataFrame, text_col: str = "text", *,
         if len(head) <= driver_vocab_max:
             return _learn_bpe_local({r["word"]: r["count"] for r in head},
                                     n_merges, min_pair_count)
-    vocab = (counts_df
-             .withColumn("_syms",
-                         F.concat(F.split(F.col("word"), ""),
-                                  F.array(F.lit(EOW))))
-             .localCheckpoint())
+    vocab = materialize(counts_df
+                        .withColumn("_syms",
+                                    F.concat(F.split(F.col("word"), ""),
+                                             F.array(F.lit(EOW)))))
     merges: list[dict] = []
     for step in range(n_merges):
         best = (_pair_counts(vocab)
@@ -156,7 +156,7 @@ def learn_bpe(docs: DataFrame, text_col: str = "text", *,
                        "pair_count": cnt})
         # EAGER checkpoint: round k's plan must be one rewrite over a leaf,
         # not k nested rewrites (pagerank/cluster loop discipline)
-        vocab = _apply_merge(vocab, a, b).localCheckpoint()
+        vocab = materialize(_apply_merge(vocab, a, b))
     return merges
 
 
@@ -219,7 +219,7 @@ def encode_words(words: DataFrame, merges: list[dict], *,
     for i, m in enumerate(merges):
         enc = _apply_merge(enc, m["left"], m["right"])
         if (i + 1) % checkpoint_every == 0:
-            enc = enc.localCheckpoint()
+            enc = materialize(enc)
     return enc.select("word", F.col("_syms").alias("pieces"))
 
 
@@ -243,7 +243,7 @@ def encode_docs(docs: DataFrame, merges: list[dict], *,
         .filter(F.col("word") != "")
     # EAGER: the vocab feeds both the size probe and the join — one
     # materialization, not a replay of the merge folds per consumer
-    vocab = encode_words(toks.select("word"), merges).localCheckpoint()
+    vocab = materialize(encode_words(toks.select("word"), merges))
     if vocab.count() <= BROADCAST_VOCAB_MAX:
         vocab = F.broadcast(vocab)
     return toks.join(vocab, "word").select(id_col, "pos", "word", "pieces")

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 
 #: an edge list at or under this many rows (after symmetrization) is
 #: solved on the driver; above it, distributed label propagation.
@@ -61,9 +63,9 @@ def connected_components(pairs: DataFrame, src: str, dst: str, *,
     route.
     """
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = (e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-         .distinct()
-         .localCheckpoint(eager=False))     # materialize edges once, reuse per round
+    e = materialize(   # edges materialized once, reused per round
+        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .distinct(), eager=False)
 
     if e.count() <= DRIVER_EDGES_MAX:
         rows = e.collect()
@@ -98,9 +100,8 @@ def connected_components(pairs: DataFrame, src: str, dst: str, *,
         return F.broadcast(
             pairs.sparkSession.createDataFrame(out, schema))
 
-    labels = (e.select("u").distinct()
-              .withColumn("comp", F.col("u"))
-              .localCheckpoint(eager=False))
+    labels = materialize(e.select("u").distinct()
+                         .withColumn("comp", F.col("u")), eager=False)
     # Convergence probe: every per-node label only ever DECREASES (min of a
     # set containing itself), so sum(comp) is strictly decreasing iff any
     # label changed — a single-stage aggregate over the checkpointed
@@ -116,9 +117,9 @@ def connected_components(pairs: DataFrame, src: str, dst: str, *,
                                     F.coalesce("_ncomp", "comp")).alias("comp")))
         # pointer jumping: follow the label one extra hop (comp ← comp's comp)
         hop = new.select(F.col("u").alias("comp"), F.col("comp").alias("_c2"))
-        new = (new.join(hop, "comp", "left")
-               .select("u", F.coalesce("_c2", "comp").alias("comp"))
-               .localCheckpoint())          # eager: cut lineage per round
+        new = materialize(      # eager: cut lineage per round
+            new.join(hop, "comp", "left")
+            .select("u", F.coalesce("_c2", "comp").alias("comp")))
         labels = new
         cur_sum = new.agg(F.sum("comp")).first()[0]
         if cur_sum == prev_sum:

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .dedup import dedup_exact, ngram_jaccard_pairs
 from .text import quality_keep
 
@@ -40,10 +41,11 @@ def build_corpus(docs: DataFrame, *, id_col: str = "doc_id",
     to FIVE consumers — the Jaccard join's two postings sides + docfreq, the
     exact verification re-shingling, and the final anti-join. Without a
     materialization barrier Catalyst re-executes the gate→join→window-dedup
-    subtree (which contains a shuffle) once per consumer. ``localCheckpoint
-    (eager=False)`` computes it exactly once on first use and serves the
-    other consumers from executor-local blocks — the blocks are freed by the
-    ContextCleaner when the plan is GC'd, so callers need no unpersist hook.
+    subtree (which contains a shuffle) once per consumer. A lazy
+    ``materialize`` computes it exactly once on first use and serves the
+    other consumers from executor-local blocks; they live as long as the
+    caller's ``materialize.scope()``, or until the ContextCleaner frees
+    them when the caller opened none.
     At cluster scale prefer writing ``uniq`` to a lake checkpoint instead;
     the flag exists so tests can pin result-equality of both paths.
     """
@@ -56,7 +58,7 @@ def build_corpus(docs: DataFrame, *, id_col: str = "doc_id",
                                     max_tokens=max_tokens))
     uniq = dedup_exact(kept, [text_col], [id_col])
     if materialize_fanout:
-        uniq = uniq.localCheckpoint(eager=False)
+        uniq = materialize(uniq, eager=False)
     losers = (
         ngram_jaccard_pairs(uniq, id_col, text_col, n=n,
                             threshold=jaccard_threshold)
@@ -78,23 +80,19 @@ def build_corpus_transitive(docs: DataFrame, *, id_col: str = "doc_id",
     jaccard join; only the pruning rule differs (documented divergence in
     build_corpus's docstring, resolved here)."""
     from . import cluster as _cluster
-    from .dedup import dedup_exact, ngram_jaccard_pairs, postings_cache_scope
+    from .dedup import dedup_exact, ngram_jaccard_pairs
     from .text import quality_keep
 
     # row-local quality gate (round 12, see build_corpus): predicate on the
     # scan instead of a docs⋈ids self-join
     kept = docs.filter(quality_keep(text_col, min_tokens=min_tokens,
                                     max_tokens=max_tokens))
-    uniq = dedup_exact(kept, [text_col], [id_col]) \
-        .localCheckpoint(eager=False)
-    # scope-released postings (round-12, VERDICT r11 item 4): the CC
-    # stage inside dedup_clusters forces the pair frame eagerly, so on
-    # exit the persist()-routed postings have served every consumer and
-    # the returned plan references only the CC label leaf + uniq
-    with postings_cache_scope():
-        pairs = ngram_jaccard_pairs(uniq, id_col, text_col, n=n,
-                                    threshold=jaccard_threshold)
-        return _cluster.dedup_clusters(uniq, pairs, id_col)
+    uniq = materialize(dedup_exact(kept, [text_col], [id_col]), eager=False)
+    # the returned plan reads uniq, so this function opens no scope: its
+    # intermediates live as long as the caller's (materialize.py)
+    pairs = ngram_jaccard_pairs(uniq, id_col, text_col, n=n,
+                                threshold=jaccard_threshold)
+    return _cluster.dedup_clusters(uniq, pairs, id_col)
 
 
 def curation_pipeline(docs: DataFrame, benchmark: DataFrame | None = None,
@@ -133,11 +131,7 @@ def curation_pipeline(docs: DataFrame, benchmark: DataFrame | None = None,
     """
     from .classify import quality_classifier
     from .cluster import dedup_clusters, with_cluster_ids
-    from .dedup import (
-        dedup_exact,
-        ngram_jaccard_pairs,
-        postings_cache_scope,
-    )
+    from .dedup import dedup_exact, ngram_jaccard_pairs
     from .packing import shard_by_token_budget
     from .repetition import repetition_gate
     from .sampling import hash_split
@@ -156,28 +150,23 @@ def curation_pipeline(docs: DataFrame, benchmark: DataFrame | None = None,
                                  text_col=text_col) \
             .filter("keep").select(id_col)
         kept = kept.join(cls, id_col)
-    uniq = dedup_exact(kept, [text_col], [id_col]) \
-        .localCheckpoint(eager=False)
-    # scope-released postings (round-12, VERDICT r11 item 4): both
-    # near-dup stages' persist()-routed postings are fully consumed by
-    # the eager CC inside dedup_clusters / cluster_assignments, so a
-    # long-lived session running many curation builds accumulates no
-    # InMemoryRelations — the returned plan holds only CC label leaves
-    with postings_cache_scope():
-        pairs = ngram_jaccard_pairs(uniq, id_col, text_col, n=3,
-                                    threshold=jaccard_threshold)
-        reps = dedup_clusters(uniq, pairs, id_col) \
-            .localCheckpoint(eager=False)
-        if benchmark is not None:
-            reps = decontaminate(reps, benchmark, id_col=id_col,
-                                 text_col=text_col)
-        pairs_split = ngram_jaccard_pairs(reps, id_col, text_col, n=3,
-                                          threshold=split_jaccard_threshold)
-        # leakage_safe_split semantics with the assignments re-join elided
-        # (round 12): with_cluster_ids carries the full reps row next to
-        # its component, so the split label attaches without joining the
-        # (id, component) frame back onto reps a second time
-        labeled = with_cluster_ids(reps, pairs_split, id_col)
+    uniq = materialize(dedup_exact(kept, [text_col], [id_col]), eager=False)
+    # the returned plan reads reps and the CC label leaves, so this
+    # function opens no scope: its intermediates live as long as the
+    # caller's (materialize.py)
+    pairs = ngram_jaccard_pairs(uniq, id_col, text_col, n=3,
+                                threshold=jaccard_threshold)
+    reps = materialize(dedup_clusters(uniq, pairs, id_col), eager=False)
+    if benchmark is not None:
+        reps = decontaminate(reps, benchmark, id_col=id_col,
+                             text_col=text_col)
+    pairs_split = ngram_jaccard_pairs(reps, id_col, text_col, n=3,
+                                      threshold=split_jaccard_threshold)
+    # leakage_safe_split semantics with the assignments re-join elided
+    # (round 12): with_cluster_ids carries the full reps row next to
+    # its component, so the split label attaches without joining the
+    # (id, component) frame back onto reps a second time
+    labeled = with_cluster_ids(reps, pairs_split, id_col)
     out = hash_split(labeled, "component",
                      train_pct=split_pcts[0], val_pct=split_pcts[1])
     if shard_tokens is not None:
@@ -249,8 +238,7 @@ def curation_funnel(docs: DataFrame, *, id_col: str = "doc_id",
     keep = quality_keep(text_col, min_tokens=min_tokens,
                         max_tokens=max_tokens)
     kept = docs.filter(keep)
-    uniq = dedup_exact(kept, [text_col], [id_col]) \
-        .localCheckpoint(eager=False)
+    uniq = materialize(dedup_exact(kept, [text_col], [id_col]), eager=False)
     losers = (ngram_jaccard_pairs(uniq, id_col, text_col, n=n,
                                   threshold=jaccard_threshold)
               .select(F.col("doc_b").alias(id_col)).distinct())

@@ -35,6 +35,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .ids import global_row_numbers
 from .ranking import _ngrams
 from .sampling import hash_bucket
@@ -68,13 +69,13 @@ def dsir_weights(raw: DataFrame, target: DataFrame, *,
     # explode runs ONCE, not per consumer (the lazy-reuse trap documented
     # in operators/graph.py). The target stream has one consumer; its
     # total comes from the B-row counts aggregate, not a second scan.
-    rb = _gram_buckets(raw, id_col, text_col, n=n,
-                       buckets=buckets).localCheckpoint()
+    rb = materialize(_gram_buckets(raw, id_col, text_col, n=n,
+                                   buckets=buckets))
     tb = _gram_buckets(target, id_col, text_col, n=n, buckets=buckets)
 
     def dist(b: DataFrame) -> DataFrame:
-        counts = (b.groupBy("_b").agg(F.count(F.lit(1)).alias("_c"))
-                  .localCheckpoint())           # B rows — tiny
+        counts = materialize(   # B rows — tiny
+            b.groupBy("_b").agg(F.count(F.lit(1)).alias("_c")))
         total = counts.agg(F.sum("_c")).first()[0] or 0
         # add-smoothing categorical over ALL buckets: missing buckets get
         # the smoothing mass via the full join below

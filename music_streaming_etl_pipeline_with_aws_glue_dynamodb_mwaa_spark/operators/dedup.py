@@ -20,7 +20,6 @@ mandated by BASELINE.json, built Spark-first.
 
 from __future__ import annotations
 
-import contextlib as _contextlib
 import hashlib
 import math
 from collections import Counter
@@ -32,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from ..functions.text_funcs import shingles, tokens
+from ..materialize import materialize
 
 #: Size-routing point, from the round-10 fresh-JVM A/B on the FULL
 #: ngram_jaccard_pairs query (identical 25600/2560 output pairs on every
@@ -47,59 +47,11 @@ from ..functions.text_funcs import shingles, tokens
 #: ride the scale form (persist read 11.5s vs ckpt's 10.6s at sf1,
 #: noise-level, and 2x better at sf10), while the sf0.1 bench keeps the
 #: small form that wins there; estimate-unknown defaults huge →
-#: persist, the form that survives scale.
+#: persist, the form that survives scale. Inside a ``materialize.scope()``
+#: either form lives until the scope exits; without one the columnar
+#: form is unavailable and postings of any size take the checkpoint form
+#: (materialize.py).
 _POSTINGS_PERSIST_MIN_BYTES = 1 << 20
-
-#: Live handles of postings frames routed through the persist() branch of
-#: _materialize_postings. Unlike the localCheckpoint RDD blocks (freed by
-#: the ContextCleaner as soon as the RDD is unreferenced), a cached
-#: InMemoryRelation stays registered in the session's CacheManager until
-#: explicitly unpersisted — repeated jaccard/containment calls in a
-#: long-lived session would otherwise accumulate storage memory (round-10
-#: ADVICE). Callers that run many dedup queries per session should call
-#: :func:`release_cached_postings` after each candidate frame has been
-#: fully consumed (bench workers get the same effect via clearCache()).
-_CACHED_POSTINGS: list[DataFrame] = []
-
-
-#: FIFO bound on the persist()-routed postings registry (round-12,
-#: VERDICT r11 item 4): a long-lived library session issuing many bare
-#: pair queries (whose lazy result frames the library never gets to see
-#: consumed) still cannot accumulate InMemoryRelations without bound —
-#: above the cap the OLDEST frame is unpersisted, which is at worst a
-#: recompute for a plan still holding it (correctness unaffected) and in
-#: practice a no-op: by the time 8 newer postings frames exist, the old
-#: query's action has long since run.
-_POSTINGS_CACHE_MAX = 8
-
-
-def release_cached_postings() -> int:
-    """Unpersist every postings frame cached by _materialize_postings'
-    persist() branch and return how many were released. Safe to call at
-    any time: unpersist() on a frame mid-consumption only drops the cache
-    (consumers recompute), never correctness."""
-    n = len(_CACHED_POSTINGS)
-    while _CACHED_POSTINGS:
-        _CACHED_POSTINGS.pop().unpersist()
-    return n
-
-
-@_contextlib.contextmanager
-def postings_cache_scope():
-    """Scope-bound postings-cache lifecycle (round-12, VERDICT r11 item
-    4): frames cached by _materialize_postings WITHIN the ``with`` block
-    are unpersisted on exit; frames cached before it (another in-flight
-    query's) are left alone. Safe for any caller whose postings consumers
-    all run eagerly inside the scope — corpus.curation_pipeline and
-    build_corpus_transitive qualify because their connected-components
-    stage forces the pair frames (cluster.py edge count/collect) before
-    returning."""
-    mark = len(_CACHED_POSTINGS)
-    try:
-        yield
-    finally:
-        while len(_CACHED_POSTINGS) > mark:
-            _CACHED_POSTINGS.pop().unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -151,23 +103,16 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
 
 def _materialize_postings(sh: DataFrame) -> DataFrame:
     """Materialize a multi-consumer postings stream by size (see
-    _POSTINGS_PERSIST_MIN_BYTES for the A/B evidence): RDD localCheckpoint
-    under the threshold, columnar persist() above it, identical output
+    _POSTINGS_PERSIST_MIN_BYTES for the A/B evidence): a lazy checkpoint
+    under the threshold, the columnar cache above it, identical output
     either way. Shared by the jaccard and containment candidate
-    generators.
-
-    Lifecycle: the persist() branch registers the frame in
-    _CACHED_POSTINGS — session-lifetime storage unless the caller
-    releases it via :func:`release_cached_postings` (see that docstring
-    for why the ckpt branch needs no such hook)."""
+    generators. The columnar form holds only inside a
+    ``materialize.scope()``, which releases it on exit; an unscoped call
+    takes the checkpoint form at any size."""
     from .ids import _est_bytes
-    if _est_bytes(sh) < _POSTINGS_PERSIST_MIN_BYTES:
-        return sh.localCheckpoint(eager=False)
-    out = sh.persist()
-    _CACHED_POSTINGS.append(out)
-    while len(_CACHED_POSTINGS) > _POSTINGS_CACHE_MAX:
-        _CACHED_POSTINGS.pop(0).unpersist()  # FIFO bound, see above
-    return out
+    return materialize(
+        sh, eager=False,
+        columnar=_est_bytes(sh) >= _POSTINGS_PERSIST_MIN_BYTES)
 
 
 def _exact_jaccard_for_pairs(candidates: DataFrame, df: DataFrame,
@@ -996,10 +941,10 @@ def bow_cosine_pairs_dense(df: DataFrame, id_col: str, text_col: str, *,
     documented there.
     """
     spark = df.sparkSession
-    tf = (df.select(F.col(id_col).alias("_id"),
-                    F.explode(tokens(text_col)).alias("_t"))
-          .groupBy("_id", "_t").agg(F.count(F.lit(1)).alias("_tf"))
-          .localCheckpoint())          # read 3× below: vocab, n, vectors
+    tf = materialize(           # read 3× below: vocab, n, vectors
+        df.select(F.col(id_col).alias("_id"),
+                  F.explode(tokens(text_col)).alias("_t"))
+        .groupBy("_id", "_t").agg(F.count(F.lit(1)).alias("_tf")))
     vocab = (tf.select("_t").distinct()
              .withColumn("_ti", F.row_number().over(
                  Window.orderBy("_t")) - 1))
@@ -1253,7 +1198,7 @@ def grouped_minhash_similarity(df: DataFrame, group_col: str, text_col: str,
     re-run the full shingle scan (verified in the physical plan)."""
     sig = grouped_minhash_signatures(df, group_col, text_col,
                                      n=n, num_hashes=num_hashes)
-    sig = sig.localCheckpoint(eager=True)
+    sig = materialize(sig)
     a = sig.select(F.col(group_col).alias("ga"), "i", "h")
     b = sig.select(F.col(group_col).alias("gb"), "i", "h")
     return (

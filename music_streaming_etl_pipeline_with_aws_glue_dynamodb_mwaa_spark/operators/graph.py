@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 #: below this node count the per-round rank frame (~16 B/node) is
 #: broadcast to the links join — a few MB beats a 2-sided shuffle of the
 #: edge frame every round. Web-scale graphs blow past it and fall back to
@@ -85,47 +87,45 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
     # consumer — edges.distinct() alone has four consumers (nodes, out-
     # degrees, the links join, the dangling probe), and re-running a fact-
     # sized distinct four times dominated the operator's wall time.
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .distinct().localCheckpoint())
+    e = materialize(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .distinct())
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
     if symmetric:
-        nodes = (out_deg.select(F.col("src").alias("node"))
-                 .localCheckpoint())
+        nodes = materialize(out_deg.select(F.col("src").alias("node")))
     else:
-        nodes = (e.select(F.col("src").alias("node"))
-                 .union(e.select("dst")).distinct()
-                 .localCheckpoint())
+        nodes = materialize(e.select(F.col("src").alias("node"))
+                            .union(e.select("dst")).distinct())
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
     broadcast_ranks = n <= BROADCAST_NODES_MAX
 
-    links = (e.join(out_deg, "src")
-             .select("src", "dst", (F.lit(1.0) / F.col("_deg")).alias("_w"))
-             .localCheckpoint())
+    links = materialize(
+        e.join(out_deg, "src")
+        .select("src", "dst", (F.lit(1.0) / F.col("_deg")).alias("_w")))
     if symmetric:
         has_dangling, dangling, zero_in = False, None, None
     else:
         # dangling = nodes that never appear as src; EAGER — consumed by
         # the has_dangling probe now and by every round's mass aggregate
         # later (≥2 consumers across separate actions ⇒ materialize once)
-        dangling = nodes.join(links.select("src").distinct(),
-                              nodes["node"] == F.col("src"), "left_anti") \
-                        .localCheckpoint()
+        dangling = materialize(
+            nodes.join(links.select("src").distinct(),
+                       nodes["node"] == F.col("src"), "left_anti"))
         has_dangling = dangling.limit(1).count() > 0
         # zero_in = nodes with no in-edges — STATIC across rounds, so
         # hoist it out of the loop: each round then rebuilds ranks as
         # (transformed contribs) ∪ (zero_in at the teleport floor)
         # instead of re-joining the full node set against contribs.
-        zero_in = nodes.join(links.select(F.col("dst").alias("node"))
-                             .distinct(), "node", "left_anti") \
-                       .localCheckpoint()
+        zero_in = materialize(
+            nodes.join(links.select(F.col("dst").alias("node")).distinct(),
+                       "node", "left_anti"))
 
-    # Superseded checkpoints (each round's `ranks`, and `e` once links/
-    # nodes exist) are freed by Spark's ContextCleaner when their last
-    # reference drops — the loop rebinding `ranks` is what releases round
-    # k-1. (`df.rdd.unpersist()` would NOT do it: .rdd returns a fresh
-    # conversion RDD, not the persisted checkpoint.)
+    # Superseded checkpoints (each round's node-sized `ranks`, and `e`
+    # once links/nodes exist) stay stored until the caller's
+    # materialize.scope() exits; with no scope open, the ContextCleaner
+    # frees each once its last reference drops.
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     teleport = (1.0 - damping) / n
     for _ in range(iterations):
@@ -152,12 +152,11 @@ def pagerank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
         # (eager=False) form deferred every round to the final action, whose
         # nested broadcast-over-broadcast plan re-executed prior rounds —
         # measured superlinear (5 iters cost 3.6x of 3 iters at sf0.1).
-        ranks = (new_ranks
-                 .select("node",
-                         (F.lit(teleport)
-                          + F.lit(damping)
-                          * (F.col("_in") + F.col("_dm") / n)).alias("rank"))
-                 .localCheckpoint())
+        ranks = materialize(new_ranks.select(
+            "node",
+            (F.lit(teleport)
+             + F.lit(damping)
+             * (F.col("_in") + F.col("_dm") / n)).alias("rank")))
     return ranks
 
 
@@ -199,10 +198,10 @@ def pagerank_integer(edges: DataFrame, *, src: str = "src",
 
     Returns (node, mass) — BIGINT.
     """
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .distinct().localCheckpoint())
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg")) \
-        .localCheckpoint()
+    e = materialize(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .distinct())
+    deg = materialize(e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg")))
     n = deg.count()
     if n == 0:
         return deg.select(F.col("src").alias("node"),
@@ -212,21 +211,21 @@ def pagerank_integer(edges: DataFrame, *, src: str = "src",
     for _ in range(iterations):
         # per-node contribution + floor remainder; TWO consumers (the
         # pool aggregate and the edge join) ⇒ materialize once
-        per = (mass.join(deg, mass["node"] == deg["src"])
-               .select("node", "mass", "_deg")
-               .withColumn("_c", F.expr(
-                   f"(mass * {damping_num}) div ({damping_den} * _deg)"))
-               .withColumn("_rem", F.col("mass") - F.col("_deg") * F.col("_c"))
-               .localCheckpoint())
+        per = materialize(
+            mass.join(deg, mass["node"] == deg["src"])
+            .select("node", "mass", "_deg")
+            .withColumn("_c", F.expr(
+                f"(mass * {damping_num}) div ({damping_den} * _deg)"))
+            .withColumn("_rem", F.col("mass") - F.col("_deg") * F.col("_c")))
         pool = per.agg(F.sum("_rem").cast("long").alias("_r"))
         contribs = (e.join(F.broadcast(per.select("node", "_c")),
                            e["src"] == F.col("node"))
                     .groupBy(e["dst"].alias("node"))
                     .agg(F.sum("_c").cast("long").alias("_in")))
-        mass = (contribs.crossJoin(F.broadcast(pool))
-                .select("node", (F.col("_in")
-                                 + F.expr(f"_r div {n}")).alias("mass"))
-                .localCheckpoint())
+        mass = materialize(
+            contribs.crossJoin(F.broadcast(pool))
+            .select("node", (F.col("_in")
+                             + F.expr(f"_r div {n}")).alias("mass")))
     return mass
 
 
@@ -268,11 +267,11 @@ def triangle_count(edges: DataFrame, *, src: str = "src",
     # rank(x) = (deg(x), x): orient low → high
     a_first = (F.col("dega") < F.col("degb")) | \
               ((F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b")))
-    o = ranked.select(
+    o = materialize(ranked.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
         F.when(a_first, F.col("degb")).otherwise(F.col("dega")).alias("deghi"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     e1, e2, e3 = o.alias("e1"), o.alias("e2"), o.alias("e3")
     # wedge at u: (u→v, u→w), v strictly before w in (deg, id) order
     v_first = (F.col("e1.deghi") < F.col("e2.deghi")) | \
@@ -306,11 +305,10 @@ def clustering_coefficient(edges: DataFrame, *, src: str = "src",
     # Materialize the canonical edge set ONCE — the degree and triangle
     # subtrees would otherwise each re-derive it from `edges`, re-running
     # whatever (possibly expensive) plan produced the input.
-    und = (edges.select(F.least(src, dst).alias("a"),
-                        F.greatest(src, dst).alias("b"))
-           .where(F.col("a") != F.col("b"))
-           .distinct()
-           .localCheckpoint())
+    und = materialize(edges.select(F.least(src, dst).alias("a"),
+                                   F.greatest(src, dst).alias("b"))
+                      .where(F.col("a") != F.col("b"))
+                      .distinct())
     deg = (und.select(F.col("a").alias("node"))
            .unionAll(und.select("b"))
            .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
@@ -351,24 +349,23 @@ def bfs_hops(edges: DataFrame, sources: DataFrame, *, src: str = "src",
     sym = (edges.select(F.least(src, dst).alias("a"),
                         F.greatest(src, dst).alias("b"))
            .where(F.col("a") != F.col("b")).distinct())
-    adj = (sym.select(F.col("a").alias("_s"), F.col("b").alias("_t"))
-           .unionAll(sym.select(F.col("b").alias("_s"),
-                                F.col("a").alias("_t")))
-           .localCheckpoint())
-    visited = (sources.select(F.col(node).alias("node"),
-                              F.lit(0).cast("bigint").alias("hops"))
-               .distinct().localCheckpoint())
+    adj = materialize(
+        sym.select(F.col("a").alias("_s"), F.col("b").alias("_t"))
+        .unionAll(sym.select(F.col("b").alias("_s"), F.col("a").alias("_t"))))
+    visited = materialize(
+        sources.select(F.col(node).alias("node"),
+                       F.lit(0).cast("bigint").alias("hops"))
+        .distinct())
     frontier = visited
     for k in range(1, max_hops + 1):
-        nxt = (frontier.join(adj, frontier["node"] == adj["_s"])
-               .select(F.col("_t").alias("node"))
-               .distinct()
-               .join(visited.select("node"), "node", "left_anti")
-               .withColumn("hops", F.lit(k).cast("bigint"))
-               .localCheckpoint())
+        nxt = materialize(frontier.join(adj, frontier["node"] == adj["_s"])
+                          .select(F.col("_t").alias("node"))
+                          .distinct()
+                          .join(visited.select("node"), "node", "left_anti")
+                          .withColumn("hops", F.lit(k).cast("bigint")))
         if nxt.isEmpty():
             break
-        visited = visited.unionByName(nxt).localCheckpoint()
+        visited = materialize(visited.unionByName(nxt))
         frontier = nxt
     return visited
 
@@ -399,14 +396,14 @@ def kcore(edges: DataFrame, *, k: int, src: str = "src", dst: str = "dst",
     pattern."""
     fwd = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     rev = edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d"))
-    e = fwd.unionByName(rev).localCheckpoint()
+    e = materialize(fwd.unionByName(rev))
     n = e.count()
     for _ in range(max_iter):
         keep = (e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
                 .filter(F.col("_deg") >= k).select("_s"))
-        e2 = (e.join(keep, "_s", "left_semi")
-              .join(keep.withColumnRenamed("_s", "_d"), "_d", "left_semi")
-              .localCheckpoint())
+        e2 = materialize(
+            e.join(keep, "_s", "left_semi")
+            .join(keep.withColumnRenamed("_s", "_d"), "_d", "left_semi"))
         n2 = e2.count()
         if n2 == n:
             break

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 #: Adaptive small-N crossover (round-6 VERDICT item 8): below this
 #: Catalyst sizeInBytes estimate the single-task window form is strictly
 #: cheaper at local scale (the two-phase machinery pays ~0.7-1.7s of
@@ -113,10 +115,10 @@ def _range_sorted(df: DataFrame, order_cols: list[str]):
     by the partition count, never by the data).
     """
     parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    d = (df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
-           .sortWithinPartitions(*order_cols)
-           .withColumn("_pid", F.spark_partition_id())
-           .localCheckpoint())
+    d = materialize(
+        df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols)
+        .withColumn("_pid", F.spark_partition_id()))
     counts = {r["_pid"]: r["cnt"] for r in
               d.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     # _global_index reads the record number from the LOW 33 BITS of
@@ -272,7 +274,7 @@ def global_cumsums_with_totals(
         # lineage — the two-phase branch runs the upstream exactly once
         # too (its _range_sorted checkpoint), so the small path must not
         # be the one that recomputes
-        d = df.localCheckpoint()
+        d = materialize(df)
         w = Window.orderBy(*order_cols).rowsBetween(
             Window.unboundedPreceding, Window.currentRow)
         out = d

@@ -30,6 +30,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, release, scope
 from ..session import conf_override
 from .similarity import _cell_udf, norm_expr, train_ivf_centroids
 
@@ -42,12 +43,12 @@ def kmeans_fit(emb: DataFrame, vec_col: str = "embedding", *,
     coordinates) or ``max_iter`` rounds."""
     # The fit makes max_iter+2 passes over the data (init count+sample,
     # then one assign+aggregate per Lloyd round) — cache the projected
-    # input for the fit's lifetime so only the FIRST pass reads the
-    # source; at lake scale that's the difference between 1 scan and ~7.
-    proj = emb.select(vec_col).persist()
-    ubase = None
+    # input until the first Lloyd round has filled ubase, so only the
+    # FIRST pass reads the source; at lake scale that's the difference
+    # between 1 scan and ~7.
     spark = emb.sparkSession
-    try:
+    with scope():
+        proj = materialize(emb.select(vec_col), eager=False, columnar=True)
         cents = train_ivf_centroids(proj, vec_col, n_centroids=k,
                                     sample_rows=sample_rows, iters=3,
                                     seed=seed)
@@ -60,9 +61,10 @@ def kmeans_fit(emb: DataFrame, vec_col: str = "embedding", *,
         # UDF → one bounded aggregate. The per-round Column/aggregate
         # expressions are likewise built once — only the centroid closure
         # changes between rounds.
-        ubase = proj.select(vec_col,
-                            *[(F.col(vec_col)[i] / nrm).alias(f"_u{i}")
-                              for i in range(dim)]).persist()
+        ubase = materialize(
+            proj.select(vec_col, *[(F.col(vec_col)[i] / nrm).alias(f"_u{i}")
+                                   for i in range(dim)]),
+            eager=False, columnar=True)
         aggs = [F.count(F.lit(1)).alias("_n")] + \
                [F.sum(f"_u{i}").alias(f"_s{i}") for i in range(dim)]
         ucols = [F.col(f"_u{i}") for i in range(dim)]
@@ -71,12 +73,14 @@ def kmeans_fit(emb: DataFrame, vec_col: str = "embedding", *,
         # round-trips to this fixed-shape loop (measured 6 jobs → 3 for
         # identical results), so it is paused for the loop and restored.
         with conf_override(spark, {"spark.sql.adaptive.enabled": "false"}):
-            for _ in range(max_iter):
+            for it in range(max_iter):
                 assigned = ubase.select(
                     _cell_udf(cents, 1)(F.col(vec_col)).getItem(0)
                     .alias("_cid"),
                     *ucols)
                 rows = assigned.groupBy("_cid").agg(*aggs).collect()
+                if it == 0:     # that pass filled ubase; proj is unread now
+                    release(proj)
                 new = cents.copy()
                 for r in rows:
                     m = np.array([r[f"_s{i}"] for i in range(dim)],
@@ -89,10 +93,6 @@ def kmeans_fit(emb: DataFrame, vec_col: str = "embedding", *,
                 if shift < tol:
                     break
         return cents
-    finally:
-        if ubase is not None:
-            ubase.unpersist()
-        proj.unpersist()
 
 
 def kmeans_assign(emb: DataFrame, centroids: np.ndarray, *,

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 _KMV_P60 = "990000000000000"  # 15 hex digits => 60-bit prefix (doc aid only)
 
 
@@ -72,7 +74,7 @@ def set_overlap_estimates(sets_df: DataFrame, set_col: str, member_col: str,
     never a sketch×sketch or set×set product."""
     sample = bottomk_sample(sets_df.select(member_col), member_col, k=k)
     m = sample_memberships(sets_df, set_col, member_col, sample, k=k)
-    m = m.localCheckpoint(eager=True)  # tiny (≤ k·|sets|); joined twice
+    m = materialize(m)  # tiny (≤ k·|sets|); joined twice
     sizes = m.groupBy(set_col).agg(F.count(F.lit(1)).alias("m"))
     a = m.select(F.col(set_col).alias("set_a"), member_col)
     b = m.select(F.col(set_col).alias("set_b"), member_col)

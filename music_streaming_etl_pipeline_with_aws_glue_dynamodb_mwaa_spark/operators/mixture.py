@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from .sampling import hash_bucket
 
 _B32 = 1 << 32
@@ -167,9 +168,9 @@ def mixture_schedule(docs: DataFrame,
     # Materialize the k-row plan once: the broadcast reuses it, and the
     # zero-weight-sum check below costs a k-row scan instead of a second
     # corpus aggregation.
-    plan = mixture_allocations(docs, weights, budget_tokens=budget_tokens,
-                               group_col=group_col, text_col=text_col) \
-        .localCheckpoint()
+    plan = materialize(mixture_allocations(
+        docs, weights, budget_tokens=budget_tokens, group_col=group_col,
+        text_col=text_col))
     # Guard the Column-weights path too (the dict path raises statically):
     # a weight expression that is 0 for every observed source makes the
     # divisor 0 → NULL thresholds → `bucket < NULL` silently drops

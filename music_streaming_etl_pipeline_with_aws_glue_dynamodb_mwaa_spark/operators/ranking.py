@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text_funcs import distinct_tokens, tokens
+from ..materialize import materialize
 
 
 def doc_term_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -42,9 +43,10 @@ def doc_term_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     re-explode the raw text per consumer with no exchange reuse. A lazy
     ``localCheckpoint`` computes the explode+count once (plan-asserted in
     tests/test_plans.py)."""
-    tf = (docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-          .groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-          .localCheckpoint(eager=False))
+    tf = materialize(
+        docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
+        .groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")),
+        eager=False)
     dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -152,9 +154,9 @@ def _lm_grams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     explode, materialized (localCheckpoint) so every consumer (model
     count tables, per-doc scoring, occurrence tables) folds over the
     same pass instead of re-tokenizing the corpus."""
-    return (docs.select(F.col(id_col).alias("_id"),
-                        F.explode(_ngrams(text_col, 2)).alias("_bg"))
-            .localCheckpoint())
+    return materialize(docs.select(
+        F.col(id_col).alias("_id"),
+        F.explode(_ngrams(text_col, 2)).alias("_bg")))
 
 
 def _lm_model_tables(model_g: DataFrame):
@@ -190,9 +192,8 @@ def _lm_joined(docs: DataFrame, id_col: str, text_col: str, *,
         model_g = doc_side.select("_bg")
     else:
         lm_text = text_col if lm_text_col is None else lm_text_col
-        model_g = (lm_docs.select(F.explode(_ngrams(lm_text, 2))
-                                  .alias("_bg"))
-                   .localCheckpoint())
+        model_g = materialize(
+            lm_docs.select(F.explode(_ngrams(lm_text, 2)).alias("_bg")))
         doc_side = docs.select(F.col(id_col).alias("_id"),
                                F.explode(_ngrams(text_col, 2)).alias("_bg"))
     bg, ctx, vocab_n = _lm_model_tables(model_g)

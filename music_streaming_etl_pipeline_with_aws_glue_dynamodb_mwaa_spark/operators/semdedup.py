@@ -48,6 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from . import kmeans as _kmeans
 
 
@@ -72,11 +73,11 @@ def semantic_dup_pairs(emb: DataFrame, *, id_col: str = "vec_id",
         centroids = _kmeans.kmeans_fit(emb, vec_col, k=k)
     # materialize the (id, cluster) map ONCE — it is read twice (the k-row
     # count below and the replication join), and recomputing it would run
-    # the assign matmul pass twice; localCheckpoint is GC-cleaned and the
-    # frame is 2 scalar columns, never vectors
-    assign_map = (_kmeans.kmeans_assign(emb, centroids, id_col=id_col,
-                                        vec_col=vec_col)
-                  .select(id_col, "cluster_id").localCheckpoint())
+    # the assign matmul pass twice; the frame is 2 scalar columns, never
+    # vectors
+    assign_map = materialize(
+        _kmeans.kmeans_assign(emb, centroids, id_col=id_col, vec_col=vec_col)
+        .select(id_col, "cluster_id"))
     assigned = assign_map.join(emb.select(id_col, vec_col), id_col)
 
     # Per-cell sub-block counts and the (cell, block-pair) task table,

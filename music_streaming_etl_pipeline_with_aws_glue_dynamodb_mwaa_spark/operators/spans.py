@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 
 def merge_intervals(df: DataFrame, keys: list[str], start_col: str,
                     end_col: str, *, max_gap: Column | int = 0) -> DataFrame:
@@ -200,10 +202,9 @@ def _concurrency_histogram_scaled(bounds: DataFrame) -> DataFrame:
     if bounds.schema["_t"].dataType.typeName().startswith("timestamp"):
         bounds = bounds.select(F.unix_micros("_t").alias("_t"), "_d")
     parts = int(bounds.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    b = (bounds.repartitionByRange(parts, F.col("_t"), F.col("_d"))
-         .sortWithinPartitions("_t", "_d")
-         .withColumn("_pid", F.spark_partition_id())
-         .localCheckpoint())
+    b = materialize(bounds.repartitionByRange(parts, F.col("_t"), F.col("_d"))
+                    .sortWithinPartitions("_t", "_d")
+                    .withColumn("_pid", F.spark_partition_id()))
     stats = (b.groupBy("_pid")
              .agg(F.sum("_d").alias("s"), F.min("_t").alias("h"))
              .collect())

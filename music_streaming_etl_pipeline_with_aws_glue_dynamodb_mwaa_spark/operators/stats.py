@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from . import ids
 
 
@@ -427,10 +428,7 @@ def sliding_distinct_count(df: DataFrame, entity_col: str, ts_col: str, *,
     # the bound comes from the DEDUPED frame (max active day ≡ max event
     # day) — materializing act keeps this a single fact-sized pass: the
     # 1-row bound and the explode both read the collapsed table.
-    # localCheckpoint, not persist: blocks are GC-cleaned when the frame
-    # goes out of scope (persist leaks via the CacheManager for the
-    # session lifetime — round-4 ADVICE)
-    act = act.localCheckpoint()
+    act = materialize(act)
     bounds = act.agg(F.max("_d").alias("_mx"))
     slots = act.select(
         "_e", F.explode(F.sequence(
@@ -691,10 +689,9 @@ def ks_two_sample(df: DataFrame, group_col: str, val_col: str, *,
                     .alias("_cb")))
     cum, (n_a, n_b) = ids.global_cumsums_with_totals(
         per_val, ["v"], ["_ca", "_cb"], ["ca", "cb"])
-    scored = (cum.withColumn("_scaled",
-                             F.abs(F.col("ca") * F.lit(n_b)
-                                   - F.col("cb") * F.lit(n_a)))
-              .localCheckpoint())
+    scored = materialize(cum.withColumn("_scaled",
+                                        F.abs(F.col("ca") * F.lit(n_b)
+                                              - F.col("cb") * F.lit(n_a))))
     smax = scored.agg(F.max("_scaled").alias("_smax"))
     return (scored.join(F.broadcast(smax),
                         F.col("_scaled") == F.col("_smax"))

@@ -22,6 +22,7 @@ from ..functions.text_funcs import (
     stopword_count,
     tokens,
 )
+from ..materialize import materialize
 
 # BPE-ish word/number/symbol segmentation for token accounting; kept to a
 # subset of regex syntax with identical semantics in Java (Spark) and RE2
@@ -278,8 +279,8 @@ def remove_common_segments(docs: DataFrame, id_col: str, text_col: str, *,
                             chunk_tokens=seg_tokens, overlap_tokens=0)
             .withColumn("_h", F.md5(F.col("chunk_text"))))
     # segs feeds both the docfreq agg and the flag join — compute the
-    # chunk explode once (lazy localCheckpoint, ContextCleaner-freed)
-    segs = segs.localCheckpoint(eager=False)
+    # chunk explode once (lazy)
+    segs = materialize(segs, eager=False)
     common = (segs.groupBy("_h")
               .agg(F.countDistinct(id_col).alias("_df"))
               .where(F.col("_df") > max_docfreq)
@@ -338,9 +339,9 @@ def remove_duplicate_spans(docs: DataFrame, id_col: str, text_col: str, *,
                     " ", F.slice(toks, s + 1, k)))).alias("_pos", "_g"))
     grams = grams.withColumn("_h", F.md5("_g")).drop("_g")
     # the gram stream feeds BOTH the docfreq agg and the probe side of the
-    # semi join — a lazy localCheckpoint computes the tokenize + explode
-    # once instead of per consumer (blocks are freed by the ContextCleaner)
-    grams = grams.localCheckpoint(eager=False)
+    # semi join — a lazy materialize computes the tokenize + explode
+    # once instead of per consumer
+    grams = materialize(grams, eager=False)
     common = (grams.select("_h", id_col).groupBy("_h")
               .agg(F.countDistinct(id_col).alias("_df"))
               .where(F.col("_df") > max_docfreq)
@@ -440,9 +441,10 @@ def ngram_novelty(docs: DataFrame, id_col: str = "doc_id",
     vocabulary (shuffles hash-partition on the gram — skew-safe since
     DISTINCT grams per doc cap multiplicity at 1). Docs with < n
     tokens have no grams and drop out, like the LM scorer."""
-    grams = (docs.select(F.col(id_col).alias("_id"),
-                         F.explode(shingles(text_col, n)).alias("_g"))
-             .localCheckpoint())   # two consumers: firsts + the join back
+    # two consumers: firsts + the join back
+    grams = materialize(docs.select(
+        F.col(id_col).alias("_id"),
+        F.explode(shingles(text_col, n)).alias("_g")))
     firsts = grams.groupBy("_g").agg(F.min("_id").alias("_first"))
     return (grams.join(firsts, "_g")
             .groupBy("_id")

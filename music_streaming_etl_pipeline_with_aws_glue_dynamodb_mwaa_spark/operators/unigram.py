@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, scope
 from .bpe import word_vocab
 
 
@@ -108,23 +109,19 @@ def train_unigram(docs: DataFrame, text_col: str = "text", *,
     every E-step is one vocabulary-sized Spark job with exact integer
     count aggregation.
     """
-    vocab = word_vocab(docs, text_col)
-    vocab.persist()
-    # EM stages are vocabulary-sized: run them on partitions proportional
-    # to the vocab, not the session's corpus-sized shuffle width (a
-    # 32-partition Arrow stage over a few dozen distinct words pays 32
-    # python-worker spinups per round for nothing — measured 5s/round at
-    # toy scale). ~5k words per task keeps real vocabularies parallel.
-    n_words = vocab.count()
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    want = max(1, min(par, (n_words + 4999) // 5000))
-    if want < par:
-        old = vocab
-        vocab = old.coalesce(want)
-        vocab.persist()
-        vocab.count()
-        old.unpersist()
-    try:
+    with scope():
+        vocab = materialize(word_vocab(docs, text_col), eager=False,
+                            columnar=True)
+        # EM stages are vocabulary-sized: run them on partitions proportional
+        # to the vocab, not the session's corpus-sized shuffle width (a
+        # 32-partition Arrow stage over a few dozen distinct words pays 32
+        # python-worker spinups per round for nothing — measured 5s/round at
+        # toy scale). ~5k words per task keeps real vocabularies parallel.
+        n_words = vocab.count()
+        par = docs.sparkSession.sparkContext.defaultParallelism
+        want = max(1, min(par, (n_words + 4999) // 5000))
+        if want < par:
+            vocab = materialize(vocab.coalesce(want), columnar=True)
         pieces = [(r["piece"], r["count"]) for r in
                   candidate_pieces(vocab, max_piece_len=max_piece_len,
                                    candidate_cap=candidate_cap).collect()]
@@ -148,8 +145,6 @@ def train_unigram(docs: DataFrame, text_col: str = "text", *,
             if len(pieces) <= vocab_size:
                 break
         return pieces
-    finally:
-        vocab.unpersist()
 
 
 def _desc_key(s: str) -> tuple:
@@ -190,8 +185,7 @@ def encode_docs(docs: DataFrame, pieces: list[tuple[str, int]],
     from ..functions.text_funcs import tokens
     distinct_words = (docs.select(F.explode(tokens(text_col)).alias("word"))
                       .filter(F.col("word") != "").distinct())
-    # localCheckpoint, not persist: GC-cleaned, no session-lifetime leak
-    distinct_words = distinct_words.localCheckpoint()
+    distinct_words = materialize(distinct_words)
     n_words = distinct_words.count()
     par = docs.sparkSession.sparkContext.defaultParallelism
     want = max(1, min(par, (n_words + 4999) // 5000))

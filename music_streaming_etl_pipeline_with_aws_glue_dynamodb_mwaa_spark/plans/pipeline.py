@@ -33,9 +33,11 @@ Deliberate divergences from the reference (SURVEY.md §7 risk 4):
   router the stored counts; any change to the raw files re-validates. The
   reference rewrites ``clean_songs``/``clean_users`` every run
   (``validate.py:65-66``), which gives the same rows;
-- the joined frame is persisted across its 3-way fan-out — the reference
-  recomputes scan+join per output (``transform.py:53-55``) — and stays
-  cached until the KV load has read it; the three KV tables load as one
+- the joined frame is cached across its 3-way fan-out — the reference
+  recomputes scan+join per output (``transform.py:53-55``) — and, like
+  the cached raw tables, is held by the ``materialize.scope()`` that
+  ``process`` opens for the batch, which releases it once the KV load has
+  read it; the three KV tables load as one
   ``foreachPartition`` pass over their table-tagged union
   (``load_dynamo.py:157-173`` loads them one after another);
 - validation and KV load are distributed Spark jobs, not single-process
@@ -63,6 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..materialize import materialize, scope
 from ..operators import kpi, kv_projection, topk, validate
 from ..schemas import REQUIRED_COLUMNS, SONGS, STREAMS, USERS
 from ..sources import io
@@ -160,8 +163,6 @@ class Pipeline:
             self.store.ensure_table(name, hash_key=hk, range_key=rk)
         # per dimension: (raw fingerprint, (good, bad)) of its last validation
         self._snapshots: dict[str, tuple[tuple, tuple[int, int]]] = {}
-        # frames cached for the batch in flight; process() releases them
-        self._cached: list[DataFrame] = []
 
     # -- S6/O3: file discovery --------------------------------------------
     def discover_new_files(self) -> list[str]:
@@ -197,9 +198,9 @@ class Pipeline:
         if name == "streams":
             raw = kpi.with_listen_date(raw)
             partition_by = ["listen_date"]
-        flagged = raw.withColumn(_VALID, F.coalesce(
-            validate.valid_predicate(raw, required), F.lit(False))).persist()
-        self._cached.append(flagged)
+        flagged = materialize(raw.withColumn(_VALID, F.coalesce(
+            validate.valid_predicate(raw, required), F.lit(False))),
+            eager=False, columnar=True)
         good = flagged.filter(F.col(_VALID)).drop(_VALID, io.CORRUPT_COL)
         # the write fills the cache; counting first would cost one more job
         io.write_parquet(good,
@@ -261,10 +262,11 @@ class Pipeline:
     # -- stage 2: transform ---------------------------------------------------
     def transform(self, streams: DataFrame, songs: DataFrame) -> dict[str, DataFrame]:
         """KPIs and top-k over the joined frame, which stays cached for the
-        batch: the KV load re-reads it, and :meth:`process` releases it."""
+        batch: the KV load re-reads it, and the scope :meth:`process` opens
+        releases it."""
         # 3-way fan-out plus the KV load; the reference recomputes it 3×
-        joined = kpi.join_streams_songs(streams, songs).persist()
-        self._cached.append(joined)
+        joined = materialize(kpi.join_streams_songs(streams, songs),
+                             eager=False, columnar=True)
         outputs = {
             "avg_metrics": kpi.daily_genre_kpis(joined),
             "top_songs": topk.top_songs_per_genre(joined, self.cfg.top_songs_k),
@@ -287,18 +289,16 @@ class Pipeline:
     def process(self, streams_raw: DataFrame) -> bool:
         """validate → route → transform → KV load for one batch of raw stream
         rows; both drivers run exactly this. False when the router rejects
-        the batch (nothing after validation runs). The validated frames and
-        the joined frame stay cached until the KV load has read them."""
-        try:
+        the batch (nothing after validation runs). The cached raw tables and
+        the joined frame belong to this call's ``materialize.scope()``,
+        which releases them once the KV load has read them."""
+        with scope():
             frames, counts = self.validate_batch(streams_raw)
             if not self.cfg.on_validation_result(counts):
                 return False
             outputs = self.transform(self._transform_input(frames["streams"]),
                                      frames["songs"])
             self.load_kv(outputs)
-        finally:
-            while self._cached:
-                self._cached.pop().unpersist()
         return True
 
     # -- batch driver ---------------------------------------------------------

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .materialize import materialize
 from .operators import (
     asof,
     bpe,
@@ -619,19 +620,19 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_c = emb.filter(F.col("vec_id") % 4 == 0)
     corpus = emb_c.select(F.col("vec_id").alias("neighbor_id"), "embedding",
                           similarity.norm_expr("embedding").alias("_n"))
-    pc = (corpus.crossJoin(F.broadcast(q))
-          .filter(F.col("neighbor_id") != F.col("query_id"))
-          .select("query_id", "neighbor_id",
-                  (similarity.dot_expr("embedding", "_qv")
-                   / (F.col("_n") * F.col("_qn"))).alias("cosine"))
-          .localCheckpoint())
+    pc = materialize(
+        corpus.crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id",
+                (similarity.dot_expr("embedding", "_qv")
+                 / (F.col("_n") * F.col("_qn"))).alias("cosine")))
     # The exact top-k stays checkpointed: a round-13 A/B that dropped it
     # (both consumers live in the one assembly action) measured 1.05× —
     # the duplicated window subtree re-enters the assembly plan's
     # Catalyst analysis, which is this query's documented bottleneck.
-    exact = (similarity.top_k_per_group(
+    exact = materialize(similarity.top_k_per_group(
         pc, ["query_id"], "cosine", k, tie_break=["neighbor_id"])
-        .select("query_id", "neighbor_id").localCheckpoint())
+        .select("query_id", "neighbor_id"))
 
     def _rerank(cand: DataFrame) -> DataFrame:
         return (similarity.top_k_per_group(
@@ -4125,8 +4126,11 @@ def _overlapped(spark: SparkSession, *fns):
     the other threads' running jobs through that tag instead of waiting
     for them to finish, then is raised together with any other thread's
     own failure (an ``ExceptionGroup`` when there are several). A sibling
-    whose job was only cancelled adds nothing to the report."""
+    whose job was only cancelled adds nothing to the report. Each thread
+    runs in a copy of the caller's context, so the frames it materializes
+    belong to the caller's ``materialize.scope()``."""
     from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+    from contextvars import copy_context
     from uuid import uuid4
 
     sc = spark.sparkContext
@@ -4140,7 +4144,8 @@ def _overlapped(spark: SparkSession, *fns):
             sc.removeJobTag(tag)
 
     with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-        futures = [pool.submit(tagged, fn) for fn in fns]
+        futures = [pool.submit(copy_context().run, tagged, fn)
+                   for fn in fns]
         done, pending = wait(futures, return_when=FIRST_EXCEPTION)
         failed = [f for f in futures if f in done and f.exception()]
         if failed and pending:
@@ -4184,17 +4189,16 @@ def neardup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice, and sketch-quality drift is a corpus-wide property a sample
     sees just as well); exact counts via semi joins, everything stays
     distributed until the 1-row aggregate."""
-    docs = _docs(spark, sf_dir).filter(
+    docs = materialize(_docs(spark, sf_dir).filter(
         F.pmod(F.conv(F.substring(F.md5(F.concat(
             F.lit("ev:"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
-            .cast("long"), F.lit(10)) < 4).localCheckpoint(eager=False)
+            .cast("long"), F.lit(10)) < 4), eager=False)
     # ONE scan + ONE shingle explode feed BOTH subtrees (round-4 VERDICT
     # perf item: the exact and MinHash pipelines each re-scanned and
     # re-shingled the 40% slice — sharing a checkpointed postings stream
     # halves the dominant cost; the MinHash side also verifies candidates
     # from these same postings instead of re-shingling raw text).
-    sh = dedup._shingled(docs, "doc_id", "text", 3).localCheckpoint(
-        eager=False)
+    sh = materialize(dedup._shingled(docs, "doc_id", "text", 3), eager=False)
     # The exact and MinHash pipelines are INDEPENDENT consumers of the
     # shared postings stream, but their eager checkpoints previously ran
     # back to back — each one's stage tail left the cluster idle (guide
@@ -4202,15 +4206,15 @@ def neardup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair sets either way (the shared lazy-ckpt postings materialize
     # once under the block manager's per-partition compute locks).
     def _exact():
-        return dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=3, threshold=0.8, postings=sh) \
-            .select("doc_a", "doc_b").localCheckpoint()
+        return materialize(dedup.ngram_jaccard_pairs(
+            docs, "doc_id", "text", n=3, threshold=0.8, postings=sh)
+            .select("doc_a", "doc_b"))
 
     def _approx():
-        return dedup.minhash_near_dup_pairs(
+        return materialize(dedup.minhash_near_dup_pairs(
             docs, "doc_id", "text", n=3, threshold=0.8,
-            hash_scheme="md5", postings=sh) \
-            .select("doc_a", "doc_b").localCheckpoint()
+            hash_scheme="md5", postings=sh)
+            .select("doc_a", "doc_b"))
 
     exact, approx = _overlapped(spark, _exact, _approx)
     tp = approx.join(exact, ["doc_a", "doc_b"], "left_semi") \
@@ -4862,7 +4866,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                    & (F.col("l_shipdate") < "1997-04-01"))
            .groupBy(F.col("l_suppkey").alias("supplier_no"))
            .agg(F.sum(_rev_cbp()).alias("total_cbp")))
-    rev = rev.localCheckpoint()  # eager + GC-cleaned (no persist leak)
+    rev = materialize(rev)  # eager; the caller's scope owns it
     mx = rev.agg(F.max("total_cbp").alias("_mx"))
     s = catalog.load_table(spark, sf_dir, "supplier") \
         .select("s_suppkey", "s_name")
@@ -5131,7 +5135,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
          .join(F.broadcast(p), ps["l_partkey"] == p["p_partkey"])
          .groupBy("p_partkey")
          .agg(F.sum("_rc").alias("value_cents")))
-    v = v.localCheckpoint()  # eager + GC-cleaned (no persist leak)
+    v = materialize(v)  # eager; the caller's scope owns it
     total = v.agg(F.sum("value_cents").alias("_t"))
     return (v.crossJoin(F.broadcast(total))
             .filter(F.col("value_cents") * 1000 > F.col("_t"))
@@ -5215,7 +5219,7 @@ def tpch_q20_dominant_suppliers(spark: SparkSession,
                 "left_semi"))
     shipped = (li.groupBy("l_partkey", "l_suppkey")
                .agg(F.sum(stats.cents("l_quantity")).alias("qty_c")))
-    shipped = shipped.localCheckpoint()  # eager + GC-cleaned (no persist leak)
+    shipped = materialize(shipped)  # eager; the caller's scope owns it
     tot = (shipped.groupBy(F.col("l_partkey").alias("_pk"))
            .agg(F.sum("qty_c").alias("tot_c")))
     s = catalog.load_table(spark, sf_dir, "supplier") \
@@ -5525,7 +5529,7 @@ def user_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = catalog.load_table(spark, sf_dir, "events")
     per_user = (ev.groupBy("event_type", "user_id")
                 .agg(F.sum(stats.cents("value")).alias("cents")))
-    per_user = per_user.localCheckpoint()  # eager + GC-cleaned (no persist leak)
+    per_user = materialize(per_user)  # eager; the caller's scope owns it
     num = (per_user.groupBy("event_type")
            .agg(gini_numerator("cents").alias("gini_num")))
     tot = (per_user.groupBy("event_type")
@@ -5904,7 +5908,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text",
                                       n=3, threshold=0.8)
-    pairs = pairs.localCheckpoint()  # eager + GC-cleaned (no persist leak)
+    pairs = materialize(pairs)  # eager; the caller's scope owns it
     comp = cluster.connected_components(pairs, "doc_a", "doc_b")
 
     def audit(df: DataFrame, sa, sb, scheme: str) -> DataFrame:
@@ -7790,7 +7794,7 @@ def neardup_edit_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE checkpointed shingle stream feeds both the band index and the
     # jaccard verification (the minhash_eval lesson: unshared postings
     # re-shingle the corpus once per subtree)
-    sh = dedup._shingled(docs, "doc_id", "text", 3).localCheckpoint()
+    sh = materialize(dedup._shingled(docs, "doc_id", "text", 3))
     pairs = dedup.minhash_near_dup_pairs(
         docs, "doc_id", "text", n=3, num_hashes=48, bands=12,
         threshold=0.7, hash_scheme="md5", postings=sh)
@@ -9333,10 +9337,9 @@ def weekly_top10_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .cast("bigint")).alias("cents")))
     w = Window.partitionBy("week").orderBy(F.col("cents").desc(),
                                            F.col("l_partkey").asc())
-    top = (wk.withColumn("rn", F.row_number().over(w))
-           .where(F.col("rn") <= 10)
-           .select("week", "l_partkey")
-           .localCheckpoint())
+    top = materialize(wk.withColumn("rn", F.row_number().over(w))
+                      .where(F.col("rn") <= 10)
+                      .select("week", "l_partkey"))
     sz = top.groupBy("week").agg(F.count(F.lit(1)).alias("n"))
     cur, prev = top.alias("cur"), top.alias("prev")
     ret = (cur.join(prev,
@@ -10469,11 +10472,10 @@ def semdedup_agreement_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .select("vec_id", "embedding").collect())
     seeds = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
              for r in seed_rows]
-    cells = s.withColumn(
+    cells = materialize(s.withColumn(
         "_cell",
         similarity.nearest_seeds_expr("embedding", seeds, 1,
-                                      norm_col="_n").getItem(0)) \
-        .localCheckpoint()
+                                      norm_col="_n").getItem(0)))
     a = cells.select(F.col("vec_id").alias("_ia"),
                      F.col("embedding").alias("_va"),
                      F.col("_n").alias("_na"), F.col("_cell").alias("_ca"))
@@ -10603,11 +10605,10 @@ def kmeans_assign_agreement_eval(spark: SparkSession,
     literal-seed assignment expression; the final action joins two
     ≤ 1000-row assignment frames."""
     emb = _emb(spark, sf_dir)
-    s = (emb.filter((F.col("vec_id") % 4 == 0)
-                    & (F.col("vec_id") < _EVAL_SLICE_CAP))
-         .select("vec_id", "embedding",
-                 similarity.norm_expr("embedding").alias("_n"))
-         .localCheckpoint())
+    s = materialize(emb.filter((F.col("vec_id") % 4 == 0)
+                               & (F.col("vec_id") < _EVAL_SLICE_CAP))
+                    .select("vec_id", "embedding",
+                            similarity.norm_expr("embedding").alias("_n")))
     seed_rows = (s.orderBy("vec_id").limit(_KME_EVAL_K)
                  .select("vec_id", "embedding").collect())
     cents = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
@@ -10619,7 +10620,7 @@ def kmeans_assign_agreement_eval(spark: SparkSession,
             out, similarity.nearest_seeds_expr("embedding", cs, 1,
                                                norm_col="_n").getItem(0))
 
-    a0 = assign(cents, "_c0").localCheckpoint()
+    a0 = materialize(assign(cents, "_c0"))
     cur = a0
     # Per-round aggregate expressions built ONCE (only the groupBy key
     # changes), and the loop runs with AQE paused: each round's collect
@@ -10875,7 +10876,7 @@ def lexical_rank_agreement_eval(spark: SparkSession,
     TakeOrderedAndProject top-20s whose 20-row frames feed the final
     rank windows (the kmv bottom-k bounded-window pattern)."""
     docs = _docs(spark, sf_dir)
-    s = ranking.doc_term_stats(docs, "doc_id", "text").localCheckpoint()
+    s = materialize(ranking.doc_term_stats(docs, "doc_id", "text"))
     vocab_rows = (s.select("term", "df", "n_docs").distinct()
                   .limit(bpe.DRIVER_VOCAB_MAX + 1).collect())
     if len(vocab_rows) > bpe.DRIVER_VOCAB_MAX:
@@ -10899,8 +10900,9 @@ def lexical_rank_agreement_eval(spark: SparkSession,
     # 1.14× (A 3.70 vs B 4.22 min-basis): `pdoc` is term-filtered and
     # tiny, so there is no stage tail to back-fill, only scheduling
     # interference with the full-width rank window.
-    a = (sc.select("doc_id", "term", F.row_number().over(wa).alias("_rka"))
-         .filter(F.col("_rka") <= _LEX_EVAL_K).localCheckpoint())
+    a = materialize(
+        sc.select("doc_id", "term", F.row_number().over(wa).alias("_rka"))
+        .filter(F.col("_rka") <= _LEX_EVAL_K))
     b = (s.select("doc_id", "term", F.row_number().over(wb).alias("_rkb"))
          .filter(F.col("_rkb") <= _LEX_EVAL_K))
     dl = s.groupBy("doc_id").agg(F.first("dl").alias("dl"))
@@ -10913,18 +10915,18 @@ def lexical_rank_agreement_eval(spark: SparkSession,
            * ((F.col("tf") * F.lit(a1))
               / (F.col("tf") + F.lit(b1)
                  + (F.lit(c1) * F.col("dl")) / F.col("avgdl"))))
-    pdoc = (m.select("doc_id", "term", "tf", sco.alias("_s"))
-            .groupBy("doc_id")
-            .agg(F.collect_list(F.struct("term", "_s")).alias("_ts"),
-                 F.sum("tf").cast("long").alias("sum_tf"),
-                 F.count(F.lit(1)).cast("long").alias("n_matched"))
-            .select("doc_id",
-                    F.aggregate(F.transform(F.sort_array("_ts"),
-                                            lambda x: x["_s"]),
-                                F.lit(0.0),
-                                lambda acc, x: acc + x).alias("bm25"),
-                    "sum_tf", "n_matched")
-            .localCheckpoint())
+    pdoc = materialize(
+        m.select("doc_id", "term", "tf", sco.alias("_s"))
+        .groupBy("doc_id")
+        .agg(F.collect_list(F.struct("term", "_s")).alias("_ts"),
+             F.sum("tf").cast("long").alias("sum_tf"),
+             F.count(F.lit(1)).cast("long").alias("n_matched"))
+        .select("doc_id",
+                F.aggregate(F.transform(F.sort_array("_ts"),
+                                        lambda x: x["_s"]),
+                            F.lit(0.0),
+                            lambda acc, x: acc + x).alias("bm25"),
+                "sum_tf", "n_matched"))
     tj = a.join(b, ["doc_id", "term"])
     t_over = tj.agg(
         F.count(F.lit(1)).alias("tfidf_overlap"),
@@ -11212,8 +11214,8 @@ def dsir_agreement_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     target = docs.filter(F.pmod(F.col("doc_id"), F.lit(50)) == 0)
     raw = docs.filter(F.pmod(F.col("doc_id"), F.lit(50)) != 0)
-    rb = curation._gram_buckets(raw, "doc_id", "text", n=2,
-                                buckets=_DSIR_EVAL_BUCKETS).localCheckpoint()
+    rb = materialize(curation._gram_buckets(raw, "doc_id", "text", n=2,
+                                            buckets=_DSIR_EVAL_BUCKETS))
     tb = curation._gram_buckets(target, "doc_id", "text", n=2,
                                 buckets=_DSIR_EVAL_BUCKETS)
     # ONE collect serves both bucket-count dicts (round 13): the raw and

@@ -338,76 +338,42 @@ def test_media_payload_dedup_collapses_planted_dups(spark):
     assert {r["media_id"] for r in kept.collect()} == {1, 3}
 
 
-def test_release_cached_postings_lifecycle(spark, monkeypatch):
-    """The persist() branch of _materialize_postings registers its frame
-    for explicit release (round-10 ADVICE: cached InMemoryRelations
-    otherwise live for the session); release_cached_postings unpersists
-    and empties the registry, and is a safe no-op when nothing is
-    cached."""
+def test_postings_take_the_columnar_form_only_inside_a_scope(spark, monkeypatch):
+    """Above the size threshold, _materialize_postings caches the postings
+    as a columnar relation that the open scope releases on exit; with no
+    scope open it takes the checkpoint form, so nothing is left cached."""
+    from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark import materialize
     import music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators.dedup as d
-    d.release_cached_postings()          # drain whatever earlier tests cached
-    assert d.release_cached_postings() == 0   # idempotent once drained
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
     docs = _docs(spark)
-    # every postings frame is over a 0-byte threshold: the persist branch
+    # every postings frame is over a 0-byte threshold: the columnar form
     monkeypatch.setattr(d, "_POSTINGS_PERSIST_MIN_BYTES", 0)
-    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text",
-                                      n=3, threshold=0.5)
-    pairs.count()
-    assert len(d._CACHED_POSTINGS) >= 1
-    cached = list(d._CACHED_POSTINGS)
-    assert d.release_cached_postings() == len(cached)
-    assert d._CACHED_POSTINGS == []
-    for frame in cached:
-        assert not frame.is_cached
-
-
-def test_postings_cache_scope_and_fifo_cap(spark, monkeypatch):
-    """round-12 (VERDICT r11 item 4): postings_cache_scope releases only
-    the frames cached INSIDE the scope, leaving a pre-existing cache
-    alone; the FIFO cap bounds registry growth in sessions that never
-    release."""
-    import music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators.dedup as d
-    d.release_cached_postings()
-    docs = _docs(spark)
-    monkeypatch.setattr(d, "_POSTINGS_PERSIST_MIN_BYTES", 0)
-    try:
-        outer = dedup.ngram_jaccard_pairs(docs, "doc_id", "text",
-                                          n=3, threshold=0.5)
-        outer.count()
-        n_outer = len(d._CACHED_POSTINGS)
-        assert n_outer >= 1
-        with d.postings_cache_scope():
-            dedup.ngram_jaccard_pairs(docs, "doc_id", "text",
-                                      n=3, threshold=0.8).count()
-            assert len(d._CACHED_POSTINGS) > n_outer
-        # scope exit released ONLY the inner frames
-        assert len(d._CACHED_POSTINGS) == n_outer
-        assert all(f.is_cached for f in d._CACHED_POSTINGS)
-        # FIFO cap: the oldest frame is evicted once the registry
-        # exceeds the bound
-        monkeypatch.setattr(d, "_POSTINGS_CACHE_MAX", n_outer)
-        oldest = d._CACHED_POSTINGS[0]
-        dedup.ngram_jaccard_pairs(docs, "doc_id", "text",
-                                  n=4, threshold=0.8).count()
-        assert len(d._CACHED_POSTINGS) == n_outer
-        assert not oldest.is_cached
-    finally:
-        d.release_cached_postings()
+    with materialize.scope():
+        n = dedup.ngram_jaccard_pairs(docs, "doc_id", "text",
+                                      n=3, threshold=0.5).count()
+        assert not cache.isEmpty()
+    assert cache.isEmpty()
+    assert dedup.ngram_jaccard_pairs(docs, "doc_id", "text",
+                                     n=3, threshold=0.5).count() == n
+    assert cache.isEmpty()
 
 
 def test_curation_pipeline_releases_postings_cache(spark, monkeypatch):
-    """round-12 (VERDICT r11 item 4): after curation_pipeline returns,
-    the session's cache manager is back to baseline — no accumulated
-    postings InMemoryRelations — and the returned frame is still fully
-    consumable (its plan holds only the CC label leaves)."""
+    """A scope around a curation build and its action leaves the session
+    as it found it: no persistent RDD and no cached postings relation
+    outlive the scope, and the returned frame is fully consumable inside
+    it."""
+    from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark import materialize
     import music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators.dedup as d
     from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators import corpus
-    d.release_cached_postings()
     spark.catalog.clearCache()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     docs = _docs(spark)
-    # force the branch that registers
+    # force the columnar postings form
     monkeypatch.setattr(d, "_POSTINGS_PERSIST_MIN_BYTES", 0)
-    out = corpus.curation_pipeline(docs)
-    assert d._CACHED_POSTINGS == []
+    with materialize.scope():
+        out = corpus.curation_pipeline(docs)
+        assert out.count() > 0
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    assert out.count() > 0         # release never costs correctness

@@ -36,6 +36,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.materialize import scope  # noqa: E402
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.session import (  # noqa: E402
     get_spark,
 )
@@ -225,7 +226,6 @@ def stream_probe(spark: SparkSession, sf1: str, *,
         _shutil.rmtree(tmp)
     songs = _cat.songs_from_part(_cat.load_table(spark, sf1, "part"))
     _io.write_csv(songs, os.path.join(base, "raw", "songs"))
-    spark.catalog.clearCache()
 
     pipe = Pipeline(spark, PipelineConfig(base_dir=base))
     walls: list[dict] = []
@@ -270,14 +270,21 @@ def stream_probe(spark: SparkSession, sf1: str, *,
     }
 
 
+def _run(spark: SparkSession, fn, sf_dir: str) -> None:
+    """Build and run one query in its own materialize scope, so its
+    dedup postings take the columnar route past the size threshold and
+    its stored frames are released before the next run."""
+    with scope():
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+
 def _time(spark: SparkSession, fn, sf_dir: str, n: int = 2) -> float:
     best = None
     for _ in range(n):
         t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        _run(spark, fn, sf_dir)
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
-        spark.catalog.clearCache()
     return round(best, 3)
 
 
@@ -314,9 +321,7 @@ def main() -> int:
                       "embeddings"):
                 spark.read.parquet(os.path.join(d, f"{t}.parquet")).count()
             for name in CHAIN:
-                qs[name](spark, d).write.format("noop") \
-                    .mode("overwrite").save()
-            spark.catalog.clearCache()
+                _run(spark, qs[name], d)
 
     for name in (() if quick else CHAIN):
         t_small = _time(spark, qs[name], SRC)
@@ -339,11 +344,11 @@ def main() -> int:
 
     def _containment_counts(sf_dir: str) -> dict[str, int]:
         docs = _cat.load_table(spark, sf_dir, "documents")
-        cand, _sh = dedup.containment_candidates(docs, "doc_id", "text",
-                                                 n=3, threshold=0.8)
-        c = cand.count()
-        r = qs["neardup_containment_pairs"](spark, sf_dir).count()
-        spark.catalog.clearCache()
+        with scope():
+            cand, _sh = dedup.containment_candidates(docs, "doc_id", "text",
+                                                     n=3, threshold=0.8)
+            c = cand.count()
+            r = qs["neardup_containment_pairs"](spark, sf_dir).count()
         return {"candidate_pairs": int(c), "result_pairs": int(r)}
 
     if not quick:
@@ -394,9 +399,7 @@ def main() -> int:
             # real growth.
             for name in ("neardup_containment_pairs", "part_order_pagerank",
                          "dedup_clusters"):
-                qs[name](spark, sf10).write.format("noop") \
-                    .mode("overwrite").save()      # untimed warm
-                spark.catalog.clearCache()
+                _run(spark, qs[name], sf10)      # untimed warm
                 t10 = _time(spark, qs[name], sf10,
                             n=1)
                 t1q = result[name]["sf1"]
@@ -425,11 +428,11 @@ def main() -> int:
             # count exactly like containment.
             def _jaccard_counts(sf_dir: str) -> dict[str, int]:
                 docs = _cat.load_table(spark, sf_dir, "documents")
-                cand, _sh = dedup.jaccard_candidates(docs, "doc_id", "text",
-                                                     n=3, threshold=0.8)
-                c = cand.count()
-                r = qs["dedup_clusters"](spark, sf_dir).count()
-                spark.catalog.clearCache()
+                with scope():
+                    cand, _sh = dedup.jaccard_candidates(
+                        docs, "doc_id", "text", n=3, threshold=0.8)
+                    c = cand.count()
+                    r = qs["dedup_clusters"](spark, sf_dir).count()
                 return {"candidate_pairs": int(c), "cluster_rows": int(r)}
 
             j1 = _jaccard_counts(sf1)
@@ -610,7 +613,6 @@ def shuffle_totals():
 res = {}
 for name, df in build().items():
     df.write.format("noop").mode("overwrite").save()   # untimed JIT warm
-    spark.catalog.clearCache()
     w0, r0 = shuffle_totals()
     t0 = time.perf_counter()
     df.write.format("noop").mode("overwrite").save()
