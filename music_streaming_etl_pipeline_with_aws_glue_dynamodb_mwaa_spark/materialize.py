@@ -11,9 +11,12 @@ registered until it is unpersisted.
 :func:`scope` owns them. Every frame materialized while a scope is open
 (in this thread, or in a thread started under a copy of its context) is
 held by the innermost open scope and released when it exits, normally
-or by an exception. Outside any scope a checkpoint is left to the
-ContextCleaner, and a columnar request takes the checkpoint form, since
-no owner would ever release the cached relation.
+or by an exception. A columnar request for a plan that is already cached
+reads that cache and leaves it to the scope that cached it, so an inner
+scope cannot release an outer one's frame. Outside any scope a
+checkpoint is left to the ContextCleaner, and a columnar request takes
+the checkpoint form, since no owner would ever release the cached
+relation.
 
 A released checkpoint is not recomputed: an action on it afterwards
 fails. So a scope is opened only by code that runs every action on the
@@ -28,6 +31,7 @@ import contextlib
 import contextvars
 from collections.abc import Iterator
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 #: (frame, columnar) pairs held by the innermost open scope; None outside
@@ -41,7 +45,13 @@ def materialize(df: DataFrame, *, eager: bool = True,
     the cached-relation form, which holds only inside a scope."""
     held = _SCOPE.get()
     columnar = columnar and held is not None
-    out = df.persist() if columnar else df.localCheckpoint(eager=eager)
+    if columnar and df.storageLevel != StorageLevel.NONE:
+        # the cache manager keys a cached relation by its plan, so this
+        # frame reads a cache that another owner holds and releases
+        held = None
+        out = df
+    else:
+        out = df.persist() if columnar else df.localCheckpoint(eager=eager)
     if columnar and eager:
         out.count()
     if held is not None:

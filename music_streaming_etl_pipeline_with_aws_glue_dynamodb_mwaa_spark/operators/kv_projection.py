@@ -11,7 +11,7 @@ whole-stage codegen and scales with the cluster instead of one loader process
 ``load_dynamo.py:61-62`` — its scale ceiling).
 
 Each function returns a DataFrame in exactly the item shape; the KV sink
-(plans.kvstore) writes it via ``foreachPartition`` batch-put.
+(plans.kvstore) writes it.
 """
 
 from __future__ import annotations

@@ -49,6 +49,12 @@ def top_songs_per_genre(joined: DataFrame, k: int = 3) -> DataFrame:
 
 def top_genres_per_day(joined: DataFrame, k: int = 5) -> DataFrame:
     """W2 (REF/glue_jobs/transform.py:46-50): top-k genres per day."""
-    counts = counts_per_group(joined, ["listen_date", "track_genre"])
+    return rank_genres_per_day(counts_per_group(joined, ["listen_date", "track_genre"]), k)
+
+
+def rank_genres_per_day(counts: DataFrame, k: int = 5) -> DataFrame:
+    """W2's ranking of (listen_date, track_genre, listen_count) rows: the
+    k most played genres per day, ties by genre name. The pipeline ranks
+    the play counts of its daily genre KPIs with it."""
     return top_k_per_group(counts, ["listen_date"], "listen_count",
                            k, tie_break=["track_genre"])

@@ -10,9 +10,10 @@ service without a JVM connector:
 
 - reads are partitioned (``rowid % N`` buckets over the sqlite item table —
   substitute segment/totalSegments for a real DynamoDB parallel scan);
-- writes are distributed upserts through ``kvstore.write_partition``, the
-  same task-side writer as ``kvstore.write_dataframe`` (25-item boto3
-  batch_writer semantics). Append-mode
+- writes are distributed upserts through ``kvstore.write_partition``
+  (25-item boto3 batch_writer semantics), one writer per task; the
+  pipeline's ``kvstore.write_dataframe`` instead collects its bounded
+  aggregate items and writes them on the driver. Append-mode
   task batches commit as they flush — safe because INSERT OR REPLACE by
   primary key is idempotent under task retry/speculation (partial data on
   JOB failure mirrors DynamoDB batch-writer semantics). ``mode

@@ -6,18 +6,22 @@ Mirrors the observable surface of the reference's DynamoDB layer —
 ``update_item`` ledger calls (``REF/dags/music_etl_pipeline.py:34-56``) — over
 an embedded sqlite file, so the whole pipeline runs hermetically.
 
-The Spark-facing write path is ``write_dataframe``: ``df.foreachPartition``
-with a connection per partition and 25-item transactional batches — the same
-shape as a real DynamoDB ``batch_writer`` loader on a cluster, and the fix
-for the reference's driver-side full materialization
-(``load_dynamo.py:61-62``). Several tables load in one pass: their item
-frames are tagged with the table name and unioned, and each row goes to its
-own table. ``write_partition`` is the one task-side writer, shared with the
-``kvstore`` Python Data Source (``plans.kv_datasource``); swapping sqlite
-for boto3 changes only it.
+The pipeline's write path is ``write_dataframe``: one Spark job collects
+the table-tagged union of the tables' item frames, and the driver writes
+the rows, replacing the whole item set of each (table, hash key) it
+touches in one transaction. The frames are aggregates, at most dates ×
+genres × (1 + top-songs k) + dates × top-genres k items per batch
+whatever the fact size, and the store is one local file with one writer
+lock, which task-side writers would only queue on; the driver-side write
+starts no Python worker. (The reference materializes the whole dataset in
+driver dicts, ``load_dynamo.py:61-62``.) ``write_partition`` is the
+task-side writer of the ``kvstore`` Python Data Source
+(``plans.kv_datasource``): 25-item transactional upsert batches, like a
+DynamoDB ``batch_writer``. Swapping sqlite for boto3 changes these two
+writers.
 
-Items are stored as JSON documents keyed by (hash_key, range_key), with
-DynamoDB put_item upsert semantics.
+Items are stored as JSON documents keyed by (hash_key, range_key);
+``put_item`` and ``write_partition`` upsert, as DynamoDB's put_item does.
 """
 
 from __future__ import annotations
@@ -25,7 +29,7 @@ from __future__ import annotations
 import json
 import os
 import sqlite3
-from collections.abc import Iterable
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 from functools import reduce
 from itertools import islice
@@ -45,6 +49,7 @@ CREATE TABLE IF NOT EXISTS kv_items (
 
 BATCH_SIZE = 25  # items per transaction, as boto3's batch_writer
 TABLE_COL = "_kv_table"  # names each row's table in a multi-table load
+_UPSERT = "INSERT OR REPLACE INTO kv_items(tbl, hk, rk, item) VALUES (?,?,?,?)"
 
 
 def _connect(path: str) -> sqlite3.Connection:
@@ -145,54 +150,71 @@ class KVStore:
             return con.execute("SELECT count(*) FROM kv_items WHERE tbl=?", (table,)).fetchone()[0]
 
 
+def _records(con: sqlite3.Connection, rows: Iterable,
+             tables: dict[str, list[str]], columns: list[str],
+             label: str | None = None) -> Iterator[tuple[str, str, str, str]]:
+    """``rows`` as (table, hash key, range key, JSON item) records.
+    ``columns`` are the rows' columns; ``tables`` maps each table to its
+    item columns. With one table every row is one of its items; with
+    several, each row names its table in ``TABLE_COL``. The tables' key
+    columns are read once. ``label`` stores the items under another table
+    name (the data source's staged overwrite)."""
+    pos = {c: i for i, c in enumerate(columns)}
+    plans = {}
+    for t, cols in tables.items():
+        hk_col, rk_col = _table_keys(con, t)
+        plans[t] = ([(c, pos[c]) for c in cols], hk_col, rk_col)
+    tag = pos[TABLE_COL] if len(tables) > 1 else None
+    only = next(iter(tables))
+    for row in rows:
+        t = only if tag is None else row[tag]
+        cols, hk_col, rk_col = plans[t]
+        it = {c: row[i] for c, i in cols}
+        yield (label or t, str(it[hk_col]), str(it[rk_col]) if rk_col else "",
+               json.dumps(it, default=str))
+
+
 def write_partition(rows: Iterable, store_path: str,
                     tables: dict[str, list[str]], columns: list[str], *,
                     label: str | None = None) -> None:
     """One task's rows as 25-item transactional upsert batches (boto3
-    batch_writer, REF/glue_jobs/load_dynamo.py:69-78). ``columns`` are the
-    rows' columns; ``tables`` maps each table to its item columns. With
-    one table every row is one of its items; with several, each row names
-    its table in ``TABLE_COL``. The tables' key columns are read once per partition.
-    ``label`` stores the items under another table name (the data source's
-    staged overwrite)."""
+    batch_writer, REF/glue_jobs/load_dynamo.py:69-78); the arguments are
+    those of ``_records``."""
     con = _connect(store_path)
     try:
-        pos = {c: i for i, c in enumerate(columns)}
-        plans = {}
-        for t, cols in tables.items():
-            hk_col, rk_col = _table_keys(con, t)
-            plans[t] = ([(c, pos[c]) for c in cols], hk_col, rk_col)
-        tag = pos[TABLE_COL] if len(tables) > 1 else None
-        only = next(iter(tables))
-
-        def record(row) -> tuple:
-            t = only if tag is None else row[tag]
-            cols, hk_col, rk_col = plans[t]
-            it = {c: row[i] for c, i in cols}
-            return (label or t, str(it[hk_col]), str(it[rk_col]) if rk_col else "",
-                    json.dumps(it, default=str))
-
-        records = map(record, rows)
+        records = _records(con, rows, tables, columns, label)
         while batch := list(islice(records, BATCH_SIZE)):
-            con.executemany(
-                "INSERT OR REPLACE INTO kv_items(tbl, hk, rk, item) VALUES (?,?,?,?)",
-                batch)
+            con.executemany(_UPSERT, batch)
             con.commit()
     finally:
         con.close()
 
 
 def write_dataframe(items: dict[str, DataFrame], store_path: str) -> None:
-    """S10: distributed KV load of one or more tables — one
-    ``foreachPartition`` pass over the table-tagged union of their item
-    frames, one ``write_partition`` per partition.
+    """S10: KV load of one or more tables. One Spark job collects the
+    table-tagged union of their item frames, and the driver writes the
+    rows. Each (table, hash key) the rows touch has its whole item set
+    replaced, in one transaction per hash key: a range key the new items
+    no longer hold is deleted, as the date's processed partition is
+    overwritten. Hash keys the rows do not touch keep their items.
 
-    Rows arrive already item-shaped (operators.kv_projection) so the per-row
-    work is a dict dump, not the reference's per-row build/guard/cast chain.
+    The pipeline's item frames are aggregates, at most dates × genres ×
+    (1 + top-songs k) + dates × top-genres k rows per batch whatever the
+    number of stream rows. They arrive item-shaped
+    (operators.kv_projection), so the per-row work is a dict dump.
     """
     tables = {t: df.columns for t, df in items.items()}
     union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
                    (df.withColumn(TABLE_COL, F.lit(t)) for t, df in items.items()))
-    columns = union.columns
-    union.foreachPartition(
-        lambda rows: write_partition(rows, store_path, tables, columns))
+    rows = union.collect()
+    con = _connect(store_path)
+    try:
+        by_key: dict[tuple[str, str], list[tuple]] = {}
+        for rec in _records(con, rows, tables, union.columns):
+            by_key.setdefault(rec[:2], []).append(rec)
+        for (table, hk), recs in by_key.items():
+            with con:
+                con.execute("DELETE FROM kv_items WHERE tbl=? AND hk=?", (table, hk))
+                con.executemany(_UPSERT, recs)
+    finally:
+        con.close()

@@ -24,8 +24,9 @@ Deliberate divergences from the reference (SURVEY.md §7 risk 4):
   (README.md:193) — the reference writes unpartitioned parquet that its own
   loader cannot discover (SURVEY.md §1.4);
 - each raw table is scanned once: the parsed rows are cached with a
-  validity flag, one aggregate gives the (good, bad) counts, and the
-  validated and quarantine sinks are written from that cache;
+  validity flag, the validated and quarantine sinks are written from that
+  cache, and an Observation on the validated write gives the (good, bad)
+  counts;
 - an unchanged dimension snapshot is reused: the pipeline remembers, per
   dimension, the (path, size, mtime) fingerprint of its raw files and the
   counts of its last validation. While the fingerprint holds, the batch
@@ -33,22 +34,32 @@ Deliberate divergences from the reference (SURVEY.md §7 risk 4):
   router the stored counts; any change to the raw files re-validates. The
   reference rewrites ``clean_songs``/``clean_users`` every run
   (``validate.py:65-66``), which gives the same rows;
-- the joined frame is cached across its 3-way fan-out — the reference
-  recomputes scan+join per output (``transform.py:53-55``) — and, like
-  the cached raw tables, is held by the ``materialize.scope()`` that
-  ``process`` opens for the batch, which releases it once the KV load has
-  read it; the three KV tables load as one
-  ``foreachPartition`` pass over their table-tagged union
-  (``load_dynamo.py:157-173`` loads them one after another);
-- validation and KV load are distributed Spark jobs, not single-process
-  pandas/driver loops;
+- one aggregation pass per output: the joined frame is cached for the
+  two aggregates that read it — the reference recomputes scan+join per
+  output (``transform.py:53-55``) — and ``top_genres`` ranks the
+  ``avg_metrics`` play counts instead of aggregating the join again. The
+  three outputs are stored as checkpoints that their partitioned writes
+  fill and the KV load reads. Everything cached belongs to the
+  ``materialize.scope()`` that ``process`` opens for the batch, which
+  releases it after the KV load;
+- the KV load is one Spark job and a driver-side write: the three tables'
+  items are collected as one table-tagged union and written to the store
+  (``kvstore.write_dataframe``), where the reference loads the tables one
+  after another (``load_dynamo.py:157-173``). The items are aggregates,
+  at most dates × genres × (1 + ``top_songs_k``) + dates ×
+  ``top_genres_k`` of them per batch whatever the file size. Each date a
+  batch touches has its item set replaced in every KV table, as its
+  processed partitions are; the reference's ``put_item`` upserts and
+  leaves range keys the date no longer has;
+- validation is distributed Spark jobs, not single-process pandas loops;
 - PER-FILE aggregation granularity, faithfully kept BY DEFAULT:
   transform/load_kv aggregate only the newly validated file, while
   ``validated/streams`` accumulates. If two stream files share a
   listen_date, that date's processed partition and KV rows reflect the
-  LAST file's aggregates only (the reference behaves identically — each
-  Glue run reads one raw file, ``transform.py:16``, and load_dynamo
-  upserts by key). ``PipelineConfig(cumulative=True)`` opts into
+  LAST file's aggregates only (as in the reference, where each Glue run
+  reads one raw file, ``transform.py:16``; its upserting load_dynamo also
+  keeps the range keys of earlier files that the last one lacks).
+  ``PipelineConfig(cumulative=True)`` opts into
   consistent shared-date aggregates instead: the affected dates are
   re-read from the (listen_date-partitioned, hence partition-pruned)
   validated lake — per-batch cost bounded by touched dates, not lake
@@ -61,7 +72,7 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -189,8 +200,9 @@ class Pipeline:
 
         One scan of the raw input: the parsed rows are cached with their
         validity flag (the same split as ``validate.split_valid_invalid``);
-        the validated write, one aggregate counting both sides and the
-        quarantine write all read that cache.
+        the validated write and the quarantine write read that cache. An
+        Observation on the cached rows, below the good-row filter, counts
+        both sides during the validated write.
         Returns (good_frame, (good, bad)) — the counts feed the router."""
         required = REQUIRED_COLUMNS[name]
         validate.required_columns_present(raw, required)
@@ -201,13 +213,16 @@ class Pipeline:
         flagged = materialize(raw.withColumn(_VALID, F.coalesce(
             validate.valid_predicate(raw, required), F.lit(False))),
             eager=False, columnar=True)
-        good = flagged.filter(F.col(_VALID)).drop(_VALID, io.CORRUPT_COL)
-        # the write fills the cache; counting first would cost one more job
-        io.write_parquet(good,
+        counts = Observation()
+        observed = flagged.observe(counts, F.count_if(F.col(_VALID)).alias("good"),
+                                   F.count_if(~F.col(_VALID)).alias("bad"))
+        # the write fills the cache and counts both sides; the frame handed
+        # on to transform reads the cache without the observation
+        io.write_parquet(observed.filter(F.col(_VALID)).drop(_VALID, io.CORRUPT_COL),
                          os.path.join(self.cfg.validated_dir, name), mode=mode,
                          partition_by=partition_by)
-        n_good, n_bad = flagged.agg(F.count_if(F.col(_VALID)),
-                                    F.count_if(~F.col(_VALID))).first()
+        good = flagged.filter(F.col(_VALID)).drop(_VALID, io.CORRUPT_COL)
+        n_good, n_bad = counts.get["good"], counts.get["bad"]
         if n_bad:  # the reference also writes bad-records only when non-empty (:43-45)
             io.write_quarantine(flagged.filter(~F.col(_VALID)).drop(_VALID),
                                 self.cfg.base_dir, name, mode=mode)
@@ -261,16 +276,24 @@ class Pipeline:
 
     # -- stage 2: transform ---------------------------------------------------
     def transform(self, streams: DataFrame, songs: DataFrame) -> dict[str, DataFrame]:
-        """KPIs and top-k over the joined frame, which stays cached for the
-        batch: the KV load re-reads it, and the scope :meth:`process` opens
-        releases it."""
-        # 3-way fan-out plus the KV load; the reference recomputes it 3×
+        """KPIs and top-k over the joined frame, which stays cached while
+        both aggregates read it. Each output is stored as a checkpoint that
+        its partitioned write fills and the KV load reads; the scope
+        :meth:`process` opens releases them. ``top_genres`` ranks
+        ``avg_metrics``' play counts: after the inner join on ``track_id``,
+        its ``count("track_id")`` is the ``count(*)`` that
+        ``topk.top_genres_per_day`` takes."""
+        # the reference recomputes scan + join for each output
         joined = materialize(kpi.join_streams_songs(streams, songs),
                              eager=False, columnar=True)
+        avg_metrics = materialize(kpi.daily_genre_kpis(joined), eager=False)
         outputs = {
-            "avg_metrics": kpi.daily_genre_kpis(joined),
-            "top_songs": topk.top_songs_per_genre(joined, self.cfg.top_songs_k),
-            "top_genres": topk.top_genres_per_day(joined, self.cfg.top_genres_k),
+            "avg_metrics": avg_metrics,
+            "top_songs": materialize(
+                topk.top_songs_per_genre(joined, self.cfg.top_songs_k), eager=False),
+            "top_genres": materialize(topk.rank_genres_per_day(
+                avg_metrics.select("listen_date", "track_genre", "listen_count"),
+                self.cfg.top_genres_k), eager=False),
         }
         for name, df in outputs.items():
             io.write_parquet(df, os.path.join(self.cfg.processed_dir, name),
@@ -289,9 +312,10 @@ class Pipeline:
     def process(self, streams_raw: DataFrame) -> bool:
         """validate → route → transform → KV load for one batch of raw stream
         rows; both drivers run exactly this. False when the router rejects
-        the batch (nothing after validation runs). The cached raw tables and
-        the joined frame belong to this call's ``materialize.scope()``,
-        which releases them once the KV load has read them."""
+        the batch (nothing after validation runs). The cached raw tables,
+        the joined frame and the stored outputs belong to this call's
+        ``materialize.scope()``, which releases them once the KV load has
+        read them."""
         with scope():
             frames, counts = self.validate_batch(streams_raw)
             if not self.cfg.on_validation_result(counts):

@@ -81,6 +81,24 @@ def test_nested_scope_releases_only_its_own_frames(spark):
     assert _state(spark) == entry
 
 
+def test_inner_scope_leaves_an_outer_cached_plan_cached(spark):
+    """The cache manager keys a cached relation by its plan: an inner
+    scope that materializes a plan the outer scope already cached reads
+    the outer cache and does not release it on exit."""
+    spark.catalog.clearCache()
+    entry = _state(spark)
+    with mat.scope():
+        outer = mat.materialize(_frame(spark, 17), columnar=True)
+        mid = _state(spark)
+        assert len(mid[0]) == len(entry[0]) + 1
+        with mat.scope():
+            inner = mat.materialize(_frame(spark, 17), columnar=True)
+            assert inner.count() == 200
+        assert _state(spark) == mid
+        assert outer.count() == 200
+    assert _state(spark) == entry
+
+
 def test_release_frees_one_frame_before_the_scope_exits(spark):
     spark.catalog.clearCache()
     entry = _state(spark)

@@ -1,8 +1,10 @@
 from __future__ import annotations
 
 import os
+import re
 import shutil
 from collections import Counter
+from contextlib import contextmanager
 from uuid import uuid4
 
 import pytest
@@ -21,6 +23,7 @@ from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.plans.pipeli
     PipelineConfig,
     route_reject_if_any_bad,
 )
+from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators import kpi, topk
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.sources import io as lake_io
 
 SONGS_CSV = (
@@ -407,23 +410,33 @@ def test_corrupt_rows_are_quarantined(spark, lake):
     assert sorted(r["track_id"] for r in songs.collect()) == ["t1", "t2", "t3"]
 
 
+@contextmanager
+def _job_group(sc, label):
+    """Run the block's Spark jobs under a fresh job group; yields its id."""
+    group = f"{label}-{uuid4().hex}"
+    sc.setJobGroup(group, label)
+    try:
+        yield group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_second_file_runs_fewer_spark_jobs(spark, lake, monkeypatch):
     """Per-file cost guard, as a host-independent job count: each file runs
-    under its own job group. The first file validates and writes songs and
-    users (a write and a count each, at least four jobs); the second file
-    reuses both snapshots, so it runs at least that many fewer jobs."""
+    under its own job group. The first file validates songs and users (a
+    validated write each, plus the users' quarantine write) and quarantines
+    a streams row, at least four jobs; the second file reuses both
+    snapshots and has no bad row, so it runs at least that many fewer
+    jobs."""
     sc = spark.sparkContext
     groups = []
     process = Pipeline.process
 
     def per_file(self, streams_raw):
-        groups.append(f"pipeline-file-{uuid4().hex}")
-        sc.setJobGroup(groups[-1], "one pipeline file")
-        try:
+        with _job_group(sc, "pipeline-file") as group:
+            groups.append(group)
             return process(self, streams_raw)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
 
     monkeypatch.setattr(Pipeline, "process", per_file)
     assert Pipeline(spark, PipelineConfig(base_dir=str(lake))).run_all() == [
@@ -431,3 +444,143 @@ def test_second_file_runs_fewer_spark_jobs(spark, lake, monkeypatch):
     jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
     assert jobs[0] > 0
     assert jobs[1] <= jobs[0] - 4, jobs
+
+
+def _stage_job_groups(monkeypatch, sc):
+    """Run every call of the three stages under its own job group; the
+    returned list gets one (stage, group) pair per call, in call order."""
+    calls = []
+    for stage in ("validate_batch", "transform", "load_kv"):
+        def grouped(self, *args, _fn=getattr(Pipeline, stage), _stage=stage):
+            with _job_group(sc, _stage) as group:
+                calls.append((_stage, group))
+                return _fn(self, *args)
+        monkeypatch.setattr(Pipeline, stage, grouped)
+    return calls
+
+
+def _python_jobs(spark, job_ids):
+    """The jobs among ``job_ids`` with a stage that runs Python: a node of
+    the stage's RDD operation graph is a ``PythonRDD`` (the RDD API's
+    per-partition functions) or a Python, pandas or Arrow evaluation
+    (UDFs)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+
+    def runs_python(stage):
+        names = re.findall(r'label="([^"<]*)', dot(store.operationGraphForStage(stage)))
+        return any(re.search(r"Python|Pandas|Arrow", n) for n in names)
+
+    return [j for j in job_ids
+            if any(map(runs_python, sc.statusTracker().getJobInfo(j).stageIds))]
+
+
+def test_steady_state_file_job_budget(spark, lake, monkeypatch):
+    """Jobs per stage of a steady-state file (the second: both dimension
+    snapshots reused, no bad row), one job group per stage. Validate runs
+    at most 2 jobs: the validated write also counts both sides, through an
+    Observation. The KV load runs 1, the driver's collect of the stored
+    outputs, and no Python task."""
+    sc = spark.sparkContext
+    calls = _stage_job_groups(monkeypatch, sc)
+    assert Pipeline(spark, PipelineConfig(base_dir=str(lake))).run_all() == [
+        "streams1.csv", "streams2.csv"]
+    assert [s for s, _ in calls] == ["validate_batch", "transform", "load_kv"] * 2
+    jobs = {s: list(sc.statusTracker().getJobIdsForGroup(g)) for s, g in calls[3:]}
+    assert 1 <= len(jobs["validate_batch"]) <= 2, jobs
+    assert len(jobs["load_kv"]) == 1, jobs
+    assert _python_jobs(spark, jobs["load_kv"]) == []
+
+
+def test_python_job_check_sees_a_task_side_write(spark):
+    """The job budget's Python check flags a ``foreachPartition`` job and
+    passes a plain collect."""
+    sc = spark.sparkContext
+    jobs = {}
+    for name, action in [("python", lambda: spark.range(4).foreachPartition(lambda rows: None)),
+                         ("sql", lambda: spark.range(4).collect())]:
+        with _job_group(sc, name) as group:
+            action()
+        jobs[name] = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert _python_jobs(spark, jobs["python"]) == jobs["python"] != []
+    assert _python_jobs(spark, jobs["sql"]) == []
+
+
+def test_pipeline_top_genres_match_the_operator_on_ties(spark, tmp_path):
+    """processed/top_genres, which the pipeline ranks from avg_metrics'
+    play counts, equals ``topk.top_genres_per_day`` over the same joined
+    rows. Genres tie on both days, k=3 cuts inside a tie, and one play has
+    no song (the inner join drops it)."""
+    base = tmp_path / "ties"
+    (base / "raw" / "songs").mkdir(parents=True)
+    (base / "raw" / "streams").mkdir(parents=True)
+    genres = ["rock", "jazz", "pop", "folk", "blues"]
+    (base / "raw" / "songs" / "songs.csv").write_text(
+        "track_id,track_name,track_genre,duration_ms\n"
+        + "".join(f"t{i},S{i},{g},1000\n" for i, g in enumerate(genres)))
+    plays = {"2024-01-05": ["t0", "t0", "t1", "t1", "t2", "t3", "t4", "t9"],
+             "2024-01-06": ["t2", "t2", "t2", "t3", "t3", "t3", "t0"]}
+    (base / "raw" / "streams" / "s.csv").write_text(
+        "user_id,track_id,listen_time\n" + "".join(
+            f"u{n},{t},{d}T10:00:{n:02d}\n"
+            for d, ts in plays.items() for n, t in enumerate(ts)))
+    Pipeline(spark, PipelineConfig(base_dir=str(base), top_genres_k=3)).run_all()
+
+    def rows(df):
+        return sorted((str(r["listen_date"]), r["track_genre"], r["listen_count"],
+                       r["rank"]) for r in df.collect())
+
+    joined = kpi.join_streams_songs(
+        spark.read.parquet(str(base / "validated" / "streams")),
+        spark.read.parquet(str(base / "validated" / "songs")))
+    expected = rows(topk.top_genres_per_day(joined, k=3))
+    assert expected == [
+        ("2024-01-05", "blues", 1, 3), ("2024-01-05", "jazz", 2, 1),
+        ("2024-01-05", "rock", 2, 2), ("2024-01-06", "folk", 3, 1),
+        ("2024-01-06", "pop", 3, 2), ("2024-01-06", "rock", 1, 3)]
+    assert rows(spark.read.parquet(str(base / "processed" / "top_genres"))) == expected
+
+
+def test_header_only_stream_file(spark, lake):
+    """A stream file with a header and no rows: the validated write's
+    Observation gives the router (0, 0) for streams, and the batch writes
+    no KV item."""
+    for f in (lake / "raw" / "streams").iterdir():
+        f.unlink()
+    (lake / "raw" / "streams" / "empty.csv").write_text("user_id,track_id,listen_time\n")
+    seen = {}
+    pipe = Pipeline(spark, PipelineConfig(
+        base_dir=str(lake), on_validation_result=lambda c: seen.update(c) or True))
+    assert pipe.run_once() == "empty.csv"
+    assert seen == {"streams": (0, 0), "songs": (3, 0), "users": (2, 1)}
+    assert [pipe.store.count(t) for t in
+            (KPI_TABLE, TOP_SONGS_TABLE, TOP_GENRES_TABLE)] == [0, 0, 0]
+
+
+def test_same_date_file_replaces_the_dates_kv_items(spark, lake):
+    """A later file for a loaded date replaces that date's whole item set
+    in each KV table, as it replaces the date's processed partition:
+    streams3 plays only Beta on 2024-01-01, so rock#Alpha leaves
+    TopSongsPerGenre. The dates streams3 does not touch keep their items."""
+    f3 = lake / "raw" / "streams" / "streams3.csv"
+    f3.write_text("user_id,track_id,listen_time\nu5,t2,2024-01-01T15:00:00\n")
+    os.utime(f3, (3000, 3000))
+    pipe = Pipeline(spark, PipelineConfig(base_dir=str(lake)))
+    assert pipe.run_all() == ["streams1.csv", "streams2.csv", "streams3.csv"]
+
+    top = spark.read.parquet(str(lake / "processed" / "top_songs"))
+    assert [(r["track_genre"], r["track_name"], r["rank"]) for r in
+            top.filter("listen_date = '2024-01-01'").collect()] == [("rock", "Beta", 1)]
+
+    def items(table, date, key):
+        return sorted((i[key], i.get("rank")) for i in pipe.store.scan(table)
+                      if i["date"] == date)
+
+    assert items(TOP_SONGS_TABLE, "2024-01-01", "genre_track") == [("rock#Beta", 1)]
+    assert items(KPI_TABLE, "2024-01-01", "genre") == [("rock", None)]
+    assert items(TOP_GENRES_TABLE, "2024-01-01", "genre") == [("rock", 1)]
+    assert pipe.store.get_item(KPI_TABLE, "2024-01-01", "rock")["listen_count"] == 1
+    assert items(TOP_SONGS_TABLE, "2024-01-02", "genre_track") == [("jazz#Gamma", 1)]
+    assert items(TOP_SONGS_TABLE, "2024-01-03", "genre_track") == [("rock#Beta", 1)]
