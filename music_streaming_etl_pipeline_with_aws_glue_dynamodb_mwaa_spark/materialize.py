@@ -23,16 +23,25 @@ fails. So a scope is opened only by code that runs every action on the
 frames it holds before it exits and returns no frame that reads them:
 ``Pipeline.process``, ``kmeans_fit``, ``train_unigram``, and the
 per-query build and exec of ``bench.py`` and ``tools/scale_probe.py``.
+
+:func:`overlapped` runs independent chains of actions on driver threads
+so that their Spark jobs share the executors. Each thread starts from the
+caller's Spark local properties and in a copy of its context, so its jobs
+are attributed, and its frames held, as the caller's would be.
 """
 
 from __future__ import annotations
 
 import contextlib
 import contextvars
+import functools
 from collections.abc import Iterator
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+from uuid import uuid4
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 #: (frame, columnar) pairs held by the innermost open scope; None outside
 _SCOPE = contextvars.ContextVar("materialize_scope", default=None)
@@ -41,8 +50,12 @@ _SCOPE = contextvars.ContextVar("materialize_scope", default=None)
 def materialize(df: DataFrame, *, eager: bool = True,
                 columnar: bool = False) -> DataFrame:
     """``df`` stored once for its consumers: computed now when ``eager``,
-    otherwise by the first action that reads it. ``columnar`` asks for
-    the cached-relation form, which holds only inside a scope."""
+    otherwise filled by the first action that reads it. Under AQE that
+    lazy form still runs the plan's shuffle and broadcast query stages at
+    this call; only the final stage waits for the action. (A
+    ``countDistinct`` aggregate runs 2 jobs here and 1 at the action with
+    AQE on, 0 and 1 with it off.) ``columnar`` asks for the
+    cached-relation form, which holds only inside a scope."""
     held = _SCOPE.get()
     columnar = columnar and held is not None
     if columnar and df.storageLevel != StorageLevel.NONE:
@@ -85,3 +98,48 @@ def scope() -> Iterator[None]:
         _SCOPE.reset(token)
         while held:
             _release(*held.pop())
+
+
+def overlapped(spark: SparkSession, *fns):
+    """Run ``fns`` on driver threads; return their results in order.
+
+    Each thread starts from the caller's Spark local properties (job
+    group, description, job tags) and session tags, copied here on the
+    caller's thread, so its jobs are attributed as the caller's would be.
+    It also runs in a copy of the caller's context, so the frames it
+    materializes belong to the caller's :func:`scope`.
+
+    Their Spark jobs also carry one shared job tag. The first failure
+    cancels the other threads' running jobs through that tag instead of
+    waiting for them to finish, then is raised together with any other
+    thread's own failure (an ``ExceptionGroup`` when there are several).
+    A sibling whose job was only cancelled adds nothing to the report."""
+    sc = spark.sparkContext
+    tag = f"overlapped-{uuid4().hex}"
+
+    def tagged(fn):
+        sc.addJobTag(tag)
+        try:
+            return fn()
+        finally:
+            sc.removeJobTag(tag)
+
+    # one wrap per thread: each gets its own copy of the properties
+    targets = [inheritable_thread_target(spark)(functools.partial(tagged, fn))
+               for fn in fns]
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(contextvars.copy_context().run, target)
+                   for target in targets]
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        failed = [f for f in futures if f in done and f.exception()]
+        if failed and pending:
+            sc.cancelJobsWithTag(tag)
+    # leaving the block joined the siblings; a cancelled job ends at once
+    errors = [f.exception() for f in failed] + [
+        e for f in futures if f in pending and (e := f.exception())
+        and tag not in str(e)]
+    if len(errors) > 1:
+        raise ExceptionGroup("overlapped driver jobs failed", errors)
+    if errors:
+        raise errors[0]
+    return [f.result() for f in futures]

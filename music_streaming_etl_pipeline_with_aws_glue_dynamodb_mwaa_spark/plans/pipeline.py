@@ -38,10 +38,18 @@ Deliberate divergences from the reference (SURVEY.md §7 risk 4):
   two aggregates that read it — the reference recomputes scan+join per
   output (``transform.py:53-55``) — and ``top_genres`` ranks the
   ``avg_metrics`` play counts instead of aggregating the join again. The
-  three outputs are stored as checkpoints that their partitioned writes
-  fill and the KV load reads. Everything cached belongs to the
-  ``materialize.scope()`` that ``process`` opens for the batch, which
-  releases it after the KV load;
+  three outputs are stored as lazy checkpoints: storing one runs its
+  plan's shuffle query stages (AQE), its partitioned write runs the final
+  stage and fills it, and the KV load reads it. Everything cached belongs
+  to the ``materialize.scope()`` that ``process`` opens for the batch,
+  which releases it after the KV load;
+- a stage's independent chains run concurrently, one driver thread each
+  (``materialize.overlapped``): validate runs each table that needs
+  validating on its own thread, and transform runs ``avg_metrics`` →
+  ``top_genres`` beside ``top_songs``. The reference's Glue steps run
+  one after another (``validate.py:53-67``, ``transform.py:53-55``).
+  Stage order holds: the router sees every table's counts before the
+  transform starts, and the KV load starts after both transform chains;
 - the KV load is one Spark job and a driver-side write: the three tables'
   items are collected as one table-tagged union and written to the store
   (``kvstore.write_dataframe``), where the reference loads the tables one
@@ -68,6 +76,7 @@ Deliberate divergences from the reference (SURVEY.md §7 risk 4):
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -76,7 +85,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..materialize import materialize, scope
+from ..materialize import materialize, overlapped, scope
 from ..operators import kpi, kv_projection, topk, validate
 from ..schemas import REQUIRED_COLUMNS, SONGS, STREAMS, USERS
 from ..sources import io
@@ -251,54 +260,71 @@ class Pipeline:
         Users are validated when the raw prefix exists (the testdata lake may
         omit them); streams append, dimensions overwrite. A dimension whose
         raw files are unchanged since its last validation is read back from
-        ``validated/<name>`` with its last counts instead. Returns the good
-        frames for transform plus per-table (good, bad) counts for the
-        routing branch."""
-        frames: dict[str, DataFrame] = {}
-        counts: dict[str, tuple[int, int]] = {}
-        frames["streams"], counts["streams"] = self._validate_frame(
-            "streams", streams_raw, mode="append")
+        ``validated/<name>`` with its last counts instead; each table that
+        is validated runs on its own driver thread. Returns the good frames
+        for transform plus per-table (good, bad) counts for the routing
+        branch."""
         dims = [("songs", self.cfg.raw_songs, SONGS)]
         if os.path.isdir(self.cfg.raw_users) and os.listdir(self.cfg.raw_users):
             dims.append(("users", self.cfg.raw_users, USERS))
+        results = dict.fromkeys(["streams", *(name for name, _, _ in dims)])
+        chains = {"streams": functools.partial(
+            self._validate_frame, "streams", streams_raw, mode="append")}
+        fingerprints = {}
         for name, raw_dir, schema in dims:
             fp = _fingerprint(raw_dir)
             snapshot = self._snapshots.get(name)
             if snapshot is not None and snapshot[0] == fp:
-                frames[name] = self.spark.read.schema(schema).parquet(
-                    os.path.join(self.cfg.validated_dir, name))
-                counts[name] = snapshot[1]
+                results[name] = (self.spark.read.schema(schema).parquet(
+                    os.path.join(self.cfg.validated_dir, name)), snapshot[1])
                 continue
-            frames[name], counts[name] = self._validate_frame(
-                name, io.read_csv(self.spark, raw_dir, schema), mode="overwrite")
-            self._snapshots[name] = (fp, counts[name])
-        return frames, counts
+            fingerprints[name] = fp
+            chains[name] = functools.partial(
+                self._validate_frame, name,
+                io.read_csv(self.spark, raw_dir, schema), mode="overwrite")
+        results.update(zip(chains, overlapped(self.spark, *chains.values())))
+        for name, fp in fingerprints.items():
+            self._snapshots[name] = (fp, results[name][1])
+        return ({n: frame for n, (frame, _) in results.items()},
+                {n: n_rows for n, (_, n_rows) in results.items()})
 
     # -- stage 2: transform ---------------------------------------------------
     def transform(self, streams: DataFrame, songs: DataFrame) -> dict[str, DataFrame]:
         """KPIs and top-k over the joined frame, which stays cached while
-        both aggregates read it. Each output is stored as a checkpoint that
-        its partitioned write fills and the KV load reads; the scope
-        :meth:`process` opens releases them. ``top_genres`` ranks
-        ``avg_metrics``' play counts: after the inner join on ``track_id``,
-        its ``count("track_id")`` is the ``count(*)`` that
-        ``topk.top_genres_per_day`` takes."""
+        both aggregates read it. Each output is stored as a lazy checkpoint
+        that its partitioned write fills and the KV load reads; the scope
+        :meth:`process` opens releases them. Two chains run on driver
+        threads: ``avg_metrics`` then ``top_genres``, and ``top_songs``.
+        ``top_genres`` ranks ``avg_metrics``' play counts: after the inner
+        join on ``track_id``, its ``count("track_id")`` is the ``count(*)``
+        that ``topk.top_genres_per_day`` takes."""
         # the reference recomputes scan + join for each output
         joined = materialize(kpi.join_streams_songs(streams, songs),
                              eager=False, columnar=True)
+
+        # storing avg_metrics runs its query stages, which fill the join's
+        # cache, before the chains fork: two chains planning over an
+        # unfilled cache would each run the job that fills it
         avg_metrics = materialize(kpi.daily_genre_kpis(joined), eager=False)
-        outputs = {
-            "avg_metrics": avg_metrics,
-            "top_songs": materialize(
-                topk.top_songs_per_genre(joined, self.cfg.top_songs_k), eager=False),
-            "top_genres": materialize(topk.rank_genres_per_day(
-                avg_metrics.select("listen_date", "track_genre", "listen_count"),
-                self.cfg.top_genres_k), eager=False),
-        }
-        for name, df in outputs.items():
+
+        def written(name: str, df: DataFrame) -> DataFrame:
             io.write_parquet(df, os.path.join(self.cfg.processed_dir, name),
                              partition_by=["listen_date"])
-        return outputs
+            return df
+
+        def genre_chain() -> DataFrame:
+            written("avg_metrics", avg_metrics)
+            return written("top_genres", materialize(topk.rank_genres_per_day(
+                avg_metrics.select("listen_date", "track_genre", "listen_count"),
+                self.cfg.top_genres_k), eager=False))
+
+        def song_chain() -> DataFrame:
+            return written("top_songs", materialize(topk.top_songs_per_genre(
+                joined, self.cfg.top_songs_k), eager=False))
+
+        top_genres, top_songs = overlapped(self.spark, genre_chain, song_chain)
+        return {"avg_metrics": avg_metrics, "top_songs": top_songs,
+                "top_genres": top_genres}
 
     # -- stage 3: KV load ----------------------------------------------------
     def load_kv(self, outputs: dict[str, DataFrame]) -> None:

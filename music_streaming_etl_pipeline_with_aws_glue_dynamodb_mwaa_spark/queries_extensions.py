@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .materialize import materialize
+from .materialize import materialize, overlapped
 from .operators import (
     asof,
     bpe,
@@ -4119,48 +4119,6 @@ _EVAL_EXACT_SQL = f"""
 """
 
 
-def _overlapped(spark: SparkSession, *fns):
-    """Run ``fns`` on driver threads; return their results in order.
-
-    Their Spark jobs carry one shared job tag. The first failure cancels
-    the other threads' running jobs through that tag instead of waiting
-    for them to finish, then is raised together with any other thread's
-    own failure (an ``ExceptionGroup`` when there are several). A sibling
-    whose job was only cancelled adds nothing to the report. Each thread
-    runs in a copy of the caller's context, so the frames it materializes
-    belong to the caller's ``materialize.scope()``."""
-    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
-    from contextvars import copy_context
-    from uuid import uuid4
-
-    sc = spark.sparkContext
-    tag = f"overlapped-{uuid4().hex}"
-
-    def tagged(fn):
-        sc.addJobTag(tag)
-        try:
-            return fn()
-        finally:
-            sc.removeJobTag(tag)
-
-    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-        futures = [pool.submit(copy_context().run, tagged, fn)
-                   for fn in fns]
-        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
-        failed = [f for f in futures if f in done and f.exception()]
-        if failed and pending:
-            sc.cancelJobsWithTag(tag)
-    # leaving the block joined the siblings; a cancelled job ends at once
-    errors = [f.exception() for f in failed] + [
-        e for f in futures if f in pending and (e := f.exception())
-        and tag not in str(e)]
-    if len(errors) > 1:
-        raise ExceptionGroup("overlapped driver jobs failed", errors)
-    if errors:
-        raise errors[0]
-    return [f.result() for f in futures]
-
-
 @register("neardup_minhash_eval", f"""
     -- exact-vs-LSH recall/precision on the deterministic 40% slice: both
     -- pipelines reproduced in SQL (md5 hash scheme), so the report row is
@@ -4216,7 +4174,7 @@ def neardup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             hash_scheme="md5", postings=sh)
             .select("doc_a", "doc_b"))
 
-    exact, approx = _overlapped(spark, _exact, _approx)
+    exact, approx = overlapped(spark, _exact, _approx)
     tp = approx.join(exact, ["doc_a", "doc_b"], "left_semi") \
         .agg(F.count(F.lit(1)).alias("_c"))
     n_e = exact.agg(F.count(F.lit(1)).alias("_e"))

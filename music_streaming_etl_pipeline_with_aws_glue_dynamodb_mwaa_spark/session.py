@@ -83,7 +83,8 @@ def conf_override(spark, conf: dict):
     Session conf is shared by every thread of the session, so two
     threads overriding the same key at once would restore each other's
     values. No code in this package changes conf from more than one
-    thread: the driver threads of ``_overlapped`` only run actions."""
+    thread: the driver threads of ``materialize.overlapped`` only run
+    actions."""
     prev = {k: spark.conf.get(k) for k in conf}
     for k, v in conf.items():
         spark.conf.set(k, str(v))

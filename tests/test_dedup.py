@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.materialize import overlapped
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators import dedup
 
 from .conftest import SF_SMOKE
@@ -252,9 +253,6 @@ def test_minhash_eval_report(spark):
 def test_overlapped_raises_first_failure_without_waiting(spark):
     """A failure on one driver thread surfaces at once: the sibling's
     long Spark job (15 s per task) is cancelled, not waited for."""
-    from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.queries_extensions import (
-        _overlapped,
-    )
 
     def slow():
         return spark.range(0, 60, numPartitions=2).selectExpr(
@@ -266,14 +264,11 @@ def test_overlapped_raises_first_failure_without_waiting(spark):
 
     t0 = time.perf_counter()
     with pytest.raises(ValueError, match="injected"):
-        _overlapped(spark, slow, boom)
+        overlapped(spark, slow, boom)
     assert time.perf_counter() - t0 < 10
 
 
 def test_overlapped_reports_every_failure(spark):
-    from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.queries_extensions import (
-        _overlapped,
-    )
 
     def a():
         raise ValueError("a")
@@ -282,7 +277,7 @@ def test_overlapped_reports_every_failure(spark):
         raise KeyError("b")
 
     with pytest.raises(ExceptionGroup) as info:
-        _overlapped(spark, a, b)
+        overlapped(spark, a, b)
     assert sorted(type(e).__name__ for e in info.value.exceptions) == [
         "KeyError", "ValueError"]
 
@@ -360,20 +355,25 @@ def test_postings_take_the_columnar_form_only_inside_a_scope(spark, monkeypatch)
 
 
 def test_curation_pipeline_releases_postings_cache(spark, monkeypatch):
-    """A scope around a curation build and its action leaves the session
-    as it found it: no persistent RDD and no cached postings relation
-    outlive the scope, and the returned frame is fully consumable inside
-    it."""
+    """A scope around a curation build and its action leaves nothing of
+    its own behind: no persistent RDD created after entry outlives the
+    scope, no cached postings relation stays registered, and the returned
+    frame is fully consumable inside it. RDD ids only grow, so the RDDs
+    created after entry are those above an id taken at entry; earlier
+    tests' checkpoints, which the ContextCleaner may free at any time,
+    all sit below it."""
     from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark import materialize
     import music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators.dedup as d
     from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.operators import corpus
     spark.catalog.clearCache()
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    sc = spark.sparkContext
+    watermark = sc.emptyRDD().id()
     docs = _docs(spark)
     # force the columnar postings form
     monkeypatch.setattr(d, "_POSTINGS_PERSIST_MIN_BYTES", 0)
     with materialize.scope():
         out = corpus.curation_pipeline(docs)
         assert out.count() > 0
-    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before
+    left = {i: r.rdd() for i, r in sc._jsc.getPersistentRDDs().items() if i > watermark}
+    assert not left, {i: (r.getCreationSite(), r.toDebugString()) for i, r in left.items()}
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

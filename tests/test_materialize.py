@@ -5,11 +5,11 @@ import sys
 from concurrent.futures import ThreadPoolExecutor
 from contextvars import copy_context
 from pathlib import Path
+from uuid import uuid4
 
 import pytest
 
 from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark import materialize as mat
-from music_streaming_etl_pipeline_with_aws_glue_dynamodb_mwaa_spark.queries_extensions import _overlapped
 
 
 def _state(spark):
@@ -116,12 +116,32 @@ def test_overlapped_threads_register_in_the_callers_scope(spark):
     spark.catalog.clearCache()
     entry = _state(spark)
     with mat.scope():
-        a, b = _overlapped(
+        a, b = mat.overlapped(
             spark,
             lambda: mat.materialize(_frame(spark, 7)),
             lambda: mat.materialize(_frame(spark, 11), columnar=True))
         assert {id(f) for f, _ in mat._SCOPE.get()} == {id(a), id(b)}
     assert _state(spark) == entry
+
+
+def test_overlapped_jobs_land_in_the_callers_job_group(spark):
+    """The threads start from the caller's local properties: every job
+    they run is in the caller's job group, as when run in sequence."""
+    sc = spark.sparkContext
+    fns = (lambda: spark.range(100).count(),
+           lambda: spark.range(50).selectExpr("id % 7 AS k").distinct().collect())
+    jobs = {}
+    for label, run in (("sequential", lambda: [fn() for fn in fns]),
+                       ("overlapped", lambda: mat.overlapped(spark, *fns))):
+        group = f"{label}-{uuid4().hex}"
+        sc.setJobGroup(group, label)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[label] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["overlapped"] == jobs["sequential"] > 0, jobs
 
 
 def test_scope_keeps_every_registration_from_many_threads(spark):

@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import time
 from collections import Counter
 from contextlib import contextmanager
 from uuid import uuid4
@@ -481,17 +482,57 @@ def test_steady_state_file_job_budget(spark, lake, monkeypatch):
     """Jobs per stage of a steady-state file (the second: both dimension
     snapshots reused, no bad row), one job group per stage. Validate runs
     at most 2 jobs: the validated write also counts both sides, through an
-    Observation. The KV load runs 1, the driver's collect of the stored
-    outputs, and no Python task."""
+    Observation. The transform runs at most 9, as when its two chains ran
+    in sequence: running them on driver threads adds no job. The KV load
+    runs 1, the driver's collect of the stored outputs, and no Python
+    task. The first file
+    validates all three tables, on concurrent threads, in 5 jobs: a
+    validated write per table and the quarantine writes of streams and
+    users."""
     sc = spark.sparkContext
     calls = _stage_job_groups(monkeypatch, sc)
     assert Pipeline(spark, PipelineConfig(base_dir=str(lake))).run_all() == [
         "streams1.csv", "streams2.csv"]
     assert [s for s, _ in calls] == ["validate_batch", "transform", "load_kv"] * 2
+    first = {s: list(sc.statusTracker().getJobIdsForGroup(g)) for s, g in calls[:3]}
+    assert len(first["validate_batch"]) == 5, first
     jobs = {s: list(sc.statusTracker().getJobIdsForGroup(g)) for s, g in calls[3:]}
     assert 1 <= len(jobs["validate_batch"]) <= 2, jobs
+    assert len(jobs["transform"]) <= 9, jobs
     assert len(jobs["load_kv"]) == 1, jobs
     assert _python_jobs(spark, jobs["load_kv"]) == []
+
+
+def test_failed_table_chain_fails_the_first_file(spark, lake, monkeypatch):
+    """The first file validates its three tables on concurrent driver
+    threads. When the users chain raises while the others run, run_once
+    raises that error itself (the siblings' cancelled jobs add nothing),
+    and nothing after validation runs: no KV item, no processed output,
+    and the file is not marked processed."""
+    class Injected(Exception):
+        pass
+
+    sc = spark.sparkContext
+    validate_frame = Pipeline._validate_frame
+
+    def failing(self, name, raw, *, mode):
+        if name != "users":
+            return validate_frame(self, name, raw, mode=mode)
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getActiveJobsIds() and time.monotonic() < deadline:
+            time.sleep(0.01)   # raise while a sibling's job runs
+        raise Injected("users chain")
+
+    monkeypatch.setattr(Pipeline, "_validate_frame", failing)
+    pipe = Pipeline(spark, PipelineConfig(base_dir=str(lake)))
+    with pytest.raises(Injected) as info:
+        pipe.run_once()
+    assert info.type is Injected
+    assert [pipe.store.count(t) for t in (KPI_TABLE, TOP_SONGS_TABLE,
+                                          TOP_GENRES_TABLE)] == [0, 0, 0]
+    assert not (lake / "processed").exists()
+    statuses = {e["filename"]: e["status"] for e in pipe.ledger.entries()}
+    assert statuses.get("streams1.csv") != "processed"
 
 
 def test_python_job_check_sees_a_task_side_write(spark):
