@@ -6,8 +6,9 @@ engine owns its session config instead: AQE for runtime re-planning and skew
 handling, UTC session timezone (so results compare bit-for-bit against the
 DuckDB oracle), dynamic partition overwrite (so a late file for one
 ``listen_date`` rewrites one partition, not the whole output dir — fixing the
-whole-dir overwrite at ``REF/glue_jobs/transform.py:53-55``), and Arrow for
-any pandas-UDF boundary.
+whole-dir overwrite at ``REF/glue_jobs/transform.py:53-55``), Arrow for
+any pandas-UDF boundary, and a fixed 2 MB Tungsten page (so small sort and
+aggregate tasks running at once do not each hold a 32 MB one).
 """
 
 from __future__ import annotations
@@ -61,6 +62,12 @@ def get_spark(app_name: str = "music-streaming-engine", *, cpus: int | None = No
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
+        # Tungsten's default page is heap / cores / 16 rounded up to a power
+        # of two (32 MB at 2 GB and 4 cores), which every sort and hash
+        # aggregate task allocates however few rows it holds, so the heap
+        # grows when several such tasks run at once. 2 MB pages still let
+        # one task address 16 GB (8192 pages).
+        .config("spark.buffer.pageSize", "2m")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
     )
     # TIMESTAMP(NANOS) parquet columns fail to read (PARQUET_TYPE_ILLEGAL)

@@ -21,6 +21,13 @@ def test_driver_memory_fits_the_host(monkeypatch):
     assert session.default_driver_memory() == "3g"
 
 
+def test_tungsten_pages_are_2mb(spark):
+    """Sort and aggregate tasks allocate 2 MB pages, not the heap-derived
+    default (32 MB at a 2 GB heap and 4 cores)."""
+    mm = spark.sparkContext._jsc.sc().env().memoryManager()
+    assert mm.pageSizeBytes() == 2 * 1024 * 1024
+
+
 def test_conf_override_restores_after_body_and_exception(spark):
     """conf_override sets the key for the body only: the previous value
     is back after a normal exit and after the body raised."""
